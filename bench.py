@@ -15,6 +15,7 @@ quadratic by construction; they run in the sf0.01 correctness gate).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import sys
 import time
@@ -24,6 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from curw_mike_data_handler_spark import catalog, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_log = logging.getLogger(__name__)
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -466,7 +469,7 @@ def _warm_python_datasource_workers(spark) -> None:
     except Exception:
         # warmup must never break the bench — a failure here only
         # means the first python-DS query pays its own spawn costs
-        pass
+        _log.warning("python data source warm-up failed", exc_info=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

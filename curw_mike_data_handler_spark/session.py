@@ -6,6 +6,29 @@ join handling), explicit shuffle partitioning, Arrow for any pandas
 interchange, UTC session timezone (the reference does +05:30 offset
 arithmetic by hand — we keep instants in UTC and apply the offset as a
 display concern; see functions/timegrid.py).
+
+JIT profile: the driver JVM runs C1 only
+(``-XX:TieredStopAtLevel=1``).  The production path is cron: every
+job is a fresh process whose JVM lives 10-30 s, and more than half of
+a cold job's CPU went to JIT compilation, C1 first and then C2 again
+on the same Catalyst, Janino and Spark runtime code.  C2 only pays
+that back in a JVM that lives far longer.  Measured on 4 cores with
+``prodbench/run.py`` (cold, untraced, interleaved with C2 runs; median
+and range of CPU seconds): a production hour fell from 97.7 s (90-102)
+to 49.9 s (47-55), a catalog pass from 54.1 s (52-55) to 24.9 s
+(23-27), set-up (JVM launch, imports) from about 15 s to 8-9.5 s, with
+no cold wall lost.  The cost is steady-state speed in a long-lived
+session: warm ``cron_inputs`` ticks went from 11.8-12.3 s to
+15.7-16.5 s of wall (median) at equal CPU, and the test suite on 4 cores from
+1187-1211 s to 1675-1840 s.  Results are unchanged (Java 17 floating point is
+strict at every JIT tier).
+
+The option is driver-only: executors on a real cluster keep C2.  A
+long-lived caller (a bench double pass, an interactive session) gets
+C2 back by passing its own ``spark.driver.extraJavaOptions`` through
+``extra_conf``, which replaces this one; ``bench.py`` does so.  Like
+every JVM option it applies only when ``get_spark`` launches the JVM,
+not to a JVM already running in the process.
 """
 
 from __future__ import annotations
@@ -51,6 +74,9 @@ _BASE_CONF = {
     # Spark 4 ANSI mode breaks the reference's permissive casts
     # (strings→double with junk rows); the engine validates explicitly.
     "spark.sql.ansi.enabled": "false",
+    # C1 only: a cron job's JVM dies long before C2's recompilation of
+    # Catalyst/Janino/Spark code pays back (see the module docstring)
+    "spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=1",
 }
 
 

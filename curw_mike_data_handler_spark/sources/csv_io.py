@@ -10,6 +10,12 @@ Scale note: the single-file step is inherently last-stage and small
 (hundreds of rows — it feeds an external single-node model); everything
 upstream stays fully distributed.  For large extracts use the normal
 partitioned writer instead.
+
+Publish is atomic: the part file is staged in a hidden directory
+inside the destination directory, so the final step is a
+same-filesystem ``os.replace``.  A crash or cron kill never leaves a
+truncated file at ``path`` for the jobs' skip-if-exists gate to
+mistake for a finished one.
 """
 
 from __future__ import annotations
@@ -37,7 +43,9 @@ def write_single_csv(
     out = df.select(
         F.date_format(time_col, time_format).alias(time_col), *cols
     ).orderBy(time_col)
-    tmp = tempfile.mkdtemp(prefix="csv_sink_")
+    out_dir = os.path.dirname(path) or "."
+    os.makedirs(out_dir, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=".csv_sink_", dir=out_dir)
     try:
         (
             out.coalesce(1)
@@ -47,8 +55,7 @@ def write_single_csv(
             .csv(tmp)
         )
         part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        shutil.move(part, path)
+        os.replace(part, path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return path

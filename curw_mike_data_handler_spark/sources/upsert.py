@@ -63,12 +63,9 @@ class ParquetMergeTable:
         current = self.read()
         survivors = current.join(updates.select(self.key_cols), self.key_cols, "left_anti")
         merged = survivors.unionByName(updates.select(current.columns))
-        tmp = self.path + "__tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.schema(self.schema).parquet(tmp)
-        final.write.mode("overwrite").parquet(self.path + "__next")
+        # one write: the plan reads ``path``, never ``__next``
+        merged.write.mode("overwrite").parquet(self.path + "__next")
         _swap_dir(self.path + "__next", self.path)
-        _rm_dir(tmp)
 
 
 def _swap_dir(src: str, dst: str) -> None:
@@ -77,12 +74,6 @@ def _swap_dir(src: str, dst: str) -> None:
     if os.path.exists(dst):
         shutil.rmtree(dst)
     os.rename(src, dst)
-
-
-def _rm_dir(path: str) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
 
 
 def latest_fgt_view(data: DataFrame, key: str = "tms_id", fgt_col: str = "fgt") -> DataFrame:

@@ -89,6 +89,50 @@ def test_discharge_job_main(spark, series_parquet, tmp_path):
     assert open(out).read() == open(golden).read()
 
 
+class _Killed(BaseException):
+    """A cron kill: not an ``Exception``, so no handler swallows it."""
+
+
+def test_interrupted_publish_leaves_no_partial_file(spark, series_parquet, tmp_path, monkeypatch):
+    """A job killed while publishing its MIKE input leaves nothing at
+    the output path, which the skip-if-exists gate would take for a
+    finished file, and no staging debris; the next tick writes the
+    same bytes as an uninterrupted run."""
+    from curw_mike_data_handler_spark.jobs.discharge import main
+    from curw_mike_data_handler_spark.plans.discharge import (
+        prepare_discharge_input,
+        write_discharge_input,
+    )
+
+    out_dir = tmp_path / "out"
+    out = str(out_dir / "mike_dis.txt")
+    argv = ["--series", series_parquet, "--output", out, "-s", START, "-e", END]
+    real_replace, staged = os.replace, []
+
+    def killed(src, dst):
+        if dst != out:
+            return real_replace(src, dst)
+        staged.append(src)
+        raise _Killed
+
+    monkeypatch.setattr(os, "replace", killed)
+    with pytest.raises(_Killed):
+        main(argv)
+    monkeypatch.undo()
+    # staged beside the output, so publishing is a same-filesystem rename
+    assert [os.path.dirname(os.path.dirname(p)) for p in staged] == [str(out_dir)]
+    assert os.listdir(out_dir) == []
+
+    assert main(argv) == 0
+    golden = str(tmp_path / "golden.csv")
+    write_discharge_input(
+        prepare_discharge_input(spark, spark.read.parquet(series_parquet), START, END),
+        golden,
+    )
+    assert open(out, "rb").read() == open(golden, "rb").read()
+    assert os.listdir(out_dir) == ["mike_dis.txt"]
+
+
 def test_rainfall_job_main(spark, tmp_path):
     from curw_mike_data_handler_spark.jobs.rainfall import main
     from curw_mike_data_handler_spark.plans.rainfall import (
