@@ -10854,26 +10854,28 @@ def mike_source_roundtrip(spark, sf_dir):
     """End-to-end contract test of the MIKE file surface INSIDE the
     correctness gate: pivot the event stream into the reference's
     wide result-matrix layout (S7 exact-layout sink,
-    csv_io.write_single_csv), then read it back through the
-    ``mike_results`` Spark 4 Python Data Source
-    (sources/mike_datasource.py — (file × station-chunk) partitions,
-    Arrow-batch output) and aggregate the melted long form.  The
-    oracle recomputes the same rollup straight from the parquet
-    events, so a format drift on EITHER side of the round trip
+    csv_io.write_single_csv), then read it back through the extract
+    job's own reader (csv_io.read_wide_matrix +
+    plans.extract.melt_result_matrix) and aggregate the melted long
+    form.  The oracle recomputes the same rollup straight from the
+    parquet events, so a format drift on EITHER side of the round trip
     (header layout, time format, zero-fill, float parsing) breaks
     the hash.  Matrix cells are integer cents, so the CSV carries
-    exact values (no FP formatting ambiguity).
+    exact values (no FP formatting ambiguity), and the melt's 3-dp
+    round leaves them unchanged.
 
     Scale shape: the wide file is the inherently single-file,
     hundreds-of-rows model-exchange contract (see csv_io docstring) —
-    everything before the sink and after the source is distributed;
-    the read side fans out by station chunk."""
+    everything before the sink and after the read is distributed."""
     import hashlib
     import os
     import tempfile
 
-    from curw_mike_data_handler_spark.sources import mike_datasource
-    from curw_mike_data_handler_spark.sources.csv_io import write_single_csv
+    from curw_mike_data_handler_spark.plans.extract import melt_result_matrix
+    from curw_mike_data_handler_spark.sources.csv_io import (
+        read_wide_matrix,
+        write_single_csv,
+    )
 
     types = ["click", "error", "purchase", "signup", "view"]
     ev = _t(spark, sf_dir, "events")
@@ -10886,16 +10888,12 @@ def mike_source_roundtrip(spark, sf_dir):
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     out_dir = os.path.join(tempfile.gettempdir(), f"mike_roundtrip_{key}")
     os.makedirs(out_dir, exist_ok=True)
-    write_single_csv(
+    path = write_single_csv(
         wide, os.path.join(out_dir, "resmike11_WL.csv"), time_col="t",
         columns=types,
     )
-    mike_datasource.register(spark)
-    long = (
-        spark.read.format("mike_results")
-        .option("path", out_dir)
-        .option("time_col", "t")
-        .load()
+    long = melt_result_matrix(
+        read_wide_matrix(spark, path, time_col="t"), time_col="t"
     )
     return long.groupBy("station").agg(
         F.count("*").cast("long").alias("n_obs"),

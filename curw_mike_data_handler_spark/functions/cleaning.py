@@ -28,22 +28,6 @@ def sentinel_to_null(col: Column | str, sentinel: float = -99999.0) -> Column:
     return F.when(c == F.lit(sentinel), F.lit(None).cast("double")).otherwise(c)
 
 
-def clean_wide(df: DataFrame, value_cols: Sequence[str], *, negatives: bool = True,
-               sentinel: float | None = None) -> DataFrame:
-    exprs = []
-    for c in df.columns:
-        if c in value_cols:
-            col = F.col(c)
-            if sentinel is not None:
-                col = sentinel_to_null(col, sentinel)
-            if negatives:
-                col = negatives_to_null(col)
-            exprs.append(col.alias(c))
-        else:
-            exprs.append(F.col(c))
-    return df.select(*exprs)
-
-
 def row_mean_impute_wide(df: DataFrame, value_cols: Sequence[str]) -> DataFrame:
     """NULL → mean across the row's other stations, computed on the
     PRE-fill NULL pattern (replace_nan_with_row_average,
@@ -75,13 +59,6 @@ def row_mean_impute_long(
     return df.withColumn(
         value_col, F.coalesce(F.col(value_col), F.avg(value_col).over(w))
     )
-
-
-def ordered_fill(col: str, *fallbacks: Column | str) -> Column:
-    """Ordered imputation chain (all_raw:278-286 fillna cascade) as a
-    single coalesce."""
-    cols = [F.col(col)] + [F.col(c) if isinstance(c, str) else c for c in fallbacks]
-    return F.coalesce(*cols)
 
 
 def last_row_patch_wide(

@@ -40,14 +40,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """BPE-flavored proxy: count word pieces + standalone
-    punctuation/digit runs (regex split on boundaries)."""
-    c = F.col(text) if isinstance(text, str) else text
-    pieces = F.split(F.trim(c), r"(\s+|(?=[^\w\s])|(?<=[^\w\s]))")
-    return F.size(F.filter(pieces, lambda x: F.length(x) > 0))
-
-
 def punct_ratio(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     n = F.length(c)

@@ -17,8 +17,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DATE_TIME_FORMAT = "%Y-%m-%d %H:%M:%S"  # rf_linux:14
-# The reference does UTC+05:30 by hand (wl_x:44-51, rf_linux:265).
-SL_OFFSET = "INTERVAL 5 HOURS 30 MINUTES"
 
 
 def check_time_format(
@@ -74,13 +72,3 @@ def bucket_end_right_closed(ts: Column | str, step_minutes: int) -> Column:
     us = F.unix_micros(F.col(ts) if isinstance(ts, str) else ts)
     bucket_s = (-F.floor((-us) / F.lit(step_us))) * (step_us // 1_000_000)
     return F.timestamp_seconds(bucket_s)
-
-
-def to_sl_time(ts: Column) -> Column:
-    """UTC instant → Sri Lanka wall-clock (the +05:30 offset arithmetic
-    of wl_x:48-50 as a column expression)."""
-    return ts + F.expr(SL_OFFSET)
-
-
-def from_sl_time(ts: Column) -> Column:
-    return ts - F.expr(SL_OFFSET)

@@ -2130,15 +2130,6 @@ def decode_media(media: DataFrame) -> DataFrame:
     return media.mapInPandas(_decode, schema=MEDIA_META_SCHEMA)
 
 
-def frame_sample_stub(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling STUB: emits the (media_id, frame_no) plan a
-    real decoder would fill; payload decode is NotImplemented."""
-    return media.select(
-        "media_id",
-        F.explode(F.sequence(F.lit(0), F.lit(every_n - 1))).alias("frame_no"),
-    )
-
-
 # -- video: real AVI container header, frame decode stubbed ----------
 
 def _make_mjpeg_frame(width: int, height: int, fno: int) -> bytes:

@@ -2,9 +2,8 @@
 
 Like tide but: negatives (not −99999) are invalid, the last-row patch
 also fires on negatives, and the reference's final ``dropna()`` is a
-silent no-op (result not assigned — dis:108).  We document the quirk
-and implement the INTENDED drop behind a flag defaulting to the actual
-(no-op) behavior for parity.
+silent no-op (result not assigned — dis:108), so NULLs are kept for
+parity.
 """
 
 from __future__ import annotations
@@ -26,14 +25,11 @@ def prepare_discharge_input(
     end: str,
     *,
     step_minutes: int = 15,
-    drop_nulls: bool = False,
 ) -> DataFrame:
     spine = time_spine(spark, start, end, step_minutes)
     aligned = spine.join(series.select("time", "value"), "time", "left")  # dis:100
     cleaned = aligned.withColumn("value", negatives_to_null("value"))  # dis:82-85
     patched = last_row_patch_wide(cleaned, "time", ["value"], also_negative=True)  # dis:105-106
-    if drop_nulls:  # reference dis:108 is a no-op; parity default False
-        patched = patched.na.drop(subset=["value"])
     return patched.orderBy("time")
 
 

@@ -4,8 +4,7 @@ Tuned for correctness tests on ``local[N]`` but configured the way a
 1000-executor cluster job would be: AQE on (runtime coalescing + skew
 join handling), explicit shuffle partitioning, Arrow for any pandas
 interchange, UTC session timezone (the reference does +05:30 offset
-arithmetic by hand — we keep instants in UTC and apply the offset as a
-display concern; see functions/timegrid.py).
+arithmetic by hand — we keep instants in UTC).
 
 JIT profile: the driver JVM runs C1 only
 (``-XX:TieredStopAtLevel=1``).  The production path is cron: every
@@ -36,8 +35,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # These are per-session defaults, not hard requirements; callers can
 # override any of them via ``extra_conf``.
@@ -88,16 +85,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``shuffle_partitions`` defaults to the local core count — on a real
-    cluster pass ~2-3x total executor cores, or rely on AQE coalescing
-    from a higher initial value.
+    The local core count is ``SPARK_GRAFT_CPUS`` if set, else the CPUs
+    this process may run on.  It sizes the default ``local[N]`` master
+    and ``shuffle_partitions`` — on a real cluster pass ~2-3x total
+    executor cores, or rely on AQE coalescing from a higher initial
+    value.
     """
-    master = master or os.environ.get("SPARK_MASTER", f"local[{DEFAULT_CPUS}]")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_BASE_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(
-        shuffle_partitions or int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
-    )
+    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -19,8 +19,7 @@ Spark-first design notes:
   of all commits ≤ N consumed".  The manifests are immutable and
   retained, so a replayed ``(start, end]`` range re-derives exactly
   the same rows — determinism comes from the table format, not from
-  a recorded batch list (contrast ``mike_datasource``, whose
-  directory listing needed pinning).  Retention expiring a
+  a recorded batch list.  Retention expiring a
   still-unconsumed version fails the plan loudly (the standing
   retention contract), never silently shrinks a batch.
 * **Partitions mirror the feed's cost shape.**  Each commit plans

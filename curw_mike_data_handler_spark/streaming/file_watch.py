@@ -85,21 +85,3 @@ def jdbc_merge_sink(
             )
 
     return batch_fn
-
-
-def batch_modified_after(
-    spark: SparkSession,
-    input_dir: str,
-    schema: StructType,
-    modified_after: str,
-    *,
-    header: bool = True,
-) -> DataFrame:
-    """Batch alternative mirroring the reference's mtime predicate
-    directly (`modifiedAfter` file-source option)."""
-    return (
-        spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("modifiedAfter", modified_after)
-        .csv(input_dir)
-    )

@@ -3,28 +3,12 @@
 1. DBSCAN subcell contraction must use floor-semantics bucketing — the
    trunc-toward-zero bucket straddling 0 is ~eps*sqrt(2) wide and
    merged clusters separated by more than eps.
-2. _StationPruner.push must INTERSECT keep-sets across conjunctive
-   filters on the same column, not overwrite.
-3. MikeResultsStreamReader offsets are file-NAME based: a replayed
-   (start, end] range selects the same names even after deletions or
-   later-arriving files outside the range.
-4. token_bucket_throttle's output schema follows key_col.
+2. token_bucket_throttle's output schema follows key_col.
 """
 
 from __future__ import annotations
 
-import csv
-
 from pyspark.sql import functions as F
-
-from curw_mike_data_handler_spark.sources.mike_datasource import (
-    EqualTo,
-    In,
-    MikeResultsStreamReader,
-    _StationPruner,
-)
-
-STATIONS = ["hanwella", "glencourse"]
 
 
 # ------------------------------------------------------ DBSCAN floor
@@ -71,113 +55,6 @@ def test_dbscan_negative_coords_match_bruteforce_mixed(spark):
     assert got == _dbscan_bruteforce(pts, eps=6, min_pts=4)
 
 
-# --------------------------------------------- pruner conjunction
-
-
-def test_pruner_intersects_conjunctive_filters():
-    p = _StationPruner()
-    rest = p.push(
-        [
-            In(("station",), ("hanwella", "glencourse")),
-            EqualTo(("station",), "hanwella"),
-        ]
-    )
-    assert rest == []
-    assert p.station_keep == {"hanwella"}
-
-    p2 = _StationPruner()
-    p2.push([EqualTo(("src_file",), "a.csv"), In(("src_file",), ("a.csv", "b.csv"))])
-    assert p2.file_keep == {"a.csv"}
-
-    # disjoint conjunction → empty keep-set (no rows), not last-wins
-    p3 = _StationPruner()
-    p3.push([EqualTo(("station",), "x"), EqualTo(("station",), "y")])
-    assert p3.station_keep == set()
-
-
-# ------------------------------------------- name-based stream offsets
-
-
-def _write_wide(path, n_rows: int, t0: int = 0) -> None:
-    with open(path, "w", newline="") as fh:
-        w = csv.writer(fh)
-        w.writerow(["Time Stamp"] + STATIONS)
-        for i in range(n_rows):
-            w.writerow(
-                [f"2024-03-01 {(t0 + i) % 24:02d}:00:00"]
-                + [float(s + i) for s in range(len(STATIONS))]
-            )
-
-
-def test_stream_offsets_are_name_based_and_replay_stable(tmp_path):
-    d = tmp_path / "run"
-    d.mkdir()
-    for name in ("b.csv", "c.csv", "d.csv"):
-        _write_wide(str(d / name), 2)
-    r = MikeResultsStreamReader({"path": str(d), "pattern": "*.csv"})
-    assert r.initialOffset() == {"last": ""}
-    off1 = r.latestOffset()
-    # r7 widening (ADVICE r6 #2): the offset now also records the
-    # exact batch file list + the base it was computed against
-    assert off1 == {
-        "last": "d.csv", "batch": ["b.csv", "c.csv", "d.csv"], "base": "",
-    }
-
-    # LEGACY checkpoints (no batch field) still replay name-based
-    batch1 = {"last": ""}, {"last": "c.csv"}
-    files1 = {p.file.split("/")[-1] for p in r.partitions(*batch1) if p.file}
-    assert files1 == {"b.csv", "c.csv"}
-
-    # a later-arriving file OUTSIDE the range and a deletion inside it
-    _write_wide(str(d / "e.csv"), 2)
-    (d / "b.csv").unlink()
-    files1_replay = {p.file.split("/")[-1] for p in r.partitions(*batch1) if p.file}
-    # e.csv (> c.csv) is NOT pulled into the replayed range, and the
-    # deletion does not shift c out of it (positional offsets did both)
-    assert files1_replay == {"c.csv"}
-
-    batch2 = {"last": "c.csv"}, r.latestOffset()
-    files2 = {p.file.split("/")[-1] for p in r.partitions(*batch2) if p.file}
-    assert files2 == {"d.csv", "e.csv"}
-
-
-def test_stream_replay_with_recorded_batch_is_straggler_proof(tmp_path):
-    """ADVICE r6 #2: with the batch list recorded in the offset, a
-    straggler whose name falls INSIDE an already-planned range is
-    ignored on checkpoint replay too (name-range re-listing would have
-    resurrected it), and a recorded file deleted before replay is data
-    loss that fails loudly instead of silently shrinking the batch."""
-    import pytest
-
-    d = tmp_path / "run"
-    d.mkdir()
-    for name in ("b.csv", "d.csv"):
-        _write_wide(str(d / name), 2)
-    r = MikeResultsStreamReader({"path": str(d), "pattern": "*.csv"})
-    off1 = r.latestOffset()
-    assert off1["batch"] == ["b.csv", "d.csv"]
-
-    # straggler lands inside the committed (-inf, d.csv] name range
-    _write_wide(str(d / "c.csv"), 2)
-    replay = {
-        p.file.split("/")[-1]
-        for p in r.partitions({"last": ""}, off1)
-        if p.file
-    }
-    assert replay == {"b.csv", "d.csv"}  # c.csv invisible on replay
-
-    # the straggler never reappears later either: the next offset's
-    # batch only covers names above the high water
-    _write_wide(str(d / "e.csv"), 2)
-    off2 = r.latestOffset()
-    assert off2 == {"last": "e.csv", "batch": ["e.csv"], "base": "d.csv"}
-
-    # recorded-but-vanished file → loud failure, not a shrunken batch
-    (d / "b.csv").unlink()
-    with pytest.raises(ValueError, match="data loss"):
-        r.partitions({"last": ""}, off1)
-
-
 # -------------------------------------------- token bucket key_col
 
 
@@ -200,52 +77,6 @@ def test_token_bucket_output_schema_follows_key_col(spark):
     rows = {r["device"]: r for r in out.collect()}
     assert rows["dev-a"].n_admitted == 1 and rows["dev-a"].n_throttled == 1
     assert rows["dev-b"].n_admitted == 1
-
-
-def test_batch_read_contradictory_station_filters_returns_zero_rows(spark, tmp_path):
-    """The intersect fix end-to-end: a self-contradictory conjunction
-    prunes to an EMPTY partition set and yields zero rows (last-wins
-    used to leak the other conjunct's rows)."""
-    from pyspark.sql import functions as F
-
-    from curw_mike_data_handler_spark.sources.mike_datasource import register
-
-    d = tmp_path / "run"
-    d.mkdir()
-    _write_wide(str(d / "r.csv"), 2)
-    register(spark)
-    df = (
-        spark.read.format("mike_results").option("path", str(d)).load()
-        .filter((F.col("station") == "hanwella") & (F.col("station") == "glencourse"))
-    )
-    assert df.count() == 0
-    # and the sane narrowing conjunction keeps exactly the intersection
-    df2 = (
-        spark.read.format("mike_results").option("path", str(d)).load()
-        .filter(
-            F.col("station").isin("hanwella", "glencourse")
-            & (F.col("station") == "hanwella")
-        )
-    )
-    assert {r.station for r in df2.collect()} == {"hanwella"}
-
-
-def test_stream_reader_rejects_positional_checkpoints_and_is_monotonic(tmp_path):
-    """Review findings r6: (a) a pre-name-based {"n": N} checkpoint
-    must fail loudly, not silently replay the directory; (b) a
-    transient empty listing must not regress the high-water name."""
-    import pytest
-
-    d = tmp_path / "run"
-    d.mkdir()
-    r = MikeResultsStreamReader({"path": str(d), "pattern": "*.csv"})
-    with pytest.raises(ValueError, match="positional offset"):
-        r.partitions({"n": 3}, {"last": "x"})
-    _write_wide(str(d / "b.csv"), 1)
-    assert r.latestOffset() == {"last": "b.csv", "batch": ["b.csv"], "base": ""}
-    (d / "b.csv").unlink()
-    # no regression; empty batch (nothing new), base = current water
-    assert r.latestOffset() == {"last": "b.csv", "batch": [], "base": "b.csv"}
 
 
 def test_jpeg_marker_walk_skips_fill_bytes():
@@ -281,92 +112,3 @@ def test_all_stations_raw_rejects_duplicate_display_names(tmp_path):
         w.writerow(["b" * 64, "101", "Colombo", "6.95", "79.85"])
     with pytest.raises(ValueError, match="duplicate station display names"):
         read_mike_stations(str(p))
-
-
-def test_stream_offset_file_list_is_capped(tmp_path):
-    """ADVICE r7: the first offset over a pre-populated directory (or
-    any huge catch-up batch) must not inline every basename into the
-    offset log — Structured Streaming persists each offset, so an
-    unbounded list grows the checkpoint without bound.  Above the cap
-    the offset falls back to the name-range form plus a count/signature
-    fingerprint, with a log warning EVERY time (not warnings.warn's
-    once-per-location default, ADVICE r8); the planned batch itself is
-    unchanged and a faithful replay raises no divergence warning."""
-    import logging
-
-    d = tmp_path / "run"
-    d.mkdir()
-    names = [f"r_{i:02d}.csv" for i in range(8)]
-    for name in names:
-        _write_wide(str(d / name), 1)
-    r = MikeResultsStreamReader({"path": str(d), "pattern": "*.csv"})
-    r.MAX_RECORDED_BATCH = 5
-    logger = logging.getLogger("curw_mike_data_handler_spark.sources.mike_datasource")
-    records = []
-    handler = logging.Handler()
-    handler.emit = records.append
-    logger.addHandler(handler)
-    try:
-        off = r.latestOffset()
-        off2_capped = r.latestOffset()  # no new files: no second batch
-        assert "batch" not in off                 # no inlined list
-        assert off["last"] == names[-1]
-        assert off["capped_n"] == 8 and len(off["capped_sig"]) == 16
-        assert off2_capped == {"last": names[-1], "batch": [], "base": names[-1]}
-        assert sum("offset-log cap" in rec.getMessage() for rec in records) == 1
-        records.clear()
-        files = {p.file.split("/")[-1] for p in r.partitions({"last": ""}, off)
-                 if p.file}
-        assert files == set(names)           # name range plans them all
-        assert not records                   # faithful replay: silent
-
-        # a straggler arriving AFTER planning (name <= high water) makes
-        # a replay diverge from the recorded batch — detected via the
-        # count/signature, loudly
-        _write_wide(str(d / "r_03b.csv"), 1)
-        r.partitions({"last": ""}, off)
-        assert any("replay divergence" in rec.getMessage() for rec in records)
-    finally:
-        logger.removeHandler(handler)
-
-    # under the cap the recorded-list contract is untouched (the
-    # straggler written above is a real file now, so it's in the list)
-    r2 = MikeResultsStreamReader({"path": str(d), "pattern": "*.csv"})
-    off2 = r2.latestOffset()
-    assert off2["batch"] == sorted(names + ["r_03b.csv"]) and off2["base"] == ""
-
-
-def test_capped_offset_divergence_check_skips_foreign_start(tmp_path):
-    """The capped fingerprint covers exactly (base, hi]; planning the
-    same end offset from a DIFFERENT start (restart resequencing)
-    re-lists a different range and must NOT false-alarm."""
-    import logging
-
-    d = tmp_path / "run"
-    d.mkdir()
-    names = [f"r_{i:02d}.csv" for i in range(8)]
-    for name in names:
-        _write_wide(str(d / name), 1)
-    r = MikeResultsStreamReader({"path": str(d), "pattern": "*.csv"})
-    r.MAX_RECORDED_BATCH = 5
-    off = r.latestOffset()
-    assert off["base"] == "" and off["capped_n"] == 8
-
-    logger = logging.getLogger(
-        "curw_mike_data_handler_spark.sources.mike_datasource"
-    )
-    records = []
-    handler = logging.Handler()
-    handler.emit = records.append
-    logger.addHandler(handler)
-    try:
-        # start != base: only (r_03.csv, hi] is planned — 4 files, not
-        # the recorded 8; the fingerprint doesn't cover this range
-        parts = r.partitions({"last": "r_03.csv"}, off)
-        planned = {p.file.split("/")[-1] for p in parts if p.file}
-        assert planned == set(names[4:])
-        assert not any(
-            "replay divergence" in rec.getMessage() for rec in records
-        ), [rec.getMessage() for rec in records]
-    finally:
-        logger.removeHandler(handler)
