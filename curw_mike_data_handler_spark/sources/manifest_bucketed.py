@@ -40,7 +40,9 @@ Round-10 extensions on the same three primitives:
   fields; new fields materialize lazily via coalesce repair until a
   compaction rewrites every file;
 * **concurrent writers** — link-CAS claim files serialize one writer per
-  generation with dead-owner takeover and retry-on-contention;
+  generation with dead-owner takeover; every retrying writer (and the
+  transaction catalog's swap) commits through ONE claim-and-retry
+  routine, ``_claim_next``;
 * **streaming ingestion** — ``foreach_batch_append`` lands micro-
   batches exactly-once (epoch batch_ids, manifest-chain dedupe).
 
@@ -136,8 +138,10 @@ def read_manifest(root: str, table: str, version: int | None = None) -> dict:
 
 class ConcurrentWriteError(RuntimeError):
     """Another live writer holds the claim for the generation this
-    writer wanted to publish.  Callers retry on top of the competitor's
-    snapshot once it lands (append_manifest_table does so itself)."""
+    writer wanted to publish.  Every retrying writer already retries
+    on top of the competitor's snapshot once it lands (_claim_next) and
+    raises this only after _MAX_RETRIES; the single-shot claims
+    (create_manifest_table, evolve_shred) raise it at once."""
 
 
 def _claim_path(root: str, table: str, version: int) -> str:
@@ -323,8 +327,9 @@ def _claim_wait(
     old 20 × 0.5 s budget, and the loser would raise
     ConcurrentWriteError even though no one crashed).  The wait for
     retry ``attempt`` is exponential (base · 2^attempt, capped at 30 s
-    per attempt — ~8 min total at the default 20 retries instead of
-    10 s), polled at 50 ms, and returns EARLY the moment any of:
+    per attempt — ~8 min total at _MAX_RETRIES = 20 retries from
+    _RETRY_WAIT_S = 0.5 s, instead of 10 s), polled at 50 ms, and
+    returns EARLY the moment any of:
 
     * the claim vanishes (the competitor released — published or
       failed),
@@ -449,6 +454,73 @@ def _complete_lagging_txn_publish(root: str, table: str, v: int) -> bool:
         _swap_latest(root, table, v)
         return True
     return False
+
+
+# every retrying writer's budget behind a live competitor: with
+# _claim_wait's progress-aware exponential wait, ~8 min in total
+_MAX_RETRIES = 20
+_RETRY_WAIT_S = 0.5
+
+
+def _claim_next(root: str, name: str, *, batch_id: str | None = None):
+    """The one optimistic claim-and-retry loop every retrying writer
+    commits through.  ``name`` is a table, or ``_TXN`` for the
+    transaction catalog (its LATEST and ``manifests/claim-N`` sit at
+    the same relative paths).  Each attempt:
+
+    1. reads the head (manifest, or txn catalog) and, given a
+       ``batch_id`` that already landed, returns ``(None, landed)`` —
+       the exactly-once replay no-op, no claim taken;
+    2. claims head+1 (link-CAS; a dead owner's claim is taken over in
+       _acquire_claim).  Behind a LIVE owner it waits on the owner's
+       progress (_claim_wait) and retries on top of its publish — both
+       writes land, serialized, never lost;
+    3. under the claim, re-checks that the head is still LATEST (the
+       competitor may have published between our read and our claim)
+       and rolls a committed transaction's lost LATEST swap forward
+       (_complete_lagging_txn_publish); either failure releases the
+       claim and retries on the new head.
+
+    Returns ``(head, None)`` with the claim on ``head["version"] + 1``
+    HELD — the caller runs its one-shot body under ``try/finally:
+    _release_claim``.  Raises ConcurrentWriteError after
+    _MAX_RETRIES + 1 lost attempts."""
+    txn = name == _TXN
+    for attempt in range(_MAX_RETRIES + 1):
+        head = read_txn_catalog(root) if txn else read_manifest(root, name)
+        if batch_id is not None:
+            landed = (_txn_batch_published(root, batch_id) if txn
+                      else _batch_id_published(root, name, batch_id))
+            if landed is not None:
+                # the version the batch LANDED at, not the current head:
+                # a pinning caller (commit_multi_table) must not adopt
+                # versions carrying other writers' later, possibly
+                # half-transactional data
+                return None, landed
+        v = head["version"] + 1
+        try:
+            _acquire_claim(root, name, v)
+        except ConcurrentWriteError:
+            if attempt == _MAX_RETRIES:
+                raise
+            _claim_wait(root, name, v, attempt, _RETRY_WAIT_S)
+            continue
+        held = False
+        try:
+            now = (read_txn_catalog(root)["version"] if txn
+                   else current_version(root, name))
+            held = now == head["version"] and (
+                txn or not _complete_lagging_txn_publish(root, name, v)
+            )
+        finally:
+            if not held:
+                _release_claim(root, name, v)
+        if held:
+            return head, None
+    raise ConcurrentWriteError(
+        f"{name}: lost the publish race {_MAX_RETRIES + 1} times "
+        f"(competing writer holding the claim throughout?)"
+    )
 
 
 def _data_files(gen_dir: str) -> list[str]:
@@ -847,22 +919,12 @@ def read_manifest_table_shred_pruned(
         raise ValueError(
             f"prune_field {prune_field!r} is not a shredded field of {table}"
         )
-    spec = {k: m[k] for k in
-            ("bucket_cols", "num_buckets", "sort_cols", "schema_ddl")}
-    schema = spark.table(
-        _register(spark, root, table, m["version"], spec, m["generation"])
-    ).schema
-    gen_dir = os.path.join(_table_dir(root, table), m["generation"])
     kept = shred_pruned_files(m, prune_field, lower=lower, upper=upper)
-    files = [os.path.join(gen_dir, f) for f in kept]
     base = [base_cols] if isinstance(base_cols, str) else list(base_cols or [])
-    cov = covered_fields(m, kept)
-    if not files:
-        empty = spark.createDataFrame([], schema)
-        return _routed_projection(empty, m.get("shred"), fields, base,
-                                  covered=cov)
-    raw = _dv_filter(spark, spark.read.schema(schema).parquet(*files), m)
-    return _routed_projection(raw, m.get("shred"), fields, base, covered=cov)
+    return _routed_projection(
+        _read_files(spark, root, table, m, kept), m.get("shred"), fields,
+        base, covered=covered_fields(m, kept),
+    )
 
 
 def drop_catalog_entries(spark: SparkSession, root: str, table: str) -> None:
@@ -1122,7 +1184,8 @@ def _write_generation(
         # existing table — a create-with-path here would run CTAS
         # and clobber the linked snapshot (observed, not
         # hypothetical: the appends silently became replacements)
-        _register(spark, root, table, version, spec)
+        _register(spark, root, table,
+                  dict(spec, version=version, generation=gen_rel))
         writer.mode("append").saveAsTable(name)
     files = _data_files(gen_dir)
     shred = spec.get("shred")
@@ -1174,33 +1237,65 @@ def _write_generation(
     }
 
 
-def _register(spark: SparkSession, root: str, table: str, version: int,
-              spec: dict, generation: str | None = None) -> str:
-    """Idempotently register generation ``version`` as an external
+def _register(spark: SparkSession, root: str, table: str, m: dict) -> str:
+    """Idempotently register snapshot ``m``'s generation as an external
     bucketed catalog table (readers on another SparkSession arrive
-    here; the writer's saveAsTable already registered its own).
-    ``generation`` names the data directory — a metadata-only
-    generation (evolve_shred) SHARES its parent's directory, so the
+    here; the writer's saveAsTable already registered its own).  The
+    data directory is ``m["generation"]`` — a metadata-only generation
+    (evolve_shred, delete_mor) SHARES its parent's directory, so the
     dir name cannot be derived from the version."""
-    name = _catalog_name(root, table, version)
+    name = _catalog_name(root, table, m["version"])
     if spark.catalog.tableExists(name):
         return name
-    gen_dir = os.path.join(
-        _table_dir(root, table), generation or f"gen-{version:05d}"
-    )
-    cols = ", ".join(f"`{c}`" for c in spec["bucket_cols"])
+    gen_dir = os.path.join(_table_dir(root, table), m["generation"])
+    cols = ", ".join(f"`{c}`" for c in m["bucket_cols"])
     sorted_by = (
-        ("SORTED BY (" + ", ".join(f"`{c}`" for c in spec["sort_cols"]) + ") ")
-        if spec["sort_cols"]
+        ("SORTED BY (" + ", ".join(f"`{c}`" for c in m["sort_cols"]) + ") ")
+        if m["sort_cols"]
         else ""
     )
     spark.sql(
-        f"CREATE TABLE {name} ({spec['schema_ddl']}) USING parquet "
+        f"CREATE TABLE {name} ({m['schema_ddl']}) USING parquet "
         f"CLUSTERED BY ({cols}) {sorted_by}"
-        f"INTO {spec['num_buckets']} BUCKETS "
+        f"INTO {m['num_buckets']} BUCKETS "
         f"LOCATION '{gen_dir}'"
     )
     return name
+
+
+def _spec_of(m: dict) -> dict:
+    """The layout spec a manifest carries — what the next generation
+    written on top of it inherits."""
+    return {k: m.get(k) for k in ("bucket_cols", "num_buckets", "sort_cols",
+                                  "schema_ddl", "shred", "point_filters")}
+
+
+def _scan_files(
+    spark: SparkSession, root: str, table: str, m: dict, files: list[str]
+) -> DataFrame:
+    """Raw parquet scan of ``files`` (names in snapshot ``m``'s
+    generation) under m's registered schema — a FILE scan, so
+    ``_metadata`` resolves, and no catalog bucketing claim that would
+    let the optimizer elide a re-clustering shuffle (the
+    autoBucketedScan trap documented in bucketed.append_bucketed).  An
+    empty list reads as an empty frame of that schema."""
+    schema = spark.table(_register(spark, root, table, m)).schema
+    if not files:
+        return spark.createDataFrame([], schema)
+    gen_dir = os.path.join(_table_dir(root, table), m["generation"])
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(gen_dir, f) for f in files]
+    )
+
+
+def _read_files(
+    spark: SparkSession, root: str, table: str, m: dict, files: list[str]
+) -> DataFrame:
+    """The live rows of ``files`` of snapshot ``m``: _scan_files with
+    m's deletion vectors applied — the one reader behind every pruned
+    read and every rewrite of existing files."""
+    df = _scan_files(spark, root, table, m, files)
+    return _dv_filter(spark, df, m) if files else df
 
 
 def _schema_ddl(df: DataFrame) -> str:
@@ -1275,6 +1370,9 @@ def create_manifest_table(
 
 
 _RECENT_BATCH_IDS_CAP = 256
+# manifests (or txn catalogs) a batch-id chain walk reads before it
+# gives up and logs the truncation
+_BATCH_ID_WALK_LIMIT = 256
 
 
 def _with_recent_batch_ids(
@@ -1306,9 +1404,7 @@ def _with_recent_batch_ids(
     manifest["recent_batch_ids"] = recent[-_RECENT_BATCH_IDS_CAP:]
 
 
-def _batch_id_published(
-    root: str, table: str, batch_id: str, limit: int = 256
-) -> int | None:
+def _batch_id_published(root: str, table: str, batch_id: str) -> int | None:
     """Was ``batch_id`` already published, and at which version?  The
     head manifest's ``recent_batch_ids`` index answers O(1) on the
     common path (newest entry wins — a compaction re-stamps its
@@ -1322,8 +1418,8 @@ def _batch_id_published(
     miss it and double-apply).  The walk is bounded by retention
     anyway (expired manifests end it); hitting the explicit cap is
     logged because a truncated search weakens exactly-once — size
-    retention/limit to the worst-case number of publishes between a
-    crash and its replay."""
+    retention/_BATCH_ID_WALK_LIMIT to the worst-case number of
+    publishes between a crash and its replay."""
     try:
         v = current_version(root, table)
     except FileNotFoundError:
@@ -1340,7 +1436,7 @@ def _batch_id_published(
         if len(recent) < _RECENT_BATCH_IDS_CAP:
             return None  # complete index: authoritative miss
         # saturated index: the batch could predate the window — walk
-    for _ in range(limit):
+    for _ in range(_BATCH_ID_WALK_LIMIT):
         try:
             m = read_manifest(root, table, v)
         except FileNotFoundError:
@@ -1359,7 +1455,8 @@ def _batch_id_published(
 
     logging.getLogger(__name__).warning(
         "%s: batch_id search truncated at %d manifests — a replayed "
-        "batch older than that could double-apply", table, limit,
+        "batch older than that could double-apply", table,
+        _BATCH_ID_WALK_LIMIT,
     )
     return None
 
@@ -1372,8 +1469,6 @@ def append_manifest_table(
     *,
     compact_files_per_bucket: int = 8,
     batch_id: str | None = None,
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
 ) -> int:
     """Append ``df`` as a NEW snapshot (previous files hard-linked, the
     batch inserted beside them, manifest + LATEST swapped atomically),
@@ -1394,70 +1489,31 @@ def append_manifest_table(
     CONCURRENT writers serialize (round 10): each generation is owned
     by exactly one writer via a link-CAS claim file; a writer that loses
     the claim (or whose parent goes stale between read and claim) waits
-    ``retry_wait_s`` and retries on top of the competitor's published
-    snapshot, up to ``max_retries`` times — both batches always land,
-    in some serial order, and a reader never sees a mixture (every
-    published manifest's parent chain is a real snapshot).  Claims with
-    a dead owner pid are crashed-writer debris and are taken over.
+    on the competitor's progress and retries on top of its published
+    snapshot, up to _MAX_RETRIES times (_claim_next) — both batches
+    always land, in some serial order, and a reader never sees a
+    mixture (every published manifest's parent chain is a real
+    snapshot).  Claims with a dead owner pid are crashed-writer debris
+    and are taken over.
 
     Scale shape: the append shuffles ONLY the new batch (one clustered
     exchange); linking is O(existing files) metadata work; compaction
     is the amortized full rewrite, exactly as in append_bucketed — but
     the swap is now a pointer replace, not a catalog rename."""
-    for attempt in range(max_retries + 1):
-        prev = read_manifest(root, table)
-        if batch_id is not None:
-            landed = _batch_id_published(root, table, batch_id)
-            if landed is not None:
-                # no-op replay: return the version the batch actually
-                # LANDED at, not the current head — a pinning caller
-                # (commit_multi_table) must not adopt versions carrying
-                # other writers' later, possibly half-transactional data
-                return landed
-        base = _shaped_batch(df, prev, table)
-        spec = {k: prev.get(k) for k in
-                ("bucket_cols", "num_buckets", "sort_cols", "schema_ddl",
-                 "shred", "point_filters")}
-        v = prev["version"] + 1
-        try:
-            _acquire_claim(root, table, v)
-        except ConcurrentWriteError:
-            # a live competitor owns generation v: wait for its publish
-            # to land, then retry ON TOP of it (both batches land; the
-            # loser is serialized behind the winner — never lost).
-            # Progress-based wait: returns as soon as the competitor
-            # publishes/releases/dies, backs off exponentially while it
-            # legitimately keeps writing (advisor finding: a Spark
-            # write routinely outlasts any fixed small budget)
-            if attempt == max_retries:
-                raise
-            _claim_wait(root, table, v, attempt, retry_wait_s)
-            continue
-        try:
-            # the claim admits exactly one writer per version, but the
-            # competitor we lost to may have published BETWEEN our
-            # read_manifest and our claim — re-check the parent still
-            # is LATEST, else retry with a fresh parent
-            if current_version(root, table) != prev["version"]:
-                continue
-            if _complete_lagging_txn_publish(root, table, v):
-                continue  # committed txn's lost LATEST swap: roll
-                          # forward, re-read, build on top of it
-            manifest = _write_generation(
-                spark, base, root, table, v, spec, link_from=prev
-            )
-            _with_recent_batch_ids(manifest, prev, batch_id)
-            _publish(root, table, manifest)
-            break
-        finally:
-            _release_claim(root, table, v)
-    else:
-        raise ConcurrentWriteError(
-            f"append to {table} lost the publish race {max_retries + 1} "
-            f"times (competing writer holding the claim throughout?)"
+    prev, landed = _claim_next(root, table, batch_id=batch_id)
+    if landed is not None:
+        return landed
+    v = prev["version"] + 1
+    try:
+        manifest = _write_generation(
+            spark, _shaped_batch(df, prev, table), root, table, v,
+            _spec_of(prev), link_from=prev,
         )
-
-    return _maybe_compact(spark, root, table, manifest, spec, batch_id,
+        _with_recent_batch_ids(manifest, prev, batch_id)
+        _publish(root, table, manifest)
+    finally:
+        _release_claim(root, table, v)
+    return _maybe_compact(spark, root, table, manifest, batch_id,
                           compact_files_per_bucket)
 
 
@@ -1466,7 +1522,6 @@ def _maybe_compact(
     root: str,
     table: str,
     manifest: dict,
-    spec: dict,
     batch_id: str | None,
     compact_files_per_bucket: int,
 ) -> int:
@@ -1483,17 +1538,13 @@ def _maybe_compact(
         return v
     # compaction = next generation: read the RAW snapshot files (a
     # catalog read would claim the bucket partitioning and let the
-    # optimizer elide the re-clustering shuffle — the
-    # autoBucketedScan trap documented in bucketed.append_bucketed)
-    gen_dir = os.path.join(_table_dir(root, table), manifest["generation"])
-    full = (
-        spark.read.schema(spark.table(_catalog_name(root, table, v)).schema)
-        .parquet(*[os.path.join(gen_dir, f) for f in manifest["files"]])
+    # optimizer elide the re-clustering shuffle) and materialize
+    # pending deletion vectors — the fresh generation starts
+    # vector-free
+    spec = _spec_of(manifest)
+    full = _repair_shred_columns(
+        _read_files(spark, root, table, manifest, manifest["files"]), spec
     )
-    # materialize pending deletion vectors: the compaction rewrite
-    # applies them and the fresh generation starts vector-free
-    full = _dv_filter(spark, full, manifest)
-    full = _repair_shred_columns(full, spec)
     v2 = v + 1
     try:
         _acquire_claim(root, table, v2)
@@ -1607,23 +1658,30 @@ def evolve_shred(
                 f"{table}: snapshot advanced past {prev['version']} during "
                 f"evolve_shred — re-read and retry"
             )
-        manifest = dict(prev)
-        for stale in ("batch_id", "compacted_from", "rebucketed_from",
-                      "op", "rewritten_files", "linked_files"):
-            manifest.pop(stale, None)
-        manifest.update(
-            version=v,
-            parent=prev["version"],
+        _publish(root, table, _metadata_successor(
+            prev,
             shred=new_shred,
             schema_ddl=ddl,
             shred_field_stats=_shred_field_summary(
                 prev.get("shred_stats", {}), new_shred
             ),
-        )
-        _publish(root, table, manifest)
+        ))
     finally:
         _release_claim(root, table, v)
     return v
+
+
+def _metadata_successor(prev: dict, **fields) -> dict:
+    """A METADATA-ONLY next generation of ``prev`` (evolve_shred,
+    delete_mor): same data directory and files, the parent's one-commit
+    stamps dropped, ``fields`` applied."""
+    manifest = dict(prev)
+    for stale in ("batch_id", "compacted_from", "rebucketed_from",
+                  "op", "rewritten_files", "linked_files"):
+        manifest.pop(stale, None)
+    manifest.update(version=prev["version"] + 1, parent=prev["version"],
+                    **fields)
+    return manifest
 
 
 # ---------------------------------------------------------------------------
@@ -1867,17 +1925,7 @@ def read_manifest_table_point(
     filters prune FILES, not rows — compose with the real equality
     filter, which parquet then pushes into the surviving files."""
     m = read_manifest(root, table, version)
-    spec = {k: m[k] for k in
-            ("bucket_cols", "num_buckets", "sort_cols", "schema_ddl")}
-    schema = spark.table(
-        _register(spark, root, table, m["version"], spec, m["generation"])
-    ).schema
-    gen_dir = os.path.join(_table_dir(root, table), m["generation"])
-    files = [os.path.join(gen_dir, f)
-             for f in point_pruned_files(m, col, value)]
-    if not files:
-        return spark.createDataFrame([], schema)
-    return _dv_filter(spark, spark.read.schema(schema).parquet(*files), m)
+    return _read_files(spark, root, table, m, point_pruned_files(m, col, value))
 
 
 # ---------------------------------------------------------------------------
@@ -1916,8 +1964,6 @@ def _cow_rewrite(
     transform,
     op: str,
     *,
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
     batch_id: str | None = None,
 ) -> int:
     """Shared copy-on-write engine: ``select_touched(manifest) ->
@@ -1927,40 +1973,20 @@ def _cow_rewrite(
     the manifest records the rewrite ratio for observability.
     ``batch_id`` gives rewrites the same exactly-once replay contract
     as appends (manifest-chain dedupe)."""
-    for attempt in range(max_retries + 1):
-        prev = read_manifest(root, table)
-        if batch_id is not None:
-            landed = _batch_id_published(root, table, batch_id)
-            if landed is not None:
-                return landed  # same landed-version contract as append
-        touched = list(select_touched(prev))
-        spec = {k: prev.get(k) for k in
-                ("bucket_cols", "num_buckets", "sort_cols", "schema_ddl",
-                 "shred", "point_filters")}
-        v = prev["version"] + 1
-        try:
-            _acquire_claim(root, table, v)
-        except ConcurrentWriteError:
-            if attempt == max_retries:
-                raise
-            _claim_wait(root, table, v, attempt, retry_wait_s)
-            continue
-        try:
-            if current_version(root, table) != prev["version"]:
-                continue
-            if _complete_lagging_txn_publish(root, table, v):
-                continue
-            manifest = _rewrite_generation(
-                spark, root, table, v, prev, spec, touched, transform, op
-            )
-            _with_recent_batch_ids(manifest, prev, batch_id)
-            _publish(root, table, manifest)
-            return v
-        finally:
-            _release_claim(root, table, v)
-    raise ConcurrentWriteError(
-        f"{op} on {table} lost the publish race {max_retries + 1} times"
-    )
+    prev, landed = _claim_next(root, table, batch_id=batch_id)
+    if landed is not None:
+        return landed  # same landed-version contract as append
+    v = prev["version"] + 1
+    try:
+        manifest = _rewrite_generation(
+            spark, root, table, v, prev, list(select_touched(prev)),
+            transform, op,
+        )
+        _with_recent_batch_ids(manifest, prev, batch_id)
+        _publish(root, table, manifest)
+    finally:
+        _release_claim(root, table, v)
+    return v
 
 
 def _rewrite_generation(
@@ -1969,37 +1995,23 @@ def _rewrite_generation(
     table: str,
     v: int,
     prev: dict,
-    spec: dict,
     touched: list[str],
     transform,
     op: str,
 ) -> dict:
     """The copy-on-write rewrite body shared by _cow_rewrite (single
-    table, caller publishes) and _stage_merge (transactional, caller
-    stages): read the touched region, transform, and write generation
-    ``v`` with the untouched files hard-linked.  Returns the
-    UNPUBLISHED manifest carrying the rewrite-ratio stamps."""
+    table, caller publishes) and commit_multi_table's staged merges
+    (transactional, caller stages): read the touched region,
+    transform, and write generation ``v`` with the untouched files
+    hard-linked.  Returns the UNPUBLISHED manifest carrying the
+    rewrite-ratio stamps."""
     touched_set = set(touched)
     untouched = [f for f in prev["files"] if f not in touched_set]
-    schema = spark.table(
-        _register(spark, root, table, prev["version"], spec,
-                  prev["generation"])
-    ).schema
-    gen_dir = os.path.join(_table_dir(root, table), prev["generation"])
-    if touched:
-        # apply the touched files' deletion vectors BEFORE the
-        # transform — a vectored row must not survive into the
-        # rewritten region (it would resurrect a deleted row)
-        old = _dv_filter(
-            spark,
-            spark.read.schema(schema).parquet(
-                *[os.path.join(gen_dir, f) for f in touched]
-            ),
-            prev,
-        )
-    else:
-        old = spark.createDataFrame([], schema)
-    new_rows = transform(old, prev)
+    spec = _spec_of(prev)
+    # the touched files' deletion vectors apply BEFORE the transform —
+    # a vectored row must not survive into the rewritten region (it
+    # would resurrect a deleted row)
+    new_rows = transform(_read_files(spark, root, table, prev, touched), prev)
     # repair lazily-evolved shred fields in the REWRITTEN region:
     # surviving rows from pre-evolution files carry NULL in an added
     # field's physical column — writing them back unrepaired would
@@ -2057,7 +2069,10 @@ def _bucket_pruned_selector(
     key set (unique AND non-null — a NULL key never equi-joins, so a
     NULL-key update would duplicate instead of replace; review
     finding), run the bounded bucket census, and return the
-    select_touched closure."""
+    select_touched closure.  The validation and the census are Spark
+    jobs and run HERE, before the writer claims its generation —
+    select_touched itself runs under the claim and is a lookup unless
+    a concurrent rebucket changed the spec."""
     if not set(prev0["bucket_cols"]) <= set(keys):
         raise ValueError(
             f"key_cols {keys} must contain the bucket columns "
@@ -2117,7 +2132,20 @@ def _bucket_pruned_selector(
         touched_buckets = _census(m["num_buckets"], m["bucket_cols"])
         return [f for f in m["files"] if _file_bucket(f) in touched_buckets]
 
+    _census(prev0["num_buckets"], prev0["bucket_cols"])
     return select_touched
+
+
+def _upsert_transform(updates: DataFrame, keys: list[str]):
+    """The COW MERGE transform: old rows whose key the update set
+    carries are replaced by the (physically shaped) updates; every
+    other key's rows survive and keys new to the table insert."""
+
+    def transform(old: DataFrame, prev: dict) -> DataFrame:
+        survivors = old.join(updates.select(*keys), keys, "left_anti")
+        return survivors.unionByName(_physical_shape(updates, prev))
+
+    return transform
 
 
 def merge_manifest_table(
@@ -2128,8 +2156,6 @@ def merge_manifest_table(
     *,
     key_cols: str | list[str],
     validate_unique_keys: bool = True,
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
     batch_id: str | None = None,
 ) -> int:
     """Row-level UPSERT (MERGE): rows of ``updates`` REPLACE same-key
@@ -2157,16 +2183,9 @@ def merge_manifest_table(
     select_touched = _bucket_pruned_selector(
         prev0, updates, keys, validate=validate_unique_keys
     )
-
-    def transform(old: DataFrame, prev: dict) -> DataFrame:
-        ups = _physical_shape(updates, prev)
-        survivors = old.join(updates.select(*keys), keys, "left_anti")
-        return survivors.unionByName(ups)
-
     return _cow_rewrite(
-        spark, root, table, select_touched, transform, "merge",
-        max_retries=max_retries, retry_wait_s=retry_wait_s,
-        batch_id=batch_id,
+        spark, root, table, select_touched, _upsert_transform(updates, keys),
+        "merge", batch_id=batch_id,
     )
 
 
@@ -2177,8 +2196,6 @@ def delete_manifest_rows(
     table: str,
     *,
     key_cols: str | list[str],
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
     batch_id: str | None = None,
 ) -> int:
     """Row-level DELETE by key set (the GDPR-erasure shape): every row
@@ -2198,7 +2215,6 @@ def delete_manifest_rows(
 
     return _cow_rewrite(
         spark, root, table, select_touched, transform, "delete",
-        max_retries=max_retries, retry_wait_s=retry_wait_s,
         batch_id=batch_id,
     )
 
@@ -2210,8 +2226,6 @@ def delete_manifest_range(
     *,
     lower=None,
     upper=None,
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
 ) -> int:
     """Row-level DELETE of a [lower, upper] range on the FIRST sort
     column (retention sweeps, bad-batch rollbacks): the manifest's
@@ -2242,8 +2256,7 @@ def delete_manifest_range(
         return old.filter(~F.coalesce(cond, F.lit(False)))
 
     return _cow_rewrite(
-        spark, root, table, select_touched, transform, "delete_range",
-        max_retries=max_retries, retry_wait_s=retry_wait_s,
+        spark, root, table, select_touched, transform, "delete_range"
     )
 
 
@@ -2336,23 +2349,10 @@ def _matching_positions(
     bulk rewrite, not a vector)."""
     if not touched:
         return []
-    spec = {k: prev.get(k) for k in
-            ("bucket_cols", "num_buckets", "sort_cols", "schema_ddl")}
-    schema = spark.table(
-        _register(spark, root, table, prev["version"], spec,
-                  prev["generation"])
-    ).schema
-    gen_dir = os.path.join(_table_dir(root, table), prev["generation"])
-    scan = (
-        spark.read.schema(schema)
-        .parquet(*[os.path.join(gen_dir, f) for f in touched])
-        .select(
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("_f"),
-            F.col("_metadata.row_index").alias("_p"),
-            *kc,
-        )
+    scan = _scan_files(spark, root, table, prev, touched).select(
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("_f"),
+        F.col("_metadata.row_index").alias("_p"),
+        *kc,
     )
     hits = scan.join(keys.select(*kc), kc, "left_semi").select("_f", "_p")
     pairs = hits.limit(max_positions + 1).collect()
@@ -2381,8 +2381,6 @@ def delete_manifest_rows_mor(
     *,
     key_cols: str | list[str],
     max_positions: int = 1_000_000,
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
 ) -> int:
     """Row-level DELETE by key set as a MERGE-ON-READ deletion vector:
     no data file is written — the touched buckets' files are scanned
@@ -2405,46 +2403,23 @@ def delete_manifest_rows_mor(
     prev0 = read_manifest(root, table)
     keys = keys.localCheckpoint()  # same determinism contract as merge
     select_touched = _bucket_pruned_selector(prev0, keys, kc, validate=False)
-    for attempt in range(max_retries + 1):
-        prev = read_manifest(root, table)
-        touched = select_touched(prev)
-        v = prev["version"] + 1
-        try:
-            _acquire_claim(root, table, v)
-        except ConcurrentWriteError:
-            if attempt == max_retries:
-                raise
-            _claim_wait(root, table, v, attempt, retry_wait_s)
-            continue
-        try:
-            if current_version(root, table) != prev["version"]:
-                continue
-            if _complete_lagging_txn_publish(root, table, v):
-                continue
-            new_pairs = _matching_positions(
-                spark, root, table, prev, touched, keys, kc,
-                max_positions,
-                "the copy-on-write delete_manifest_rows",
-            )
-            dvs = _union_vectors(prev, new_pairs)
-            manifest = dict(prev)
-            for stale in ("batch_id", "compacted_from", "rebucketed_from",
-                          "op", "rewritten_files", "linked_files"):
-                manifest.pop(stale, None)
-            manifest.update(
-                version=v,
-                parent=prev["version"],
-                op="delete_mor",
-                delete_vectors=dvs,
-                dv_positions=sum(len(ps) for ps in dvs.values()),
-            )
-            _publish(root, table, manifest)
-            return v
-        finally:
-            _release_claim(root, table, v)
-    raise ConcurrentWriteError(
-        f"delete_mor on {table} lost the publish race {max_retries + 1} times"
-    )
+    prev, _ = _claim_next(root, table)
+    v = prev["version"] + 1
+    try:
+        new_pairs = _matching_positions(
+            spark, root, table, prev, select_touched(prev), keys, kc,
+            max_positions, "the copy-on-write delete_manifest_rows",
+        )
+        dvs = _union_vectors(prev, new_pairs)
+        _publish(root, table, _metadata_successor(
+            prev,
+            op="delete_mor",
+            delete_vectors=dvs,
+            dv_positions=sum(len(ps) for ps in dvs.values()),
+        ))
+    finally:
+        _release_claim(root, table, v)
+    return v
 
 
 def merge_manifest_table_mor(
@@ -2457,8 +2432,6 @@ def merge_manifest_table_mor(
     validate_unique_keys: bool = True,
     max_positions: int = 1_000_000,
     compact_files_per_bucket: int = 8,
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
     batch_id: str | None = None,
 ) -> int:
     """Row-level UPSERT (MERGE) as MERGE-ON-READ delta files — the
@@ -2505,55 +2478,34 @@ def merge_manifest_table_mor(
     select_touched = _bucket_pruned_selector(
         prev0, updates, kc, validate=validate_unique_keys
     )
-    for attempt in range(max_retries + 1):
-        prev = read_manifest(root, table)
-        if batch_id is not None:
-            landed = _batch_id_published(root, table, batch_id)
-            if landed is not None:
-                return landed  # same landed-version contract as append
-        touched = select_touched(prev)
-        v = prev["version"] + 1
-        try:
-            _acquire_claim(root, table, v)
-        except ConcurrentWriteError:
-            if attempt == max_retries:
-                raise
-            _claim_wait(root, table, v, attempt, retry_wait_s)
-            continue
-        try:
-            if current_version(root, table) != prev["version"]:
-                continue
-            if _complete_lagging_txn_publish(root, table, v):
-                continue
-            # positions of the rows the updates REPLACE (fail fast on
-            # the cap before any data is written)
-            pairs = _matching_positions(
-                spark, root, table, prev, touched, updates, kc,
-                max_positions, "the copy-on-write merge_manifest_table",
-            )
-            spec = {k: prev.get(k) for k in
-                    ("bucket_cols", "num_buckets", "sort_cols",
-                     "schema_ddl", "shred", "point_filters")}
-            base = _shaped_batch(updates, prev, table)
-            # delta files: the base hard-links in full; only the
-            # update batch writes (carried vectors follow the links)
-            manifest = _write_generation(
-                spark, base, root, table, v, spec, link_from=prev
-            )
-            dvs = _union_vectors(prev, pairs)
-            manifest["delete_vectors"] = dvs
-            manifest["dv_positions"] = sum(len(ps) for ps in dvs.values())
-            manifest["op"] = "merge_mor"
-            manifest["replaced_positions"] = len(pairs)
-            _with_recent_batch_ids(manifest, prev, batch_id)
-            _publish(root, table, manifest)
-            return _maybe_compact(spark, root, table, manifest, spec,
-                                  batch_id, compact_files_per_bucket)
-        finally:
-            _release_claim(root, table, v)
-    raise ConcurrentWriteError(
-        f"merge_mor on {table} lost the publish race {max_retries + 1} times"
-    )
+    prev, landed = _claim_next(root, table, batch_id=batch_id)
+    if landed is not None:
+        return landed  # same landed-version contract as append
+    v = prev["version"] + 1
+    try:
+        # positions of the rows the updates REPLACE (fail fast on the
+        # cap before any data is written)
+        pairs = _matching_positions(
+            spark, root, table, prev, select_touched(prev), updates, kc,
+            max_positions, "the copy-on-write merge_manifest_table",
+        )
+        # delta files: the base hard-links in full; only the update
+        # batch writes (carried vectors follow the links)
+        manifest = _write_generation(
+            spark, _shaped_batch(updates, prev, table), root, table, v,
+            _spec_of(prev), link_from=prev,
+        )
+        dvs = _union_vectors(prev, pairs)
+        manifest["delete_vectors"] = dvs
+        manifest["dv_positions"] = sum(len(ps) for ps in dvs.values())
+        manifest["op"] = "merge_mor"
+        manifest["replaced_positions"] = len(pairs)
+        _with_recent_batch_ids(manifest, prev, batch_id)
+        _publish(root, table, manifest)
+    finally:
+        _release_claim(root, table, v)
+    return _maybe_compact(spark, root, table, manifest, batch_id,
+                          compact_files_per_bucket)
 
 
 def rebucket_manifest_table(
@@ -2564,8 +2516,6 @@ def rebucket_manifest_table(
     num_buckets: int | None = None,
     bucket_cols: str | list[str] | None = None,
     sort_cols: str | list[str] | None = None,
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
 ) -> int:
     """Layout evolution (round 10): re-cluster the table into a NEW
     bucket spec — more buckets as data grows, different bucket columns
@@ -2586,11 +2536,10 @@ def rebucket_manifest_table(
           else list(bucket_cols) if bucket_cols is not None else None)
     sc = ([sort_cols] if isinstance(sort_cols, str)
           else list(sort_cols) if sort_cols is not None else None)
-    for attempt in range(max_retries + 1):
-        prev = read_manifest(root, table)
-        spec = {k: prev.get(k) for k in
-                ("bucket_cols", "num_buckets", "sort_cols", "schema_ddl",
-                 "shred", "point_filters")}
+    prev, _ = _claim_next(root, table)
+    v = prev["version"] + 1
+    try:
+        spec = _spec_of(prev)
         if num_buckets is not None:
             spec["num_buckets"] = int(num_buckets)
         if kc is not None:
@@ -2612,51 +2561,23 @@ def rebucket_manifest_table(
             raise ValueError(
                 f"rebucket: columns {missing} are not in the table schema"
             )
-        v = prev["version"] + 1
-        try:
-            _acquire_claim(root, table, v)
-        except ConcurrentWriteError:
-            if attempt == max_retries:
-                raise
-            _claim_wait(root, table, v, attempt, retry_wait_s)
-            continue
-        try:
-            if current_version(root, table) != prev["version"]:
-                continue
-            if _complete_lagging_txn_publish(root, table, v):
-                continue
-            # read the RAW snapshot files (not the catalog entry: its
-            # OLD bucketing claim would let the optimizer elide the
-            # re-clustering shuffle — the autoBucketedScan trap)
-            old_spec = {k: prev.get(k) for k in
-                        ("bucket_cols", "num_buckets", "sort_cols",
-                         "schema_ddl")}
-            schema = spark.table(
-                _register(spark, root, table, prev["version"], old_spec,
-                          prev["generation"])
-            ).schema
-            gen_dir = os.path.join(_table_dir(root, table),
-                                   prev["generation"])
-            full = spark.read.schema(schema).parquet(
-                *[os.path.join(gen_dir, f) for f in prev["files"]]
-            )
-            # rebucket rewrites every file: apply and clear any
-            # pending deletion vectors
-            full = _dv_filter(spark, full, prev)
-            full = _repair_shred_columns(full, spec)
-            manifest = _write_generation(
-                spark, full, root, table, v, spec, mode="errorifexists"
-            )
-            manifest["parent"] = prev["version"]
-            manifest["rebucketed_from"] = prev["version"]
-            _with_recent_batch_ids(manifest, prev, None)
-            _publish(root, table, manifest)
-            return v
-        finally:
-            _release_claim(root, table, v)
-    raise ConcurrentWriteError(
-        f"rebucket of {table} lost the publish race {max_retries + 1} times"
-    )
+        # read the RAW snapshot files (not the catalog entry: its OLD
+        # bucketing claim would let the optimizer elide the
+        # re-clustering shuffle); rebucket rewrites every file, so it
+        # applies and clears any pending deletion vectors
+        full = _repair_shred_columns(
+            _read_files(spark, root, table, prev, prev["files"]), spec
+        )
+        manifest = _write_generation(
+            spark, full, root, table, v, spec, mode="errorifexists"
+        )
+        manifest["parent"] = prev["version"]
+        manifest["rebucketed_from"] = prev["version"]
+        _with_recent_batch_ids(manifest, prev, None)
+        _publish(root, table, manifest)
+    finally:
+        _release_claim(root, table, v)
+    return v
 
 
 def foreach_batch_append(
@@ -2776,16 +2697,7 @@ def _read_table_of(
     stats-hinted read) parse it exactly once; with merge-on-read
     vectors a manifest can be multi-MB of positions (review
     finding)."""
-    spec = {k: m[k] for k in
-            ("bucket_cols", "num_buckets", "sort_cols", "schema_ddl")}
-    return _dv_filter(
-        spark,
-        spark.table(
-            _register(spark, root, table, m["version"], spec,
-                      m["generation"])
-        ),
-        m,
-    )
+    return _dv_filter(spark, spark.table(_register(spark, root, table, m)), m)
 
 
 def _parse_bytes_conf(v: str) -> int:
@@ -2891,17 +2803,8 @@ def read_manifest_table_pruned(
     compose with a real filter, which parquet then pushes down
     row-group-level inside the surviving files."""
     m = read_manifest(root, table, version)
-    spec = {k: m[k] for k in
-            ("bucket_cols", "num_buckets", "sort_cols", "schema_ddl")}
-    schema = spark.table(
-        _register(spark, root, table, m["version"], spec, m["generation"])
-    ).schema
-    gen_dir = os.path.join(_table_dir(root, table), m["generation"])
-    files = [os.path.join(gen_dir, f)
-             for f in pruned_files(m, lower=lower, upper=upper)]
-    if not files:
-        return spark.createDataFrame([], schema)
-    return _dv_filter(spark, spark.read.schema(schema).parquet(*files), m)
+    return _read_files(spark, root, table, m,
+                       pruned_files(m, lower=lower, upper=upper))
 
 
 def expire_generations(
@@ -3013,14 +2916,14 @@ def read_txn_catalog(root: str, version: int | None = None) -> dict:
         return json.load(fh)
 
 
-def _txn_batch_published(root: str, batch_id: str, limit: int = 256) -> int | None:
+def _txn_batch_published(root: str, batch_id: str) -> int | None:
     """Walk the txn-catalog chain head-first for a prior commit of
     this batch_id — the catalog twin of _batch_id_published.  A
     head-only comparison would let a replay of a COMPLETED transaction
     that other transactions have since built on re-run the catalog
     swap and re-pin stale versions (review finding)."""
     cat = read_txn_catalog(root)
-    for _ in range(limit):
+    for _ in range(_BATCH_ID_WALK_LIMIT):
         if cat.get("batch_id") == batch_id:
             return cat["version"]
         parent = cat.get("parent")
@@ -3043,33 +2946,16 @@ def _publish_txn(root: str, cat: dict) -> None:
     _durable_write(_txn_latest_path(root), str(cat["version"]))
 
 
-def _stage_merge(
-    spark: SparkSession,
-    root: str,
-    table: str,
-    v: int,
-    prev: dict,
-    spec: dict,
-    mspec: dict,
-) -> dict:
-    """Stage a bucket-pruned COW MERGE as generation ``v`` WITHOUT
-    publishing it — the multi-table transaction's merge twin of the
-    append staging (the shared _rewrite_generation body; the manifest
-    only lands in the chain at the catalog swap).  ``mspec`` is the
-    PREPARED form commit_multi_table builds: {"updates": materialized
-    DataFrame, "key_cols": [...], "selector": select_touched}."""
-    updates = mspec["updates"]
-    keys = mspec["key_cols"]
-    touched = list(mspec["selector"](prev))
-
-    def transform(old: DataFrame, prev_m: dict) -> DataFrame:
-        ups = _physical_shape(updates, prev_m)
-        survivors = old.join(updates.select(*keys), keys, "left_anti")
-        return survivors.unionByName(ups)
-
-    return _rewrite_generation(
-        spark, root, table, v, prev, spec, touched, transform, "merge"
-    )
+def _next_txn_catalog(cat: dict, tables: dict, batch_id: str | None) -> dict:
+    """The successor of txn catalog ``cat`` pinning ``tables``."""
+    new_cat = {
+        "version": cat["version"] + 1,
+        "parent": cat["version"] if cat["version"] >= 0 else None,
+        "tables": tables,
+    }
+    if batch_id is not None:
+        new_cat["batch_id"] = batch_id
+    return new_cat
 
 
 def commit_multi_table(
@@ -3080,8 +2966,6 @@ def commit_multi_table(
     merges: dict[str, dict] | None = None,
     batch_id: str | None = None,
     compact_files_per_bucket: int = 8,
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
 ) -> int:
     """Append each table's batch and pin the result as ONE atomic
     cross-table snapshot.  Returns the published txn version.
@@ -3146,31 +3030,29 @@ def commit_multi_table(
             return done
     # Prepare each merge ONCE, after the replay short-circuit (a
     # replayed no-op must not pay a materialization job) and OUTSIDE
-    # the claimed staging attempts (the duplicate/NULL-key validation
-    # is a Spark job; re-running it per attempt would lengthen the
-    # serialized critical section — review finding): materialize the
-    # update set unless the caller already did ("materialized": True —
-    # the census, anti-join, and write must see ONE evaluation of a
-    # possibly nondeterministic source, same rule as
-    # merge_manifest_table), then build the bucket-pruned selector
+    # the claimed staging (the duplicate/NULL-key validation and the
+    # bucket census are Spark jobs; running them under the claim would
+    # lengthen the serialized critical section — review finding):
+    # materialize the update set unless the caller already did
+    # ("materialized": True — the census, anti-join, and write must see
+    # ONE evaluation of a possibly nondeterministic source, same rule
+    # as merge_manifest_table), then build the bucket-pruned selector
     # (select_touched re-checks the spec against the manifest it
     # actually filters, so a pre-claim snapshot is a safe base).
-    prepared: dict[str, dict] = {}
+    prepared: dict[str, tuple] = {}
     for t, m in merges.items():
         upd = m["updates"]
         if not m.get("materialized"):
             upd = upd.localCheckpoint()
         keys = m["key_cols"]
         keys = [keys] if isinstance(keys, str) else list(keys)
-        prepared[t] = {
-            "updates": upd,
-            "key_cols": keys,
-            "selector": _bucket_pruned_selector(
+        prepared[t] = (
+            _bucket_pruned_selector(
                 read_manifest(root, t), upd, keys,
                 validate=m.get("validate_unique_keys", True),
             ),
-        }
-    merges = prepared
+            _upsert_transform(upd, keys),
+        )
     staged: dict[str, dict] = {}
     landed: dict[str, int] = {}
     claimed: list[tuple[str, int]] = []
@@ -3178,105 +3060,50 @@ def commit_multi_table(
         # table claims in SORTED order: overlapping transactions
         # acquire in the same order, so they cannot deadlock
         for table in sorted(set(appends) | set(merges)):
-            for attempt in range(max_retries + 1):
-                if batch_id is not None:
-                    # old-style / partially-published crash compat: a
-                    # batch already in the table's PUBLISHED chain is
-                    # adopted at the version it landed
-                    lv = _batch_id_published(root, table,
-                                             f"{batch_id}:{table}")
-                    if lv is not None:
-                        landed[table] = lv
-                        break
-                prev = read_manifest(root, table)
-                v = prev["version"] + 1
-                try:
-                    _acquire_claim(root, table, v)
-                except ConcurrentWriteError:
-                    if attempt == max_retries:
-                        raise
-                    _claim_wait(root, table, v, attempt, retry_wait_s)
-                    continue
-                claimed.append((table, v))
-                if current_version(root, table) != prev["version"]:
-                    _release_claim(root, table, v)
-                    claimed.pop()
-                    continue
-                if _complete_lagging_txn_publish(root, table, v):
-                    _release_claim(root, table, v)
-                    claimed.pop()
-                    continue
-                spec = {k: prev.get(k) for k in
-                        ("bucket_cols", "num_buckets", "sort_cols",
-                         "schema_ddl", "shred", "point_filters")}
-                if table in merges:
-                    manifest = _stage_merge(
-                        spark, root, table, v, prev, spec, merges[table]
-                    )
-                else:
-                    base = _shaped_batch(appends[table], prev, table)
-                    manifest = _write_generation(
-                        spark, base, root, table, v, spec, link_from=prev
-                    )
-                _with_recent_batch_ids(
-                    manifest, prev,
-                    None if batch_id is None else f"{batch_id}:{table}",
+            table_bid = None if batch_id is None else f"{batch_id}:{table}"
+            # old-style / partially-published crash compat: a batch
+            # already in the table's PUBLISHED chain is adopted at the
+            # version it landed
+            prev, lv = _claim_next(root, table, batch_id=table_bid)
+            if lv is not None:
+                landed[table] = lv
+                continue
+            v = prev["version"] + 1
+            claimed.append((table, v))
+            if table in prepared:
+                select_touched, transform = prepared[table]
+                manifest = _rewrite_generation(
+                    spark, root, table, v, prev, select_touched(prev),
+                    transform, "merge",
                 )
-                _write_manifest_file(root, table, manifest)  # staged,
-                # durable, NOT published — invisible until the catalog
-                staged[table] = manifest
-                landed[table] = v
-                break
             else:
-                raise ConcurrentWriteError(
-                    f"staging {table} lost the claim race "
-                    f"{max_retries + 1} times"
+                manifest = _write_generation(
+                    spark, _shaped_batch(appends[table], prev, table),
+                    root, table, v, _spec_of(prev), link_from=prev,
                 )
+            _with_recent_batch_ids(manifest, prev, table_bid)
+            _write_manifest_file(root, table, manifest)  # staged,
+            # durable, NOT published — invisible until the catalog
+            staged[table] = manifest
+            landed[table] = v
         # the catalog swap — THE cross-table commit point, serialized
         # by the same claim CAS one level up
-        committed = None
-        for attempt in range(max_retries + 1):
-            cat = read_txn_catalog(root)
-            if batch_id is not None:
-                done = _txn_batch_published(root, batch_id)
-                if done is not None:
-                    return done  # a concurrent replay won the swap;
-                    # our staged duplicates stay unpublished debris
-            v = cat["version"] + 1
-            try:
-                _acquire_claim(root, _TXN, v)
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
-                _claim_wait(root, _TXN, v, attempt, retry_wait_s)
-                continue
-            try:
-                if read_txn_catalog(root)["version"] != cat["version"]:
-                    continue  # lost the race between read and claim
-                tables = dict(cat["tables"])
-                for t, nv in landed.items():
-                    # MONOTONE pin update: only the batch-id-adopted
-                    # (already-published) versions can be behind a
-                    # concurrent pin — staged versions are above every
-                    # published one by construction
-                    tables[t] = max(tables.get(t, -1), nv)
-                new_cat = {
-                    "version": v,
-                    "parent": cat["version"] if cat["version"] >= 0
-                    else None,
-                    "tables": tables,
-                }
-                if batch_id is not None:
-                    new_cat["batch_id"] = batch_id
-                _publish_txn(root, new_cat)
-                committed = v
-                break
-            finally:
-                _release_claim(root, _TXN, v)
-        if committed is None:
-            raise ConcurrentWriteError(
-                f"txn catalog swap lost the race {max_retries + 1} times"
-            )
+        cat, done = _claim_next(root, _TXN, batch_id=batch_id)
+        if done is not None:
+            return done  # a concurrent replay won the swap; our
+            # staged duplicates stay unpublished debris
+        committed = cat["version"] + 1
+        try:
+            tables = dict(cat["tables"])
+            for t, nv in landed.items():
+                # MONOTONE pin update: only the batch-id-adopted
+                # (already-published) versions can be behind a
+                # concurrent pin — staged versions are above every
+                # published one by construction
+                tables[t] = max(tables.get(t, -1), nv)
+            _publish_txn(root, _next_txn_catalog(cat, tables, batch_id))
+        finally:
+            _release_claim(root, _TXN, committed)
         # post-commit roll-forward: move each staged table's LATEST to
         # its committed version (still under our per-table claims); a
         # crash in this window is repaired by any later writer via
@@ -3293,13 +3120,9 @@ def commit_multi_table(
         # here leaves only normal compaction debris — the bound
         # re-fires on a later commit.
         for table, manifest in staged.items():
-            spec = {k: manifest.get(k) for k in
-                    ("bucket_cols", "num_buckets", "sort_cols",
-                     "schema_ddl", "shred", "point_filters")}
             try:
                 _maybe_compact(
-                    spark, root, table, manifest, spec,
-                    None if batch_id is None else f"{batch_id}:{table}",
+                    spark, root, table, manifest, manifest.get("batch_id"),
                     compact_files_per_bucket,
                 )
             except Exception:  # noqa: BLE001 — the txn is DURABLY
@@ -3326,8 +3149,6 @@ def pin_tables_txn(
     tables: list[str] | dict[str, int],
     *,
     batch_id: str | None = None,
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
 ) -> int:
     """Pin published snapshots into a new txn catalog — registering
     them as one atomic group without writing any data (the bootstrap
@@ -3343,53 +3164,31 @@ def pin_tables_txn(
     inconsistent group."""
     if not tables:
         raise ValueError("pin_tables_txn: no tables to pin")
-    if batch_id is not None:
-        done = _txn_batch_published(root, batch_id)
-        if done is not None:
-            return done
     if isinstance(tables, dict):
         current = dict(tables)
         exact = True
     else:
         current = {t: current_version(root, t) for t in sorted(set(tables))}
         exact = False
-    for attempt in range(max_retries + 1):
-        cat = read_txn_catalog(root)
-        v = cat["version"] + 1
-        try:
-            _acquire_claim(root, _TXN, v)
-        except ConcurrentWriteError:
-            if attempt == max_retries:
-                raise
-            _claim_wait(root, _TXN, v, attempt, retry_wait_s)
-            continue
-        try:
-            if read_txn_catalog(root)["version"] != cat["version"]:
-                continue
-            pinned = dict(cat["tables"])
-            for t, nv in current.items():
-                if exact and pinned.get(t, -1) > nv:
-                    raise ConcurrentWriteError(
-                        f"pin_tables_txn: {t} is already pinned at "
-                        f"version {pinned[t]} > requested {nv} — the "
-                        f"snapshot this group was derived from is "
-                        f"stale; re-derive and retry"
-                    )
-                pinned[t] = max(pinned.get(t, -1), nv)
-            new_cat = {
-                "version": v,
-                "parent": cat["version"] if cat["version"] >= 0 else None,
-                "tables": pinned,
-            }
-            if batch_id is not None:
-                new_cat["batch_id"] = batch_id
-            _publish_txn(root, new_cat)
-            return v
-        finally:
-            _release_claim(root, _TXN, v)
-    raise ConcurrentWriteError(
-        f"txn pin lost the catalog race {max_retries + 1} times"
-    )
+    cat, done = _claim_next(root, _TXN, batch_id=batch_id)
+    if done is not None:
+        return done
+    v = cat["version"] + 1
+    try:
+        pinned = dict(cat["tables"])
+        for t, nv in current.items():
+            if exact and pinned.get(t, -1) > nv:
+                raise ConcurrentWriteError(
+                    f"pin_tables_txn: {t} is already pinned at "
+                    f"version {pinned[t]} > requested {nv} — the "
+                    f"snapshot this group was derived from is "
+                    f"stale; re-derive and retry"
+                )
+            pinned[t] = max(pinned.get(t, -1), nv)
+        _publish_txn(root, _next_txn_catalog(cat, pinned, batch_id))
+    finally:
+        _release_claim(root, _TXN, v)
+    return v
 
 
 def read_tables_atomic(
@@ -3455,19 +3254,13 @@ def _step_changes(
         # vectors they materialized were already logical deletes at
         # their own commit)
         return None
-    spec = {k: child.get(k) for k in
-            ("bucket_cols", "num_buckets", "sort_cols", "schema_ddl")}
-    schema = spark.table(
-        _register(spark, root, table, child["version"], spec,
-                  child["generation"])
-    ).schema
-    gen_dir_c = os.path.join(_table_dir(root, table), child["generation"])
-    gen_dir_p = os.path.join(_table_dir(root, table), parent["generation"])
-
     child_files = set(child["files"])
     parent_files = set(parent["files"])
     new_files = sorted(child_files - parent_files)
     old_files = sorted(parent_files - child_files)
+    # the new files carry no vectors: they were written by this commit
+    new = _scan_files(spark, root, table, child, new_files)
+    schema = new.schema
 
     # DELETES FROM VECTOR GROWTH, handled generically: positions this
     # commit ADDED to the vectors of files it kept (delete_mor adds
@@ -3475,6 +3268,8 @@ def _step_changes(
     # the same commit) are row deletes of THIS commit — read them back
     # from the shared, untouched files.  Vectors of files the commit
     # REWROTE never appear here: a rewrite applies and clears them.
+    # Kept files are shared with the child's generation (hard links,
+    # or the very same directory for a metadata-only commit).
     old_dv = {f: set(ps) for f, ps in _dv_positions_of(parent).items()}
     pairs = [
         (f, int(p))
@@ -3495,8 +3290,7 @@ def _step_changes(
         while fcol in taken or pcol in taken:
             fcol, pcol = fcol + "_", pcol + "_"
         scan = (
-            spark.read.schema(schema)
-            .parquet(*[os.path.join(gen_dir_p, f) for f in files])
+            _scan_files(spark, root, table, child, files)
             .withColumn(
                 fcol,
                 F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
@@ -3520,22 +3314,13 @@ def _step_changes(
         return dv_deletes
 
     cols = [f.name for f in schema.fields]
-    if new_files:
-        new = spark.read.schema(schema).parquet(
-            *[os.path.join(gen_dir_c, f) for f in new_files]
-        )
-    else:
-        new = spark.createDataFrame([], schema)
     if old_files:
         # rows already dead via the parent's vectors were deleted by an
-        # earlier commit — they are not deletes of THIS one
-        old = _dv_filter(
-            spark,
-            spark.read.schema(schema).parquet(
-                *[os.path.join(gen_dir_p, f) for f in old_files]
-            ),
-            parent,
-        )
+        # earlier commit — they are not deletes of THIS one.  A commit
+        # that drops files keeps its parent's schema_ddl (only the
+        # metadata-only evolve_shred changes it), so the parent's
+        # registered schema is the child's.
+        old = _read_files(spark, root, table, parent, old_files)
     else:
         # file growth without file loss (append, merge_mor deltas):
         # the new files are the inserts, no diff needed
@@ -3698,13 +3483,7 @@ def read_manifest_changes(
         v, child = parent_v, parent
     if not steps:
         m = read_manifest(root, table, to_version)
-        spec = {k: m[k] for k in
-                ("bucket_cols", "num_buckets", "sort_cols", "schema_ddl")}
-        schema = spark.table(
-            _register(spark, root, table, m["version"], spec,
-                      m["generation"])
-        ).schema
-        empty = spark.createDataFrame([], schema)
+        empty = _scan_files(spark, root, table, m, [])
         return (
             empty.withColumn("_change_type", F.lit(""))
             .withColumn("_commit_version", F.lit(0).cast("long"))
@@ -3851,8 +3630,6 @@ def sync_manifest_mirror(
     dst: str,
     *,
     key_cols: str | list[str],
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
 ) -> int | None:
     """Advance the mirror to its source's current snapshot by applying
     the change feed since the last synced version.  Returns the newly
@@ -3882,20 +3659,22 @@ def sync_manifest_mirror(
     state, so it syncs the REMAINDER, typically a no-op."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     claim = _mirror_state_path(root, dst) + ".claim"
-    for attempt in range(max_retries + 1):
+    # the one loop _claim_next does not run: the MIRROR claim is
+    # versionless, so there is no head to read, re-check or roll forward
+    for attempt in range(_MAX_RETRIES + 1):
         try:
             _acquire_claim_path(claim, f"mirror {dst} sync")
         except ConcurrentWriteError:
-            if attempt == max_retries:
+            if attempt == _MAX_RETRIES:
                 raise
-            _claim_path_wait(claim, attempt, retry_wait_s)
+            _claim_path_wait(claim, attempt, _RETRY_WAIT_S)
             continue
         try:
             return _sync_mirror_locked(spark, root, dst, keys)
         finally:
             _release_claim_path(claim)
     raise ConcurrentWriteError(
-        f"mirror {dst} sync lost the claim race {max_retries + 1} times"
+        f"mirror {dst} sync lost the claim race {_MAX_RETRIES + 1} times"
     )
 
 

@@ -148,8 +148,6 @@ def append_with_index(
     *,
     batch_id: str | None = None,
     compact_files_per_bucket: int = 8,
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
 ) -> int:
     """Append a batch to the base AND its postings to the index in ONE
     atomic transaction (the commit_multi_table catalog swap is the
@@ -167,7 +165,6 @@ def append_with_index(
         spark, root, {table: df, index: postings},
         batch_id=batch_id,
         compact_files_per_bucket=compact_files_per_bucket,
-        max_retries=max_retries, retry_wait_s=retry_wait_s,
     )
 
 
@@ -199,8 +196,6 @@ def merge_with_index(
     batch_id: str | None = None,
     validate_unique_keys: bool = True,
     compact_files_per_bucket: int = 8,
-    max_retries: int = 20,
-    retry_wait_s: float = 0.5,
 ) -> int:
     """Row-level UPSERT of the base AND the update batch's postings
     in ONE atomic transaction (round 12, README roadmap #2) — the
@@ -237,7 +232,6 @@ def merge_with_index(
                         "materialized": True}},
         batch_id=batch_id,
         compact_files_per_bucket=compact_files_per_bucket,
-        max_retries=max_retries, retry_wait_s=retry_wait_s,
     )
 
 
@@ -295,25 +289,11 @@ def read_manifest_point_indexed(
         .collect()
     )
     buckets = {r[_BUCKET_COL] for r in posted}
-    spec = {k: base_m[k] for k in
-            ("bucket_cols", "num_buckets", "sort_cols", "schema_ddl")}
-    schema = spark.table(
-        mb._register(spark, root, table, base_m["version"], spec,
-                     base_m["generation"])
-    ).schema
-    if not buckets:
-        return spark.createDataFrame([], schema)
     # 2) base scan: ONLY the posted buckets' files, filter pushed down
-    gen_dir = os.path.join(mb._table_dir(root, table), base_m["generation"])
     files = [f for f in base_m["files"] if mb._file_bucket(f) in buckets]
-    df = mb._dv_filter(
-        spark,
-        spark.read.schema(schema).parquet(
-            *[os.path.join(gen_dir, f) for f in files]
-        ),
-        base_m,
+    return mb._read_files(spark, root, table, base_m, files).filter(
+        F.col(column) == F.lit(value)
     )
-    return df.filter(F.col(column) == F.lit(value))
 
 
 def indexed_lookup_files(

@@ -1,10 +1,12 @@
 """Ad-hoc per-query oracle parity check for newly added catalog queries.
 
-Usage: python scripts/check_new.py name1 name2 ... [--sf sf0.01]
-Uses the round-5 verification loop from the verify recipe (vanilla
-session, sorted-column repr compare against DuckDB).
+Usage: python scripts/check_new.py name1 name2 ... [--sf sf0.01 ...]
+(``--sf`` repeats, and ``--sf=sf0.01`` works too; default sf0.001 and
+sf0.01).  Uses the round-5 verification loop from the verify recipe
+(vanilla session, sorted-column repr compare against DuckDB).
 """
 
+import argparse
 import sys
 
 import duckdb
@@ -14,11 +16,12 @@ sys.path.insert(0, ".")
 from curw_mike_data_handler_spark import catalog  # noqa: E402
 from curw_mike_data_handler_spark.sources.tables import TABLES  # noqa: E402
 
-names = [a for a in sys.argv[1:] if not a.startswith("--")]
-sfs = [a.split("=", 1)[1] for a in sys.argv[1:] if a.startswith("--sf=")] or [
-    "sf0.001",
-    "sf0.01",
-]
+ap = argparse.ArgumentParser(description="oracle parity of catalog queries")
+ap.add_argument("names", nargs="+", help="catalog query names")
+ap.add_argument("--sf", action="append", help="scale, e.g. sf0.01 (repeatable)")
+args = ap.parse_args()
+names = args.names
+sfs = args.sf or ["sf0.001", "sf0.01"]
 
 spark = (
     SparkSession.builder.master("local[8]")

@@ -220,7 +220,7 @@ def test_mirror_create_is_crash_safe_and_pinned(spark, tmp_path, monkeypatch):
         mb.drop_catalog_entries(spark, root, "dst")
 
 
-def test_sync_serializes_on_mirror_claim(spark, tmp_path):
+def test_sync_serializes_on_mirror_claim(spark, tmp_path, monkeypatch):
     """Advisor regression (r11 medium): concurrent syncs of the same
     mirror must serialize — a live competitor's claim blocks (and
     raises once retries exhaust); a crashed sync's claim is taken
@@ -243,9 +243,12 @@ def test_sync_serializes_on_mirror_claim(spark, tmp_path):
         start = mb._proc_start_time(os.getpid())
         with open(claim, "w") as fh:
             fh.write(f"{os.getpid()} {start}")
-        with pytest.raises(mb.ConcurrentWriteError, match="mirror"):
-            mb.sync_manifest_mirror(spark, root, "dst", key_cols="k",
-                                    max_retries=1, retry_wait_s=0.01)
+        with monkeypatch.context() as mp, pytest.raises(
+            mb.ConcurrentWriteError, match="mirror"
+        ):
+            mp.setattr(mb, "_MAX_RETRIES", 1)
+            mp.setattr(mb, "_RETRY_WAIT_S", 0.01)
+            mb.sync_manifest_mirror(spark, root, "dst", key_cols="k")
         # a DEAD competitor (real pid, long exited): taken over, the
         # sync completes and converges
         with open(claim, "w") as fh:

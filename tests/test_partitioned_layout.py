@@ -618,7 +618,9 @@ def test_manifest_concurrent_appends_serialize_both_batches_land(spark, tmp_path
     assert not [f for f in os.listdir(mdir) if f.startswith("claim-")]
 
 
-def test_manifest_live_claim_blocks_and_dead_claim_is_taken_over(spark, tmp_path):
+def test_manifest_live_claim_blocks_and_dead_claim_is_taken_over(
+    spark, tmp_path, monkeypatch
+):
     """A claim held by a LIVE process blocks (ConcurrentWriteError once
     retries are exhausted); a claim whose owner pid is dead is crashed-
     writer debris and is taken over transparently."""
@@ -628,6 +630,7 @@ def test_manifest_live_claim_blocks_and_dead_claim_is_taken_over(spark, tmp_path
     from curw_mike_data_handler_spark.sources import manifest_bucketed as mb
 
     root = str(tmp_path)
+    monkeypatch.setattr(mb, "_RETRY_WAIT_S", 0.05)
     mb.create_manifest_table(
         spark, _mk_batch(spark, 0, 20), root, "cl",
         bucket_cols="k", num_buckets=2,
@@ -638,10 +641,10 @@ def test_manifest_live_claim_blocks_and_dead_claim_is_taken_over(spark, tmp_path
     # live claim (our own pid stands in for another live writer/thread)
     with open(claim, "w") as fh:
         fh.write(str(os.getpid()))
-    with pytest.raises(mb.ConcurrentWriteError):
+    with monkeypatch.context() as mp, pytest.raises(mb.ConcurrentWriteError):
+        mp.setattr(mb, "_MAX_RETRIES", 1)
         mb.append_manifest_table(
             spark, _mk_batch(spark, 100, 120), root, "cl",
-            max_retries=1, retry_wait_s=0.05,
         )
     assert mb.current_version(root, "cl") == 0  # nothing half-published
 
@@ -651,7 +654,7 @@ def test_manifest_live_claim_blocks_and_dead_claim_is_taken_over(spark, tmp_path
     with open(claim, "w") as fh:
         fh.write(str(proc.pid))
     v = mb.append_manifest_table(
-        spark, _mk_batch(spark, 100, 120), root, "cl", retry_wait_s=0.05
+        spark, _mk_batch(spark, 100, 120), root, "cl"
     )
     assert v == 1
     assert mb.read_manifest_table(spark, root, "cl").count() == 40
