@@ -112,14 +112,14 @@ def _local_result(spark, df):
     built a pickled-row RDD parallelized over the default parallelism,
     and each scan of it paid one Python-worker handshake per partition
     (measured 0.4-1.9 s per noop scan of a 21-row result).  Delegates
-    to streaming/replay's ``_rematerialize_local`` — one copy of the
-    Arrow path AND of its logged row-pickle fallback (review finding
-    r13: a silent second copy would drift)."""
-    from curw_mike_data_handler_spark.streaming.replay import (
-        _rematerialize_local,
+    to ``sources.local.rematerialize_local`` — one copy of the Arrow
+    path AND of its logged row-pickle fallback (review finding r13: a
+    silent second copy would drift)."""
+    from curw_mike_data_handler_spark.sources.local import (
+        rematerialize_local,
     )
 
-    return _rematerialize_local(spark, df)
+    return rematerialize_local(spark, df)
 
 
 

@@ -5,10 +5,12 @@ from cron/bash wrappers (inputs/gen_mike_input_rf_linux.py:224-276,
 outputs/extract_water_level.py:150-260, crontab.txt); this package is
 that surface on the Spark engine:
 
-    python -m curw_mike_data_handler_spark.jobs.rainfall  --help
-    python -m curw_mike_data_handler_spark.jobs.tide      --help
-    python -m curw_mike_data_handler_spark.jobs.discharge --help
-    python -m curw_mike_data_handler_spark.jobs.extract   --help
+    python -m curw_mike_data_handler_spark.jobs.rainfall         --help
+    python -m curw_mike_data_handler_spark.jobs.rf_obs           --help
+    python -m curw_mike_data_handler_spark.jobs.all_stations_raw --help
+    python -m curw_mike_data_handler_spark.jobs.tide             --help
+    python -m curw_mike_data_handler_spark.jobs.discharge        --help
+    python -m curw_mike_data_handler_spark.jobs.extract          --help
 
 Reproduced control-flow contracts:
 

@@ -31,6 +31,7 @@ from curw_mike_data_handler_spark.plans.all_stations_raw import (
 )
 from curw_mike_data_handler_spark.schemas import MIKE_RAINFALL_STATIONS
 from curw_mike_data_handler_spark.session import get_spark
+from curw_mike_data_handler_spark.sources.local import local_frame
 
 
 def read_mike_stations(path: str):
@@ -79,7 +80,7 @@ def main(argv: list[str] | None = None) -> int:
 
     print(f"{datetime.now()} start preparing mike rainfall input")
     spark = get_spark("job-all-stations-raw")
-    mike_stations = spark.createDataFrame(st_rows, MIKE_RAINFALL_STATIONS)
+    mike_stations = local_frame(spark, st_rows, MIKE_RAINFALL_STATIONS)
     result = prepare_all_stations_raw(
         spark,
         spark.read.parquet(a.sim_ts),

@@ -23,6 +23,7 @@ from curw_mike_data_handler_spark.plans.rainfall import (
 )
 from curw_mike_data_handler_spark.schemas import SB_RF_COEFFICIENTS
 from curw_mike_data_handler_spark.session import get_spark
+from curw_mike_data_handler_spark.sources.local import local_frame
 
 
 def read_coefficients(path: str):
@@ -54,7 +55,7 @@ def main(argv: list[str] | None = None) -> int:
     print(f"{datetime.now()} start preparing mike rainfall input")
     spark = get_spark("job-rainfall")
     coeff_rows, order = read_coefficients(a.coefficients)
-    coefficients = spark.createDataFrame(coeff_rows, SB_RF_COEFFICIENTS)
+    coefficients = local_frame(spark, coeff_rows, SB_RF_COEFFICIENTS)
     result = prepare_rainfall_input(
         spark,
         spark.read.parquet(a.sim_ts),

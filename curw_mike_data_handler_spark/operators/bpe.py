@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from curw_mike_data_handler_spark.sources.local import local_frame
+
 
 def _merge_rule(arr_col, left: str, right: str):
     """Leftmost-greedy application of one merge rule to a symbol
@@ -98,8 +100,8 @@ def bpe_train_merges(
         prev = words
         words = words.withColumn("arr", _merge_rule(F.col("arr"), l, r)).localCheckpoint()
         prev.unpersist()
-    return spark.createDataFrame(
-        merges, "round int, pair string, cnt long"
+    return local_frame(
+        spark, merges, "round int, pair string, cnt long"
     )
 
 

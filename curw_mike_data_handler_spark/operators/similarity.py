@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from curw_mike_data_handler_spark.sources.local import local_frame
+
 
 def as_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -439,7 +441,8 @@ def kmeans_assign(
         # One row, one array column: ships once per executor; the
         # nested fold below is the argmin loop a native engine would
         # compile, but expressed as data so the PLAN stays O(1).
-        cents = spark.createDataFrame(
+        cents = local_frame(
+            spark,
             [([{"cid": cid, "center": ctr} for cid, ctr in centroids],)],
             "cents array<struct<cid:int,center:array<double>>>",
         )

@@ -17,6 +17,7 @@ from curw_mike_data_handler_spark.schemas import (
     UNIT_DIM,
     VARIABLE_DIM,
 )
+from curw_mike_data_handler_spark.sources.local import local_frame
 from curw_mike_data_handler_spark.sources.upsert import ParquetMergeTable
 
 
@@ -60,14 +61,14 @@ def seed_dimensions(
     }
     tables["station"].merge(station_dim_from_seed(seed_stations))
     tables["source"].merge(
-        spark.createDataFrame([(1, model, version)], SOURCE_DIM)
+        local_frame(spark, [(1, model, version)], SOURCE_DIM)
     )
     tables["variable"].merge(
-        spark.createDataFrame(list(enumerate(variables, 1)), VARIABLE_DIM)
+        local_frame(spark, list(enumerate(variables, 1)), VARIABLE_DIM)
     )
     tables["unit"].merge(
-        spark.createDataFrame(
-            [(i, u, ut) for i, (u, ut) in enumerate(units, 1)], UNIT_DIM
+        local_frame(
+            spark, [(i, u, ut) for i, (u, ut) in enumerate(units, 1)], UNIT_DIM
         )
     )
     return tables

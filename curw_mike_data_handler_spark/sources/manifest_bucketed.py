@@ -70,6 +70,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from curw_mike_data_handler_spark.sources.local import local_frame
+
 _BUCKET_RE = re.compile(r"_(\d{5})(?:\.|$)")
 _TABLE_NAME_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 _FIELD_NAME_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -1281,7 +1283,7 @@ def _scan_files(
     empty list reads as an empty frame of that schema."""
     schema = spark.table(_register(spark, root, table, m)).schema
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     gen_dir = os.path.join(_table_dir(root, table), m["generation"])
     return spark.read.schema(schema).parquet(
         *[os.path.join(gen_dir, f) for f in files]
@@ -2314,7 +2316,7 @@ def _dv_filter(spark: SparkSession, df: DataFrame, manifest: dict) -> DataFrame:
     fcol, pcol = "_dv_file", "_dv_pos"
     while fcol in taken or pcol in taken:
         fcol, pcol = fcol + "_", pcol + "_"
-    dv_df = spark.createDataFrame(pairs, "dv_file string, dv_pos long")
+    dv_df = local_frame(spark, pairs, "dv_file string, dv_pos long")
     fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
     return (
         df.withColumn(fcol, fname)
@@ -3281,7 +3283,7 @@ def _step_changes(
     dv_deletes = None
     if pairs:
         files = sorted({f for f, _ in pairs})
-        dv_df = spark.createDataFrame(pairs, "dv_file string, dv_pos long")
+        dv_df = local_frame(spark, pairs, "dv_file string, dv_pos long")
         # collision-free temp names, same rule as _dv_filter: the DDL
         # admits user columns named _dv_file/_dv_pos, and withColumn
         # silently REPLACES an existing column (review finding)

@@ -8,11 +8,12 @@ The reference upserts forecast rows into MySQL with
 Three sinks:
 
 * ``ParquetMergeTable`` — lakehouse-style MERGE emulation over plain
-  parquet (no Delta in this container): anti-join the existing
-  partition state against the new keys, union, rewrite.  Idempotent
-  (re-applying the same batch is a fixpoint).  At 100 TB you'd use
-  Delta/Iceberg ``MERGE INTO`` with the same key contract; the
-  rewrite here is partition-scoped to keep the emulation honest.
+  parquet (no Delta in this container): anti-join the existing table
+  against the new keys, union, rewrite.  Idempotent (re-applying the
+  same batch is a fixpoint).  Every ``merge`` reads and overwrites
+  the WHOLE table, so its cost grows with the table, not the batch;
+  at 100 TB you'd use Delta/Iceberg ``MERGE INTO`` with the same key
+  contract.
 * ``jdbc_upsert_partition`` — MySQL parity path: batched
   ``INSERT … ON DUPLICATE KEY UPDATE`` from ``foreachPartition``
   (Spark's JDBC writer has no upsert mode).  Gated behind an
@@ -34,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from curw_mike_data_handler_spark.sources.local import local_frame
+
 
 class ParquetMergeTable:
     """A keyed parquet table with MERGE (upsert) writes.
@@ -51,7 +54,7 @@ class ParquetMergeTable:
 
     def read(self) -> DataFrame:
         if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
         return self.spark.read.schema(self.schema).parquet(self.path)
 
     def merge(self, updates: DataFrame) -> None:

@@ -39,6 +39,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from curw_mike_data_handler_spark.sources.local import rematerialize_local
+
 # Checkpoint I/O profile for EPHEMERAL (tempdir, deleted-after-run)
 # replay checkpoints — optimization round 12, guide §1.1/§2.1:
 #
@@ -164,33 +166,6 @@ def _feed_scaled_partitions(spark: SparkSession, src: str) -> int:
     return max(2, min(session_parts, (bytes_total // (4 << 20)) + 1))
 
 
-def _rematerialize_local(spark: SparkSession, sink: DataFrame) -> DataFrame:
-    """Copy the (bounded, driver-resident) memory-sink table into a
-    standalone local DataFrame so the sink can be dropped.
-
-    Arrow both ways (guide §4.1): ``toArrow()`` + ``createDataFrame``
-    over the Arrow table move the rows as columnar batches.  The
-    previous ``createDataFrame(sink.collect(), schema)`` pickled every
-    row one at a time through Py4J — measured 2–4 s per replay gate on
-    a 100–250k-row sink, i.e. a third of some gates' wall.  Falls back
-    to the row path for any type Arrow interchange cannot carry."""
-    try:
-        return spark.createDataFrame(sink.toArrow())
-    except Exception as exc:
-        # visible fallback (ADVICE r12): a silent drop to the row-
-        # pickle path would quietly re-introduce the 2-4 s/gate cost
-        # the Arrow path removed
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "replay sink Arrow rematerialization failed (%s: %s); "
-            "falling back to the row-pickle path",
-            type(exc).__name__,
-            exc,
-        )
-        return spark.createDataFrame(sink.collect(), sink.schema)
-
-
 def replay_file_stream(
     spark: SparkSession,
     df: DataFrame,
@@ -290,7 +265,7 @@ def replay_file_stream(
             before = set(os.listdir(src))
             # repartition(1), NOT coalesce(1): trailing files are tiny
             # literal/sentinel frames, and coalesce(1) over a
-            # createDataFrame(python-rows) relation folds its 32
+            # Python-rows (pickled RDD) relation folds its 32
             # parallelize partitions into ONE task that pays a Python
             # worker handshake PER PARTITION sequentially — measured
             # ~6 s per 2-row trailing write (guide §4 boundary cost in
@@ -382,7 +357,7 @@ def replay_file_stream(
                 dur[k] = dur.get(k, 0) + int(v)
         progress_out["duration_ms_sum"] = dur
     sink = spark.table(name)
-    result = _rematerialize_local(spark, sink)
+    result = rematerialize_local(spark, sink)
     spark.catalog.dropTempView(name)
     shutil.rmtree(base, ignore_errors=True)
     _phase("rematerialize_teardown")

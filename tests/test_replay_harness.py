@@ -7,9 +7,10 @@ machinery (``streaming/replay.py``):
   ephemeral-checkpoint I/O profile (FileSystemBased checkpoint file
   manager + checksum sidecars off) around gate/bench replays whose
   checkpoint is a throwaway tempdir, restoring prior session values.
-* ``_rematerialize_local`` — Arrow-based copy of the bounded memory
-  sink into a standalone local DataFrame (replacing the row-pickle
-  ``createDataFrame(sink.collect(), schema)`` path).
+* ``rematerialize_local`` (now in ``sources/local.py``) — Arrow-based
+  copy of the bounded memory sink into a standalone local DataFrame
+  (replacing the row-pickle ``createDataFrame(sink.collect(), schema)``
+  path).
 
 These tests pin the conf save/restore semantics, the env kill-switch,
 and value/schema identity of the Arrow re-materialization including
@@ -20,6 +21,7 @@ import datetime
 
 from pyspark.sql import types as T
 
+from curw_mike_data_handler_spark.sources.local import rematerialize_local
 from curw_mike_data_handler_spark.streaming import replay as rp
 
 
@@ -80,7 +82,7 @@ def _sink_df(spark):
 
 def test_rematerialize_matches_row_path(spark):
     sink = _sink_df(spark)
-    out = rp._rematerialize_local(spark, sink)
+    out = rematerialize_local(spark, sink)
     assert out.schema == sink.schema
     assert sorted(map(repr, out.collect())) == sorted(map(repr, sink.collect()))
 
@@ -92,7 +94,7 @@ def test_rematerialize_falls_back_to_row_path(spark, monkeypatch):
         raise RuntimeError("no arrow")
 
     monkeypatch.setattr(type(sink), "toArrow", boom, raising=True)
-    out = rp._rematerialize_local(spark, sink)
+    out = rematerialize_local(spark, sink)
     assert out.schema == sink.schema
     assert sorted(map(repr, out.collect())) == sorted(map(repr, sink.collect()))
 
