@@ -64,6 +64,7 @@ from curw_mike_data_handler_spark.operators.similarity import (
     embedding_neardup_pairs,
 )
 from curw_mike_data_handler_spark.operators.weighted import weighted_group_sum
+from curw_mike_data_handler_spark.sources.local import local_frame
 from curw_mike_data_handler_spark.sources.tables import load_table
 
 STEP_US = 900_000_000  # 15 minutes in microseconds
@@ -106,9 +107,9 @@ def _t(spark, sf_dir, name):
 def _local_result(spark, df):
     """Materialize a SMALL gate result as a driver-local DataFrame.
 
-    Arrow path (r13): ``createDataFrame(df.toArrow())`` plans as a
+    Arrow path (r13): a frame created from ``df.toArrow()`` plans as a
     pure-JVM LocalRelation, so every later scan of the result costs
-    ~nothing; the previous ``createDataFrame(df.collect(), schema)``
+    ~nothing; the previous frame over ``df.collect()`` Python rows
     built a pickled-row RDD parallelized over the default parallelism,
     and each scan of it paid one Python-worker handshake per partition
     (measured 0.4-1.9 s per noop scan of a 21-row result).  Delegates
@@ -1567,12 +1568,9 @@ c{r} AS (
 def ivf_kmeans_assign_q(spark, sf_dir):
     """IVF coarse quantizer: deterministic Lloyd's k-means over the
     embeddings (operators/similarity.kmeans_assign) — produces the
-    bucket column the blocked ANN/near-dup operators join on.  Runs
-    the bit-reproducible broadcast-fold strategy (deterministic
-    regardless of partitioning/batching — required for the exact
-    oracle hash); the Arrow strategy (vectorized mapInPandas with
-    fused per-cluster partial sums) remains the at-scale default and
-    is property-tested equivalent on separated data.
+    bucket column the blocked ANN/near-dup operators join on.  The
+    broadcast-centroid fold is deterministic regardless of
+    partitioning (required for the exact oracle hash).
     The oracle is the SAME fixed-iteration Lloyd's unrolled as DuckDB
     SQL (seed = 8 lowest ids; assign by L2 with cluster-id tie-break;
     update = per-dim mean; 3 rounds, output from the 3rd assignment).
@@ -1581,11 +1579,7 @@ def ivf_kmeans_assign_q(spark, sf_dir):
     from curw_mike_data_handler_spark.operators.similarity import kmeans_assign
 
     emb = _par(spark, _t(spark, sf_dir, "embeddings"))
-    # oracle-paired: pin the bit-reproducible broadcast fold so the
-    # hash compare rests on construction, not data-separation margins
-    # (the Arrow path's fused partial means depend on batch/combine
-    # order by ULPs — fine operationally, wrong for an exact oracle).
-    return kmeans_assign(emb, k=8, iterations=3, strategy="broadcast")
+    return kmeans_assign(emb, k=8, iterations=3)
 
 
 @query(
@@ -5733,11 +5727,7 @@ def semdedup_clusters(spark, sf_dir):
     # kmeans_assign returns a localCheckpoint-ed (id, cluster) frame,
     # so all four branches reuse the materialized rows without an extra
     # session-lifetime cache entry.
-    # strategy="broadcast": oracle-paired, so use the bit-reproducible
-    # fold (see ivf_kmeans_assign) rather than the Arrow default.
-    assigned = kmeans_assign(
-        emb, k=8, iterations=3, strategy="broadcast"
-    )  # (id, cluster)
+    assigned = kmeans_assign(emb, k=8, iterations=3)  # (id, cluster)
     clustered = emb.join(
         assigned, emb["vec_id"] == assigned["id"]
     ).select("vec_id", "embedding", "cluster")
@@ -5910,12 +5900,9 @@ def ann_topk_opq(spark, sf_dir):
     Scale shape: inherited unchanged from ann_topk_bucketed — the
     rotation/reconstruction are map-side expressions fused into the
     scan; the only shuffle is the bucket equi join.  At 100 TB the
-    corpus scan reads codes, not floats — and the map math runs the
-    Arrow engine (opq_rotate/pq_gain_shape_reconstruct
-    engine='arrow': one numpy matmul per batch, measured 10-30×
-    faster at 20k rows, float-noise-identical, sf1 probe records
-    recall parity); the fold engine used HERE exists for the DuckDB
-    bit-parity gate."""
+    corpus scan reads codes, not floats.  The map math is the
+    sequential JVM fold, the form the DuckDB bit-parity gate
+    replicates."""
     from curw_mike_data_handler_spark.operators.similarity import (
         opq_rotate,
         opq_signed_rows,
@@ -9204,7 +9191,7 @@ def skew_key_census(spark, sf_dir):
     many rows they carry, the largest key, and each bucket's share of
     all rows).  This is the measurement behind every salting/AQE
     decision in SCALE.md — run it BEFORE picking a join strategy on a
-    new key, exactly how tools/scale_probe.py sized the sf1 runs.
+    new key, as the sf1 runs recorded in BENCH_sf1.json were sized.
 
     Scale shape: one partial-aggregated hash(key) exchange (the same
     count the real workload would shuffle anyway), then a ≤64-row
@@ -9831,8 +9818,8 @@ def phrase_search_positional(spark, sf_dir):
     the corpus index is never scanned for other words (the word
     equi-join prunes at the shuffle)."""
     d = _t(spark, sf_dir, "documents")
-    spark_phrases = spark.createDataFrame(
-        [(p,) for p in _PHRASES], "phrase string"
+    spark_phrases = local_frame(
+        spark, [(p,) for p in _PHRASES], "phrase string"
     )
     ph = spark_phrases.select(
         "phrase",
@@ -11488,7 +11475,8 @@ def geo_point_in_catchment(spark, sf_dir):
         ("lower_basin", [(400, 400), (900, 450), (850, 950)]),
         ("coastal_strip", [(0, 700), (300, 650), (350, 980), (20, 990)]),
     ]
-    pdf = spark.createDataFrame(
+    pdf = local_frame(
+        spark,
         [(n, [{"x": x, "y": y} for x, y in vs]) for n, vs in polys],
         "name string, verts array<struct<x:long,y:long>>",
     )
@@ -12591,7 +12579,7 @@ def ranking_overlap(spark, sf_dir):
         .over(Window.orderBy(F.col("qty").desc(), F.col("l_partkey").asc()))
         .alias("rank_qty"),
     )
-    d = spark.createDataFrame([(10,), (25,), (50,), (100,)], "depth int")
+    d = local_frame(spark, [(10,), (25,), (50,), (100,)], "depth int")
     hit = F.when(
         (F.col("rank_rev") <= F.col("depth")) & (F.col("rank_qty") <= F.col("depth")),
         1,
@@ -12653,7 +12641,7 @@ def k_anonymity_census(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
     g = c.groupBy("c_nationkey", "c_mktsegment").agg(F.count("*").alias("sz"))
     tot = c.agg(F.count("*").alias("n_rows"))
-    ks = spark.createDataFrame([(2,), (5,), (10,), (20,)], "k int")
+    ks = local_frame(spark, [(2,), (5,), (10,), (20,)], "k int")
     risky = F.when(F.col("sz") < F.col("k"), 1).otherwise(0)
     risky_rows = F.when(F.col("sz") < F.col("k"), F.col("sz")).otherwise(0)
     return (
@@ -15111,7 +15099,8 @@ def transition_conformance_census(spark, sf_dir):
         F.lag("event_type").over(w).alias("prev"),
         F.col("event_type").alias("curr"),
     ).filter(F.col("prev").isNotNull())
-    allowed = spark.createDataFrame(
+    allowed = local_frame(
+        spark,
         [
             ("signup", "view"),
             ("signup", "click"),
@@ -15960,8 +15949,8 @@ def stream_interval_join_replay(spark, sf_dir):
 def _events_sentinel(spark, month: int):
     """Far-future watermark-flush sentinel for the interval-join
     replays: one 'view' + one 'purchase' row at 2024-<month>-01 with
-    user_id −1 (filtered from gate output).  JVM literal rows, not
-    createDataFrame(python rows): a pickled-row relation parallelizes
+    user_id −1 (filtered from gate output).  JVM literal rows, not a
+    frame over Python rows: a pickled-row relation parallelizes
     over 32 partitions and its trailing-file write then pays a Python
     worker handshake per partition (~6 s for 2 rows, measured r13);
     two literal rows plan as a pure-JVM project with zero Python
@@ -16755,7 +16744,7 @@ def stream_shred_ingest_replay(spark, sf_dir):
     try:
         feed.repartition(3).write.parquet(src)
         mb.create_manifest_table(
-            spark, spark.createDataFrame([], feed.schema), root, "ev_ing",
+            spark, local_frame(spark, [], feed.schema), root, "ev_ing",
             bucket_cols="user_id", num_buckets=4,
             shred={"column": "payload", "fields": {"k": "bigint",
                                                    "c": "bigint"}},
@@ -17034,7 +17023,7 @@ def stream_cow_upsert_replay(spark, sf_dir):
         for i, f in enumerate(parts):
             os.utime(os.path.join(src, f), (t0 + i, t0 + i))
         mb.create_manifest_table(
-            spark, spark.createDataFrame([], ev.schema), root, "state",
+            spark, local_frame(spark, [], ev.schema), root, "state",
             bucket_cols="user_id", num_buckets=4,
         )
         stream = (
@@ -17910,7 +17899,8 @@ def manifest_index_point_lookup(spark, sf_dir):
         )
         # junk OUTSIDE the transaction: same custkeys, absurd sums —
         # invisible to the txn-atomic indexed lookup by contract
-        junk = spark.createDataFrame(
+        junk = local_frame(
+            spark,
             [(10_000_000_000 + i, int(ck), 10_000_000_000)
              for i, ck in enumerate(probe_keys)],
             "o_orderkey long, o_custkey long, pc long",
@@ -17924,7 +17914,7 @@ def manifest_index_point_lookup(spark, sf_dir):
             )
             rows.extend(got.select("o_custkey", "pc").collect())
         out = (
-            spark.createDataFrame(rows, "o_custkey long, pc long")
+            local_frame(spark, rows, "o_custkey long, pc long")
             .groupBy("o_custkey")
             .agg(
                 F.count("*").alias("n_rows"),
@@ -18025,7 +18015,8 @@ def manifest_index_merge_lookup(spark, sf_dir):
             F.lit(999000001).cast("long").alias("o_custkey"),
             (F.col("pc") + F.lit(7)).alias("pc"),
         )
-        inserted = spark.createDataFrame(
+        inserted = local_frame(
+            spark,
             [(910000001, 999000002, 101),
              (910000002, 999000002, 202),
              (910000003, 999000002, 303)],
@@ -18039,7 +18030,8 @@ def manifest_index_merge_lookup(spark, sf_dir):
         )
         # junk OUTSIDE the transaction under the post-merge custkeys:
         # invisible to the txn-atomic indexed lookup by contract
-        junk = spark.createDataFrame(
+        junk = local_frame(
+            spark,
             [(920000001, 999000001, 10_000_000_000),
              (920000002, 999000002, 10_000_000_000)],
             "o_orderkey long, o_custkey long, pc long",
@@ -18053,7 +18045,7 @@ def manifest_index_merge_lookup(spark, sf_dir):
             )
             rows.extend(got.select("o_custkey", "pc").collect())
         out = (
-            spark.createDataFrame(rows, "o_custkey long, pc long")
+            local_frame(spark, rows, "o_custkey long, pc long")
             .groupBy(F.col("o_custkey").alias("lookup_custkey"))
             .agg(
                 F.count("*").alias("n_rows"),

@@ -36,7 +36,8 @@ def merge_rollup_states(
     """Fold partial states into the maintained aggregate: union +
     one grouped sum per merge — never touches base data.  With the
     state table bucketed on ``keys`` the exchange disappears
-    entirely (see sources/bucketed.py)."""
+    entirely (sources/manifest_bucketed.py keeps that bucket spec
+    across appends)."""
     out = states[0]
     for delta in states[1:]:
         out = (

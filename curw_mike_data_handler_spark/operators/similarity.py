@@ -16,8 +16,6 @@
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -371,7 +369,6 @@ def kmeans_assign(
     iterations: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    strategy: str = "arrow",
 ) -> DataFrame:
     """Deterministic Lloyd's k-means → (id, cluster): the IVF coarse
     quantizer that produces the bucket column ann_topk_bucketed /
@@ -388,26 +385,9 @@ def kmeans_assign(
     The per-round collect is k×dim doubles (the centroids), not data —
     the standard iterative-algorithm driver loop.
 
-    Three assignment strategies, identical output on separated data
-    (first-minimum = lowest centroid-id tie-break in all three;
-    property-tested equal):
-
-    * ``"arrow"`` (default): Arrow-batched ``mapInPandas`` — each
-      batch becomes one ``X`` matrix and the k distances are a single
-      vectorized ``(X−C)²`` reduction; per-cluster partial sums come
-      back from the same pass, so a round is ONE scan, a tiny
-      (batches×k)-row shuffle, and a k×dim collect.  This is the
-      SIMD path a native engine would take (~5× the HOF fold here);
-      summation order differs from the sequential fold by ULPs, which
-      only matters for exactly-equidistant points.
-    * ``"broadcast"``: zero-Python witness — the centroids travel as
-      DATA (one broadcast row of ``array<struct<cid, center>>``),
-      argmin as a higher-order fold.  Plan size independent of k·dim.
-    * ``"literal"``: k literal-array distance columns in the plan.
-      Plan grows O(k·dim) per round — only for tiny k, kept as the
-      parity witness for the other two."""
-    if strategy not in ("arrow", "broadcast", "literal"):
-        raise ValueError(f"unknown kmeans_assign strategy: {strategy!r}")
+    Assignment is zero-Python: the centroids travel as DATA (one
+    broadcast row of ``array<struct<cid, center>>``) and the argmin is
+    a higher-order fold, so the plan size is independent of k·dim."""
     spark = corpus.sparkSession
     vecs = corpus.select(
         F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")
@@ -417,27 +397,7 @@ def kmeans_assign(
         for i, r in enumerate(vecs.orderBy("id").limit(k).collect())
     ]
 
-    def dist2(vec: Column, center: list[float]) -> Column:
-        c = F.array(*[F.lit(x) for x in center])
-        return F.aggregate(
-            F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def assign_literal(centroids):
-        d = vecs
-        for cid, center in centroids:
-            d = d.withColumn(f"__d{cid}", dist2(F.col("v"), center))
-        dist_arr = F.array(*[F.col(f"__d{cid}") for cid, _ in centroids])
-        return d.select(
-            "id",
-            "v",
-            (F.array_position(dist_arr, F.array_min(dist_arr)).cast("int") - 1)
-            .alias("cluster"),
-        )
-
-    def assign_broadcast(centroids):
+    def assign(centroids):
         # One row, one array column: ships once per executor; the
         # nested fold below is the argmin loop a native engine would
         # compile, but expressed as data so the PLAN stays O(1).
@@ -447,8 +407,7 @@ def kmeans_assign(
             "cents array<struct<cid:int,center:array<double>>>",
         )
         # struct ordering is lexicographic (d2, then cid), so
-        # array_min IS "nearest centroid, lowest-cid tie-break" — the
-        # same total order the literal path's first-minimum gives.
+        # array_min IS "nearest centroid, lowest-cid tie-break".
         scored = F.transform(
             F.col("cents"),
             lambda c: F.struct(
@@ -465,65 +424,7 @@ def kmeans_assign(
             .select("id", "v", F.array_min(scored)["cid"].alias("cluster"))
         )
 
-    def _np_cents(centroids):
-        import numpy as np
-
-        return (
-            np.array([c for _, c in centroids], dtype="float64"),
-            np.array([cid for cid, _ in centroids], dtype="int64"),
-        )
-
-    def assign_arrow(centroids):
-        import numpy as np
-        import pandas as pd
-
-        C, cids = _np_cents(centroids)
-
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf["v"].to_numpy())
-                d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-                cl = cids[np.argmin(d2, axis=1)]
-                yield pd.DataFrame({"id": pdf["id"], "cluster": cl.astype("int32")})
-
-        return vecs.mapInPandas(fn, "id long, cluster int")
-
-    def round_means_arrow(centroids):
-        """Fused assign + per-cluster partial sums in ONE Arrow pass:
-        each batch emits ≤k rows of (cluster, n, Σvec); the exchange
-        carries batches×k tiny rows, never the data."""
-        import numpy as np
-        import pandas as pd
-
-        C, cids = _np_cents(centroids)
-
-        def fn(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf["v"].to_numpy())
-                d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-                idx = np.argmin(d2, axis=1)
-                cs, ns, ss = [], [], []
-                for j in range(len(cids)):
-                    mask = idx == j
-                    if mask.any():
-                        cs.append(int(cids[j]))
-                        ns.append(int(mask.sum()))
-                        ss.append([float(x) for x in X[mask].sum(axis=0)])
-                yield pd.DataFrame({"cluster": cs, "n": ns, "s": ss})
-
-        partials = vecs.mapInPandas(fn, "cluster int, n long, s array<double>")
-        return (
-            partials.select("cluster", "n", F.posexplode("s").alias("dim", "sx"))
-            .groupBy("cluster", "dim")
-            .agg((F.sum("sx") / F.sum("n")).alias("m"))
-            .collect()
-        )
-
-    def round_means_hof(assigned):
+    def round_means(assigned):
         # ONE narrow shuffle on (cluster, dim); the k×dim mean rows are
         # the per-round collect, assembled into centers driver-side
         # (cheaper than a second exchange just to re-array them).
@@ -534,21 +435,15 @@ def kmeans_assign(
             .collect()
         )
 
-    assign = {
-        "arrow": assign_arrow,
-        "broadcast": assign_broadcast,
-        "literal": assign_literal,
-    }[strategy]
     # the returned assignment uses the centroids after iterations-1
     # updates, so the last round needs NO mean job — computing it would
     # be a full wasted pass (its update could never be observed).
-    # Driver-side centroid canonicalization: every strategy's mean
-    # reaches the driver as a double whose LAST ULPs depend on
-    # partition/batch combine order (Arrow partial sums, hof avg
-    # merges).  Snapping each mean to a fixed 1e-9 grid collapses that
-    # fold-order noise, so the NEXT round's assignments — and hence the
-    # final output — are identical under any repartitioning for all
-    # three strategies (property-tested with a repartition
+    # Driver-side centroid canonicalization: each mean reaches the
+    # driver as a double whose LAST ULPs depend on the partition
+    # combine order of the avg merges.  Snapping each mean to a fixed
+    # 1e-9 grid collapses that fold-order noise, so the NEXT round's
+    # assignments — and hence the final output — are identical under
+    # any repartitioning (property-tested with a repartition
     # perturbation).  1e-9 is ~1e6 ULPs above double noise yet far
     # below any real assignment margin.
     def _quant(m: float) -> float:
@@ -564,13 +459,8 @@ def kmeans_assign(
         return math.floor(m * 1e9 + 0.5) / 1e9
 
     for it in range(iterations - 1):
-        mean_rows = (
-            round_means_arrow(centroids)
-            if strategy == "arrow"
-            else round_means_hof(assign(centroids))
-        )
         by_cluster: dict[int, dict[int, float]] = {}
-        for r in mean_rows:
+        for r in round_means(assign(centroids)):
             by_cluster.setdefault(r["cluster"], {})[r["dim"]] = r["m"]
         centroids = sorted(
             (cid, [_quant(dims[d]) for d in sorted(dims)])
@@ -662,43 +552,16 @@ def _matrix_literal(rows: list[list[float]], dialect: str = "spark") -> str:
     )
 
 
-def opq_rotate(
-    vec: Column | str, rows: list[list[float]], engine: str = "fold"
-) -> Column:
-    """HD rotation: element j = (1/√dim)·⟨vec, rows[j]⟩.
-
-    ``engine='fold'`` (default, the ORACLE path): sequential
-    JVM-interpreted fold — bit-identical to DuckDB's
-    list_dot_product, which is what lets the gate compare exactly.
-    ``engine='arrow'`` (the SCALE path): one Arrow-batched numpy
-    matmul per batch (BLAS) — ~40× faster per row (sf1 probe), at the
-    price of pairwise-summation ULP differences vs the fold.  Ranking
-    is done on 6-dp-rounded cosines, so the two engines agree on
-    results except on exact rounding-boundary ties; pick fold for
-    cross-engine exactness, arrow for a 100 TB corpus."""
+def opq_rotate(vec: Column | str, rows: list[list[float]]) -> Column:
+    """HD rotation: element j = (1/√dim)·⟨vec, rows[j]⟩, as a
+    sequential JVM-interpreted fold — bit-identical to DuckDB's
+    list_dot_product, which is what lets the gate compare exactly."""
     import math
 
     dim = len(rows)
     scale = 1.0 / math.sqrt(dim)
     if scale != 2.0 ** round(math.log2(scale)):
         raise ValueError(f"1/√{dim} is not a power of two — rotation would not be exact")
-    if engine == "arrow":
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import ArrayType, DoubleType
-
-        m_t = (np.array(rows) * scale).T  # (dim, dim), multiply exact
-
-        @pandas_udf(ArrayType(DoubleType()))
-        def _rot(s: pd.Series) -> pd.Series:
-            x = np.stack(s.to_numpy())  # (batch, dim) float32/64
-            out = x.astype(np.float64) @ m_t
-            return pd.Series(list(out))
-
-        c = F.col(vec) if isinstance(vec, str) else vec
-        return _rot(c)
-    if engine != "fold":
-        raise ValueError(f"unknown opq_rotate engine {engine!r}")
     v = as_double_array(vec)
     mat = F.expr(_matrix_literal(rows))
     return F.transform(
@@ -713,8 +576,7 @@ def opq_rotate(
 
 
 def pq_gain_shape_reconstruct(
-    rv: Column | str, *, n_subspaces: int = 8, sub_dim: int = 8,
-    engine: str = "fold",
+    rv: Column | str, *, n_subspaces: int = 8, sub_dim: int = 8
 ) -> Column:
     """Decode-after-encode of the gain-shape product quantizer, in one
     expression (the code words never materialize — ADC ranks against
@@ -724,39 +586,7 @@ def pq_gain_shape_reconstruct(
     exact sixteenths), shape_i = sign(x_i); x̂_i = gain_s · shape_i.
 
     snap16(x) = floor(x·16 + 0.5)/16 — floor+½ rather than a banker's
-    round so both engines agree at grid boundaries.
-
-    ``engine``: same split as opq_rotate — 'fold' for the oracle-exact
-    sequential HOF form, 'arrow' for the vectorized numpy form."""
-    if engine == "arrow":
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import ArrayType, DoubleType
-
-        m, sub = n_subspaces, sub_dim
-
-        @pandas_udf(ArrayType(DoubleType()))
-        def _rec(s: pd.Series) -> pd.Series:
-            x = np.stack(s.to_numpy()).astype(np.float64)
-            if x.shape[1] != m * sub:
-                # the fold engine yields NULLs past m·sub; silently
-                # returning np.empty garbage there would be far worse —
-                # reject the mismatch outright
-                raise ValueError(
-                    f"gain-shape expects dim {m * sub}, got {x.shape[1]}"
-                )
-            out = np.empty_like(x)
-            for k in range(m):
-                sl = x[:, k * sub : (k + 1) * sub]
-                g = np.floor((np.abs(sl).sum(axis=1) / sub) * 16.0 + 0.5) / 16.0
-                out[:, k * sub : (k + 1) * sub] = (
-                    g[:, None] * np.where(sl >= 0, 1.0, -1.0)
-                )
-            return pd.Series(list(out))
-
-        return _rec(F.col(rv) if isinstance(rv, str) else rv)
-    if engine != "fold":
-        raise ValueError(f"unknown pq_gain_shape_reconstruct engine {engine!r}")
+    round so Spark and the DuckDB oracle agree at grid boundaries."""
     c = F.col(rv) if isinstance(rv, str) else rv
     gains = F.transform(
         F.sequence(F.lit(0), F.lit(n_subspaces - 1)),

@@ -25,7 +25,11 @@ strict at every JIT tier).
 The option is driver-only: executors on a real cluster keep C2.  A
 long-lived caller (a bench double pass, an interactive session) gets
 C2 back by passing its own ``spark.driver.extraJavaOptions`` through
-``extra_conf``, which replaces this one; ``bench.py`` does so.  Like
+``extra_conf``, which replaces this one; ``bench.py`` does so.  The
+same option string keeps the tiered JVM's 240 MiB code cache: with C1
+alone HotSpot reserves only 48 MiB, and the test session filled that
+within a minute, after which the JVM disabled its compiler and failed
+with ``Out of space in CodeCache for method handle intrinsic``.  Like
 every JVM option it applies only when ``get_spark`` launches the JVM,
 not to a JVM already running in the process.
 """
@@ -72,8 +76,12 @@ _BASE_CONF = {
     # (strings→double with junk rows); the engine validates explicitly.
     "spark.sql.ansi.enabled": "false",
     # C1 only: a cron job's JVM dies long before C2's recompilation of
-    # Catalyst/Janino/Spark code pays back (see the module docstring)
-    "spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=1",
+    # Catalyst/Janino/Spark code pays back; the code cache keeps the
+    # tiered default, reserved and committed only as code is compiled
+    # (see the module docstring)
+    "spark.driver.extraJavaOptions": (
+        "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
+    ),
 }
 
 

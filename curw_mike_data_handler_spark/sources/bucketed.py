@@ -74,136 +74,11 @@ def enable_sorted_scan_ordering(spark: SparkSession, on: bool = True) -> None:
     only holds for ONE file per bucket — with more, the scan would
     need a task-side merge that can cost more than re-sorting.  The
     layouts here qualify by construction: write_bucketed clusters to
-    one file per bucket, and append_bucketed/manifest compaction
-    restore that shape on cadence (between compactions Spark simply
-    stops claiming the order and plans the Sort again — correctness
-    never depends on the flag)."""
+    one file per bucket, and the manifest layer's compaction
+    (sources/manifest_bucketed.py) restores that shape on cadence
+    (between compactions Spark simply stops claiming the order and
+    plans the Sort again — correctness never depends on the flag)."""
     spark.conf.set(
         "spark.sql.legacy.bucketedTableScan.outputOrdering",
         "true" if on else "false",
     )
-
-
-def _bucket_spec(spark: SparkSession, table: str) -> tuple[list[str], int, list[str], str]:
-    """(bucket_cols, num_buckets, sort_cols, location) from the catalog
-    — the source of truth an append must match."""
-    import re
-
-    rows = {r["col_name"]: r["data_type"]
-            for r in spark.sql(f"DESCRIBE EXTENDED {table}").collect()}
-    # a non-bucketed table has no 'Num Buckets' row at all — report
-    # that as the empty spec so append_bucketed can raise its explicit
-    # error instead of an opaque KeyError
-    n = int(rows["Num Buckets"]) if "Num Buckets" in rows else 0
-    cols = re.findall(r"`([^`]+)`", rows.get("Bucket Columns", ""))
-    sort = re.findall(r"`([^`]+)`", rows.get("Sort Columns", ""))
-    loc = rows["Location"]
-    return cols, n, sort, loc
-
-
-def _files_per_bucket(location: str) -> dict[int, int]:
-    """Bucket id → file count, from the bucket id Spark embeds in every
-    bucketed file name (``part-...._NNNNN.c000...``).
-
-    Driver-local filesystems only: for a remote location (hdfs://,
-    s3a://, …) this returns {} and logs a warning — the caller's
-    compaction trigger then never fires, which must be VISIBLE, not
-    silent (run compaction on a schedule there, or move the table to a
-    lakehouse format whose maintenance is native)."""
-    import logging
-    import os
-    import re
-
-    if "://" in location and not location.startswith("file://"):
-        logging.getLogger(__name__).warning(
-            "append_bucketed file-count maintenance needs a local table "
-            "location; %s is remote — compaction will never "
-            "auto-trigger, schedule it explicitly",
-            location,
-        )
-        return {}
-    path = location.removeprefix("file://") if location.startswith("file://") \
-        else location.removeprefix("file:")
-    out: dict[int, int] = {}
-    if not os.path.isdir(path):
-        return out
-    for f in os.listdir(path):
-        m = re.search(r"_(\d{5})(?:\.|$)", f)
-        if f.startswith("part-") and m:
-            b = int(m.group(1))
-            out[b] = out.get(b, 0) + 1
-    return out
-
-
-def append_bucketed(
-    spark: SparkSession,
-    df: DataFrame,
-    table: str,
-    *,
-    compact_files_per_bucket: int = 8,
-) -> bool:
-    """Incrementally append ``df`` to an existing bucketed table,
-    keeping the layout merge-friendly (SURVEY roadmap r9 #7).
-
-    Each append writes one file per (bucket, task) under the table's
-    OWN bucket spec (validated from the catalog first — a mismatched
-    spec would silently poison every downstream zero-exchange join, so
-    it raises instead).  Bucketed appends accumulate small files: once
-    any bucket holds more than ``compact_files_per_bucket`` files, the
-    table is compacted — rewritten through one shuffle into fresh
-    single-file-per-bucket form and swapped in (write-to-side +
-    rename; the swap is not atomic across readers, which is the
-    documented trade of a filesystem catalog — for snapshot-isolated
-    appends and an atomic pointer-swap compaction use the manifest
-    twin, sources/manifest_bucketed.py).  Returns True when a
-    compaction ran.
-
-    Scale shape: the append itself is ONE shuffle of just the new
-    batch (cluster-by into the bucket spec); compaction is a full
-    rewrite amortized over ``compact_files_per_bucket`` appends, the
-    classic LSM-style trade.  Join plans before and after stay
-    exchange-free (plan-guarded in tests/test_partitioned_layout.py)."""
-    cols, n, sort, loc = _bucket_spec(spark, table)
-    if not cols:
-        raise ValueError(f"{table} is not a bucketed table")
-    missing = [c for c in cols + sort if c not in df.columns]
-    if missing:
-        raise ValueError(
-            f"append to {table} is missing bucket/sort columns {missing}"
-        )
-    # cluster the batch into the bucket spec: one new file per bucket
-    # per append (see write_bucketed), so file growth is exactly one
-    # generation per append and the compaction cadence is predictable
-    writer = (
-        df.repartition(n, *cols)
-        .write.format("parquet").mode("append").bucketBy(n, *cols)
-    )
-    if sort:
-        writer = writer.sortBy(*sort)
-    writer.saveAsTable(table)
-
-    per_bucket = _files_per_bucket(loc)
-    if not per_bucket or max(per_bucket.values()) <= compact_files_per_bucket:
-        return False
-    side = f"{table}__compacting"
-    spark.sql(f"DROP TABLE IF EXISTS {side}")
-    # read the RAW files, not the catalog table: a catalog read claims
-    # HashPartitioning(bucket cols, n), so the optimizer ELIDES the
-    # re-clustering repartition below — and then the adaptive
-    # autoBucketedScan (which disables bucketed scans no operator
-    # needs) runs a plain size-split multi-file scan whose tasks mix
-    # buckets, fanning the "compacted" write back out to many files
-    # per bucket.  The raw read carries no partitioning claim, so the
-    # shuffle genuinely runs and each task = one bucket = one file.
-    full = (
-        spark.read.schema(spark.table(table).schema)
-        .parquet(loc)
-        .repartition(n, *cols)
-    )
-    w2 = full.write.format("parquet").mode("overwrite").bucketBy(n, *cols)
-    if sort:
-        w2 = w2.sortBy(*sort)
-    w2.saveAsTable(side)
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {side} RENAME TO {table}")
-    return True

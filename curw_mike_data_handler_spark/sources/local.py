@@ -15,8 +15,7 @@ construction, and no scan of it ever starts a Python worker.
   LocalRelation, with a LOGGED row-pickle fallback.
 
 Every Python-rows ``createDataFrame`` in the package goes through this
-module (``catalog.py`` excepted); ``tests/test_local_frames.py`` checks
-that statically.
+module; ``tests/test_local_frames.py`` checks that statically.
 """
 
 from __future__ import annotations

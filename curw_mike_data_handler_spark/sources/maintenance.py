@@ -41,46 +41,3 @@ def retention_sweep(
             if not dry_run:
                 shutil.rmtree(os.path.join(table_path, entry))
     return dropped
-
-
-def compact_partition(
-    spark,
-    partition_path: str,
-    *,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files: int = 2,
-) -> int:
-    """Small-files compaction: rewrite a partition directory into
-    ~``target_file_bytes`` parquet files via an atomic staging swap.
-
-    Streaming/cron ingestion (file_watch + upsert) accretes one file
-    per tick; at 100 TB the resulting millions of tiny files dominate
-    scan planning time and kill scan throughput.  Compaction is the
-    standard companion job (Delta OPTIMIZE / Iceberg rewrite_data_files
-    do the same).  Returns the new file count (0 = skipped: already
-    compact)."""
-    import os
-    import shutil
-
-    files = [
-        f
-        for f in os.listdir(partition_path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
-    if len(files) < min_files:
-        return 0
-    total = sum(os.path.getsize(os.path.join(partition_path, f)) for f in files)
-    n_out = max(1, -(-total // target_file_bytes))  # ceil-div
-
-    staging = partition_path.rstrip("/") + "__compact_staging"
-    (
-        spark.read.parquet(partition_path)
-        .repartition(int(n_out))
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    backup = partition_path.rstrip("/") + "__compact_old"
-    os.rename(partition_path, backup)
-    os.rename(staging, partition_path)
-    shutil.rmtree(backup)
-    return int(n_out)

@@ -1,8 +1,6 @@
 """Manifest-published bucketed tables: snapshot-isolated appends and
-an ATOMIC compaction swap on top of the plain bucketed layout
-(post-drain roadmap #4 — the lakehouse-grade upgrade of
-``sources/bucketed.append_bucketed``, whose DROP+RENAME swap is
-documented as non-atomic for concurrent readers).
+an ATOMIC compaction swap on top of the plain bucketed layout of
+``sources/bucketed.py`` (post-drain roadmap #4).
 
 The design is the minimal Iceberg-shaped core, built from three
 primitives the local filesystem already gives us:
@@ -23,7 +21,7 @@ primitives the local filesystem already gives us:
 * **an atomically swapped pointer** — ``LATEST`` names the current
   manifest and is replaced via write-temp + ``os.replace`` (atomic on
   POSIX): every reader sees either the old snapshot or the new one,
-  never a mixture and never a missing table (the failure mode of the
+  never a mixture and never a missing table (the failure mode of a
   DROP TABLE + RENAME swap).
 
 Time travel falls out for free: ``read(version=k)`` resolves
@@ -52,11 +50,10 @@ keep the bucketed output partitioning and same-spec joins stay
 exchange-free — the whole point of the layout (plan-guarded in
 tests/test_partitioned_layout.py).
 
-Local/POSIX scope (same policy as bucketed._files_per_bucket): hard
-links and atomic replace need one local filesystem.  On an object
-store this module's job is done natively by a table format
-(Iceberg/Delta); the manifest/pointer/expire shape here is exactly
-that contract scaled down.
+Local/POSIX scope: hard links and atomic replace need one local
+filesystem.  On an object store this module's job is done natively by
+a table format (Iceberg/Delta); the manifest/pointer/expire shape here
+is exactly that contract scaled down.
 """
 
 from __future__ import annotations
@@ -1277,10 +1274,13 @@ def _scan_files(
 ) -> DataFrame:
     """Raw parquet scan of ``files`` (names in snapshot ``m``'s
     generation) under m's registered schema — a FILE scan, so
-    ``_metadata`` resolves, and no catalog bucketing claim that would
-    let the optimizer elide a re-clustering shuffle (the
-    autoBucketedScan trap documented in bucketed.append_bucketed).  An
-    empty list reads as an empty frame of that schema."""
+    ``_metadata`` resolves, and no catalog bucketing claim.  A catalog
+    read claims HashPartitioning(bucket cols, n), so the optimizer
+    elides a re-clustering repartition on top of it — and then the
+    adaptive autoBucketedScan (which disables bucketed scans no
+    operator needs) runs a plain size-split scan whose tasks mix
+    buckets, fanning a "compacted" write back out to many files per
+    bucket.  An empty list reads as an empty frame of that schema."""
     schema = spark.table(_register(spark, root, table, m)).schema
     if not files:
         return local_frame(spark, [], schema)
@@ -1500,8 +1500,8 @@ def append_manifest_table(
 
     Scale shape: the append shuffles ONLY the new batch (one clustered
     exchange); linking is O(existing files) metadata work; compaction
-    is the amortized full rewrite, exactly as in append_bucketed — but
-    the swap is now a pointer replace, not a catalog rename."""
+    is the amortized full rewrite, published by a pointer replace, not
+    a catalog rename."""
     prev, landed = _claim_next(root, table, batch_id=batch_id)
     if landed is not None:
         return landed

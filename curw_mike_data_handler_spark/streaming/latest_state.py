@@ -46,6 +46,20 @@ OUTPUT_SCHEMA = "key string, version long, value double"
 _STATE_SCHEMA = "version long, value double"
 
 
+def _newest(pdfs) -> tuple[int, float] | None:
+    """(version, value) of the newest version across one key's batch
+    of pandas frames; ``None`` when the batch holds no rows."""
+    best_v, best_x = None, None
+    for pdf in pdfs:
+        if not len(pdf):
+            continue
+        i = pdf["version"].idxmax()
+        v, x = int(pdf["version"][i]), float(pdf["value"][i])
+        if best_v is None or v > best_v:
+            best_v, best_x = v, x
+    return None if best_v is None else (best_v, best_x)
+
+
 class LatestVersionProcessor(StatefulProcessor):
     """Keyed argmax-by-version: ValueState holds (version, value);
     a batch emits at most one row per key — the newest version seen —
@@ -57,16 +71,10 @@ class LatestVersionProcessor(StatefulProcessor):
     def handleInputRows(self, key, rows, timerValues):  # noqa: N802
         import pandas as pd
 
-        best_v, best_x = None, None
-        for pdf in rows:
-            if not len(pdf):
-                continue
-            i = pdf["version"].idxmax()
-            v, x = int(pdf["version"][i]), float(pdf["value"][i])
-            if best_v is None or v > best_v:
-                best_v, best_x = v, x
-        if best_v is None:
+        newest = _newest(rows)
+        if newest is None:
             return iter(())
+        best_v, best_x = newest
         if self._state.exists():
             cur_v, _ = self._state.get()
             if best_v <= cur_v:
@@ -108,16 +116,10 @@ def latest_version_stream_apws(
     def fn(key, pdfs, state):
         import pandas as pd
 
-        best_v, best_x = None, None
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            i = pdf["version"].idxmax()
-            v, x = int(pdf["version"][i]), float(pdf["value"][i])
-            if best_v is None or v > best_v:
-                best_v, best_x = v, x
-        if best_v is None:
+        newest = _newest(pdfs)
+        if newest is None:
             return
+        best_v, best_x = newest
         if state.exists:
             (cur_v, _cur_x) = state.get
             if best_v <= cur_v:

@@ -126,97 +126,6 @@ def test_static_overwrite_truncates_whole_table(spark, sf_dir, tmp_path):
     assert left == [days[0]]
 
 
-def test_append_bucketed_keeps_zero_exchange_join_and_bounds_files(spark):
-    """Incremental bucketed maintenance (r9 roadmap #7): N appends keep
-    the SAME exchange-free join plan as a fresh write, file count per
-    bucket stays bounded by the compaction threshold, and compaction
-    preserves every row."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from curw_mike_data_handler_spark.sources.bucketed import (
-        _bucket_spec,
-        _files_per_bucket,
-        append_bucketed,
-        read_bucketed,
-        write_bucketed,
-    )
-
-    def join_plan():
-        joined = read_bucketed(spark, "bk_fact").join(
-            read_bucketed(spark, "bk_dim"), "k"
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain()
-        return joined, buf.getvalue()
-
-    base = spark.range(0, 2_000).selectExpr("id AS k", "id * 2 AS v")
-    dim = spark.range(0, 2_000).selectExpr("id AS k", "id * 3 AS w")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(base, "bk_fact", bucket_cols="k", num_buckets=4,
-                       sort_cols="k")
-        write_bucketed(dim, "bk_dim", bucket_cols="k", num_buckets=4,
-                       sort_cols="k")
-
-        # 3 appends under the threshold: no compaction, plan unchanged
-        for i in range(1, 4):
-            batch = spark.range(2_000 * i, 2_000 * (i + 1)).selectExpr(
-                "id AS k", "id * 2 AS v"
-            )
-            compacted = append_bucketed(
-                spark, batch, "bk_fact", compact_files_per_bucket=8
-            )
-            assert compacted is False
-        joined, plan = join_plan()
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "Bucketed: true" in plan
-        assert joined.count() == 2_000  # dim only covers the base range
-        assert read_bucketed(spark, "bk_fact").count() == 8_000
-
-        _, _, _, loc = _bucket_spec(spark, "bk_fact")
-        per = _files_per_bucket(loc)
-        assert per and max(per.values()) >= 4  # 1 initial + 3 appends
-
-        # one more append with a tight threshold triggers compaction
-        batch = spark.range(8_000, 9_000).selectExpr("id AS k", "id * 2 AS v")
-        assert append_bucketed(
-            spark, batch, "bk_fact", compact_files_per_bucket=3
-        ) is True
-        _, _, _, loc = _bucket_spec(spark, "bk_fact")
-        per = _files_per_bucket(loc)
-        assert per and max(per.values()) == 1, per  # fully compacted
-        # every row survived, bucketing metadata intact, plan unchanged
-        assert read_bucketed(spark, "bk_fact").count() == 9_000
-        got = {r["k"] for r in read_bucketed(spark, "bk_fact").collect()}
-        assert got == set(range(9_000))
-        joined, plan = join_plan()
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "Bucketed: true" in plan
-        assert joined.count() == 2_000
-
-        # sort-within-bucket metadata survived the swap
-        cols, n, sort, _ = _bucket_spec(spark, "bk_fact")
-        assert (cols, n, sort) == (["k"], 4, ["k"])
-
-        # a mismatched-schema append is refused loudly
-        bad = spark.range(0, 10).selectExpr("id AS not_k", "id AS v")
-        try:
-            append_bucketed(spark, bad, "bk_fact")
-            raise AssertionError("mismatched append must raise")
-        except ValueError as e:
-            assert "bucket/sort columns" in str(e)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bk_fact")
-        spark.sql("DROP TABLE IF EXISTS bk_dim")
-        spark.sql("DROP TABLE IF EXISTS bk_fact__compacting")
-
-
 # -- manifest-published bucketed tables (post-drain roadmap #4) -------
 
 
@@ -225,10 +134,10 @@ def _mk_batch(spark, lo, hi):
 
 
 def test_manifest_table_append_compact_and_zero_exchange_join(spark, tmp_path):
-    """The lakehouse-grade upgrade of append_bucketed: appends
-    accumulate snapshots, compaction auto-fires on the file bound, and
-    same-spec manifest tables still join with ZERO exchanges (the
-    reason the layout exists)."""
+    """Appends accumulate snapshots, compaction auto-fires on the file
+    bound and keeps every row and the bucket/sort spec, a batch missing
+    the bucket columns is refused, and same-spec manifest tables still
+    join with ZERO exchanges (the reason the layout exists)."""
     import contextlib
     import io
 
@@ -254,6 +163,13 @@ def test_manifest_table_append_compact_and_zero_exchange_join(spark, tmp_path):
     assert len(m["files"]) == 4
     cur = mb.read_manifest_table(spark, root, "facts")
     assert cur.count() == 400
+    assert {r["k"] for r in cur.collect()} == set(range(400))
+    # the bucket and sort-within-bucket spec survived the compaction
+    assert (m["bucket_cols"], m["num_buckets"], m["sort_cols"]) == (["k"], 4, ["k"])
+    # a batch without the bucket column is refused loudly
+    bad = spark.range(0, 10).selectExpr("id AS not_k", "id AS v")
+    with pytest.raises(ValueError, match="bucket/sort columns"):
+        mb.append_manifest_table(spark, bad, root, "facts")
 
     mb.create_manifest_table(
         spark, spark.range(0, 400).selectExpr("id AS k", "id * 3 AS w"),
@@ -311,9 +227,9 @@ def test_manifest_table_snapshot_isolation_and_time_travel(spark, tmp_path):
 def test_manifest_table_unpublished_generation_is_invisible(spark, tmp_path):
     """The atomicity contract: readers resolve files ONLY through the
     LATEST pointer, so a half-written next generation (data dir
-    present, manifest/pointer not yet swapped) is invisible — unlike
-    append_bucketed's DROP+RENAME window, there is no moment where the
-    table is missing or mixed."""
+    present, manifest/pointer not yet swapped) is invisible — unlike a
+    DROP+RENAME table swap, there is no moment where the table is
+    missing or mixed."""
     import os
 
     from curw_mike_data_handler_spark.sources import manifest_bucketed as mb

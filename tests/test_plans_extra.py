@@ -154,28 +154,3 @@ def test_sessionize_stream_stateful(spark, tmp_path):
     got2 = {r["user_id"]: (r["n_events"], r["n_sessions"]) for r in table.read().collect()}
     assert got2[1] == (4, 2)
     assert got2[2] == (1, 1)
-
-
-def test_compact_partition_merges_small_files(spark, tmp_path):
-    import os
-
-    part = str(tmp_path / "run_date=2020-05-22")
-    # simulate 6 single-file ingestion ticks
-    for i in range(6):
-        spark.range(i * 10, (i + 1) * 10).selectExpr("id", "id * 2 AS v").coalesce(
-            1
-        ).write.mode("append").parquet(part)
-    n_before = len([f for f in os.listdir(part) if f.endswith(".parquet")])
-    assert n_before >= 6
-
-    from curw_mike_data_handler_spark.sources.maintenance import compact_partition
-
-    n_out = compact_partition(spark, part, target_file_bytes=1 << 30)
-    assert n_out == 1
-    n_after = len([f for f in os.listdir(part) if f.endswith(".parquet")])
-    assert n_after == 1
-    df = spark.read.parquet(part)
-    assert df.count() == 60
-    assert df.agg({"v": "sum"}).first()[0] == sum(2 * i for i in range(60))
-    # idempotent second pass: already compact → skipped
-    assert compact_partition(spark, part, target_file_bytes=1 << 30) == 0

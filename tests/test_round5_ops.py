@@ -338,60 +338,6 @@ def test_opq_rotation_lifts_recall(spark, sf001_dir):
     assert r_opq >= 0.6
 
 
-def test_opq_arrow_engine_matches_fold(spark, sf001_dir):
-    """The scale engine (Arrow numpy matmul, ~10-30× faster measured)
-    must agree with the oracle-exact fold engine to float noise — the
-    only permitted divergence is summation order inside the dot
-    products, and ranking rounds to 6 dp far above that."""
-    from curw_mike_data_handler_spark.operators.similarity import (
-        opq_rotate,
-        opq_signed_rows,
-        pq_gain_shape_reconstruct,
-    )
-
-    rows = opq_signed_rows()
-    emb = spark.read.parquet(f"{sf001_dir}/embeddings.parquet")
-    rot = emb.select(
-        opq_rotate(F.col("embedding"), rows).alias("f"),
-        opq_rotate(F.col("embedding"), rows, engine="arrow").alias("a"),
-    )
-    worst = rot.select(
-        F.max(
-            F.aggregate(
-                F.zip_with("f", "a", lambda x, y: F.abs(x - y)),
-                F.lit(0.0),
-                lambda acc, d: F.greatest(acc, d),
-            )
-        ).alias("mx")
-    ).first()["mx"]
-    assert worst < 1e-9, worst
-
-    # materialize the rotations in a projection first: passing the
-    # rotation EXPRESSION into the reconstruct would duplicate its
-    # subtree per gains element (~70× interpreted blowup — the
-    # catalog query materializes between stages for the same reason)
-    rec = emb.select(
-        opq_rotate(F.col("embedding"), rows).alias("rf"),
-        opq_rotate(F.col("embedding"), rows, engine="arrow").alias("ra"),
-    ).select(
-        pq_gain_shape_reconstruct(F.col("rf")).alias("f"),
-        pq_gain_shape_reconstruct(F.col("ra"), engine="arrow").alias("a"),
-    )
-    worst = rec.select(
-        F.max(
-            F.aggregate(
-                F.zip_with("f", "a", lambda x, y: F.abs(x - y)),
-                F.lit(0.0),
-                lambda acc, d: F.greatest(acc, d),
-            )
-        ).alias("mx")
-    ).first()["mx"]
-    # gains snap to a 1/16 grid: identical inputs ⟹ identical codes,
-    # so the reconstructions must agree exactly unless a dot product
-    # lands on a snapping boundary (none in this data)
-    assert worst < 1e-9, worst
-
-
 # -- exact heavy hitters via Misra-Gries candidates -------------------
 
 

@@ -35,9 +35,13 @@ class _RecordingBuilder:
 
 def test_driver_jvm_runs_c1_only(spark):
     """Cron jobs live seconds: the driver JVM must stop at the C1 JIT
-    tier instead of recompiling everything with C2 (session.py)."""
-    mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
-    assert "-XX:TieredStopAtLevel=1" in list(mx.getInputArguments())
+    tier instead of recompiling everything with C2 (session.py), and
+    keep the tiered code cache size a long session needs."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    assert "-XX:TieredStopAtLevel=1" in list(mf.getRuntimeMXBean().getInputArguments())
+    pools = mf.getMemoryPoolMXBeans()
+    code = [pools.get(i) for i in range(pools.size()) if "Code" in pools.get(i).getName()]
+    assert sum(p.getUsage().getMax() for p in code) >= 240 * 1024 * 1024
 
 
 def test_core_count_defaults_to_cpu_affinity(monkeypatch):
