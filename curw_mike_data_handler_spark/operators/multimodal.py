@@ -56,8 +56,7 @@ from __future__ import annotations
 
 import functools as _functools
 from collections.abc import Iterator
-
-import pandas as pd
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -69,6 +68,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+if TYPE_CHECKING:  # pandas loads in the mapInPandas bodies, not at import
+    import pandas as pd
 
 MEDIA_SCHEMA = StructType(
     [
@@ -859,6 +861,8 @@ def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
     splits — the twin of png_pixel_stats."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -1877,6 +1881,8 @@ def png_pixel_stats(media: DataFrame) -> DataFrame:
     parallelism from input splits."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -1909,6 +1915,8 @@ def wav_sample_stats(media: DataFrame) -> DataFrame:
     below carries them).  Map-only, like png_pixel_stats."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in WAV_STATS_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -1942,6 +1950,8 @@ def wav_float_sample_stats(media: DataFrame) -> DataFrame:
     Map-only."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in WAV_FLOAT_STATS_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -1983,6 +1993,8 @@ def extract_features(media: DataFrame, parallelism: int | None = None) -> DataFr
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
+
+        import pandas as pd
 
         for pdf in batches:
             payloads = pdf["payload"]
@@ -2070,6 +2082,8 @@ def synthesize_media(ids: DataFrame, id_col: str = "doc_id",
         src = src.repartition(n)
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         builders = {"png": make_png, "jpeg": make_jpeg, "wav": make_wav}
         mime = {"png": "image/png", "jpeg": "image/jpeg", "wav": "audio/wav"}
         for pdf in batches:
@@ -2105,6 +2119,8 @@ def decode_media(media: DataFrame) -> DataFrame:
     splits exactly as in extract_features."""
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         meta_cols = [f.name for f in MEDIA_META_SCHEMA.fields if f.name not in
                      ("media_id", "byte_len")]
         for pdf in batches:
@@ -2438,6 +2454,8 @@ def synthesize_avi(ids: DataFrame, id_col: str = "doc_id",
         src = src.repartition(n)
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         for pdf in batches:
             if mjpeg_pixels:
                 payloads = [
@@ -2499,6 +2517,8 @@ def avi_frame_pixel_stats(media: DataFrame, every_n: int = 10) -> DataFrame:
     jpeg_pixel_stats."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in FRAME_PIXEL_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -2517,6 +2537,8 @@ def avi_meta(media: DataFrame) -> DataFrame:
     drop.  Map-only."""
 
     def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in AVI_META_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -2984,6 +3006,8 @@ def gif_frame_pixel_stats(media: DataFrame) -> DataFrame:
     input split."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in FRAME_PIXEL_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -3017,6 +3041,8 @@ def synthesize_gif(ids: DataFrame, id_col: str = "doc_id",
         src = src.repartition(n)
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         for pdf in batches:
             if animated:
                 payloads = [
@@ -3049,6 +3075,8 @@ def gif_pixel_stats(media: DataFrame) -> DataFrame:
     100 TB scan shape as png_pixel_stats."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -3127,6 +3155,8 @@ def synthesize_bmp(ids: DataFrame, id_col: str = "doc_id",
         src = src.repartition(n)
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         for pdf in batches:
             # (width, height, fno) — make_bmp's positional args
             payloads = [
@@ -3146,6 +3176,8 @@ def bmp_pixel_stats(media: DataFrame) -> DataFrame:
     rows; non-BMP rows are dropped.  Map-only, zero shuffle."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -3582,6 +3614,8 @@ def synthesize_tiff(ids: DataFrame, id_col: str = "doc_id",
         src = src.repartition(n)
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         for pdf in batches:
             payloads = [
                 # (width, height, phase, big_endian) — make_tiff's
@@ -3626,6 +3660,8 @@ def synthesize_tiff_multipage(ids: DataFrame, id_col: str = "doc_id",
         src = src.repartition(n)
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         for pdf in batches:
             payloads = [
                 make_multipage_tiff(
@@ -3652,6 +3688,8 @@ def tiff_page_stats(media: DataFrame, max_pages: int = 16) -> DataFrame:
     malformed-chain rows are dropped.  Map-only, zero shuffle."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in FRAME_PIXEL_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -3689,6 +3727,8 @@ def tiff_pixel_stats(media: DataFrame) -> DataFrame:
     same 100 TB scan shape as the other *_pixel_stats."""
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -3725,6 +3765,8 @@ def synthesize_mixed_corpus(ids: DataFrame, id_col: str = "doc_id",
         src = src.repartition(n)
 
     def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         for pdf in batches:
             kinds: list[str | None] = []
             payloads: list[bytes | None] = []
@@ -3795,6 +3837,8 @@ def media_pixel_stats(media: DataFrame) -> DataFrame:
         return None
 
     def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
         for pdf in batches:
             rows = []

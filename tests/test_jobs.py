@@ -66,6 +66,10 @@ def test_tide_job_python_m_subprocess(spark, series_parquet, tmp_path):
     assert r2.returncode == 0
     assert "already in path" in r2.stdout
     assert open(out).read() == before
+    # the JVM's class-data sharing logs nothing on the job's stdout,
+    # whether it dumped the archive or mapped it
+    for run in (r, r2):
+        assert not [ln for ln in run.stdout.splitlines() if "[cds" in ln or "warning" in ln.lower()]
 
 
 def test_discharge_job_main(spark, series_parquet, tmp_path):
