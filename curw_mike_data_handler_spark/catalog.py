@@ -15835,13 +15835,17 @@ def j12_skew_join_aqe(spark, sf_dir):
 @query("j13_skew_join_salted", _SKEW_SQL)
 def j13_skew_join_salted(spark, sf_dir):
     """The non-AQE fallback on the SAME data as j12: explicit salting
-    (operators/skewjoin.salted_equi_join).  The fact side appends a
-    deterministic salt in [0, 8), the dim side replicates ×8, and the
-    join runs on (key, salt) — the hot key's rows spread over 8
-    partitions BY CONSTRUCTION, no runtime re-plan needed.  Same
-    oracle as j12: salting must be bit-invisible in the result.  Use
-    when AQE is vetoed (downstream partitioning reuse) or a single key
-    exceeds even the split budget."""
+    (operators/skewjoin.salted_equi_join).  Each fact row draws one of
+    8 offsets from its user_id, the dim side replicates ×8, and the
+    salt is the partition id itself, ``pmod(pmod(hash(key), N) + s,
+    N)`` with ``N = max(shuffle partitions, 8)``.  Both sides shuffle
+    with partition-id pass-through on the salt and the join runs on
+    (key, salt) with no further exchange — the hot key's rows land in
+    8 distinct partitions BY CONSTRUCTION at any core count, no
+    runtime re-plan needed.  Same oracle as j12: salting must be
+    bit-invisible in the result.  Use when AQE is vetoed (downstream
+    partitioning reuse) or a single key exceeds even the split
+    budget."""
     from curw_mike_data_handler_spark.operators.skewjoin import salted_equi_join
 
     fact = _skewed_fact(spark, sf_dir)

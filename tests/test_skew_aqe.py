@@ -12,6 +12,7 @@ test-sized data; production defaults (256 MB) scale the same logic.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 SKEW_CONFS = {
@@ -205,3 +206,64 @@ def test_salted_join_keeps_null_seed_rows(spark):
         for r in fact.join(dim, fact["k"] == dim["k2"]).collect()
     }
     assert got == want and (1, 10.0, "a") in got
+
+
+@pytest.mark.parametrize("fact_key_type", ["bigint", "int"])
+@pytest.mark.parametrize("partitions", [3, 8, 32])
+def test_salted_join_matches_plain_join_at_any_partition_count(
+    spark, partitions, fact_key_type
+):
+    """Below, at and above n_salts shuffle partitions the salted join
+    returns exactly the plain equi join's rows, and the hot key fills
+    exactly n_salts distinct partitions (the salt is the partition id).
+    An int fact key against a bigint dim key must still match: Spark
+    hashes int 5 and bigint 5 differently, so the key's home partition
+    has to be computed in the type the equality compares them in."""
+    from collections import Counter
+
+    from curw_mike_data_handler_spark.operators.skewjoin import (
+        salted_equi_join,
+    )
+
+    n_salts = 8
+    fact = spark.range(3000).select(
+        F.when(F.col("id") % 3 != 0, F.lit(0))
+        .otherwise(F.col("id") % 211)
+        .cast(fact_key_type)
+        .alias("k"),
+        F.col("id").alias("v"),
+    )
+    dim = spark.range(200).select(
+        F.col("id").alias("k2"), (F.col("id") * 10).alias("w")
+    )
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        salted = salted_equi_join(
+            fact, dim, "k", "k2", n_salts=n_salts, salt_source="v"
+        )
+        got = Counter(tuple(r) for r in salted.collect())
+        hot_parts = (
+            salted.filter(F.col("k") == 0)
+            .select(F.spark_partition_id().alias("p"))
+            .distinct()
+            .count()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    plain = fact.join(dim, fact["k"] == dim["k2"]).select("k", "v", "w")
+    want = Counter(tuple(r) for r in plain.collect())
+    assert sum(want.values()) > 2000  # the hot key alone joins 2000 rows
+    assert got == want
+    assert hot_parts == n_salts
+
+
+def test_salted_join_refuses_keys_without_common_type(spark):
+    from curw_mike_data_handler_spark.operators.skewjoin import (
+        salted_equi_join,
+    )
+
+    fact = spark.range(4).select((F.col("id") % 2 == 0).alias("k"))
+    dim = spark.range(4).select(F.col("id").cast("int").alias("k2"))
+    with pytest.raises(ValueError, match="no common type"):
+        salted_equi_join(fact, dim, "k", "k2")
