@@ -8,12 +8,14 @@ the merging task.  Every entry point here therefore defaults to
 sketch, bounded memory, error ≤ 1/accuracy quantile ranks — the bound
 ``approx_quantiles_contract`` attests empirically).  ``exact=True``
 exists for gate-scale oracle attestation: the catalog queries pin it
-so DuckDB's ``quantile_cont`` hash-compares exactly — and since r13
-(r12 verdict #1) the exact path is itself DISTRIBUTED: a two-pass
-count-then-select (``exact_grouped_percentiles`` /
-``select_values_at_ranks`` below) that is bit-identical to
-``percentile`` but never buffers a group into one task, so even the
-exact contract survives an arbitrarily large group.
+so DuckDB's ``quantile_cont`` hash-compares exactly — and the exact
+path is itself DISTRIBUTED and bit-identical to ``percentile``:
+``exact_grouped_percentiles`` brackets each target rank with that same
+sketch in one grouped aggregate, then selects exactly among the few
+rows inside the bracket (two reads of the rows, no exchange of the
+data, at most 2A rows or about 6n/A distinct values per target at
+sketch accuracy A).  Weighted ranks, which no sketch can bracket, go
+through the bucket-histogram ``select_values_at_ranks``.
 
 Reference parity: the reference clamps known-bad sentinel codes
 (`replace_negative_numbers_with_nan`, rf_linux:118); winsorizing is the
@@ -28,15 +30,22 @@ from pyspark.sql import functions as F
 
 DEFAULT_ACCURACY = 10_000
 
-# Bucket count for the distributed exact order-statistic selection
-# (exact_grouped_percentiles / select_values_at_ranks).  Cost model:
-# the histogram relation is O(groups × buckets) rows (tiny at any data
-# scale) and the within-bucket finish sorts ~|distinct values| /
-# num_buckets rows per task, so 4096 turns a 10¹²-row group into
-# ~10⁸-distinct-per-bucket worst case — and real value domains (cents,
-# integer slopes) are far smaller.  Raise it (or recurse) before
-# touching the exact contract.
+# Bucket count for the weighted exact order-statistic selection
+# (select_values_at_ranks).  Cost model: the histogram relation is
+# O(groups × buckets) rows (tiny at any data scale) and the
+# within-bucket finish sorts ~|distinct values| / num_buckets rows per
+# task, so 4096 turns a 10¹²-row group into ~10⁸-distinct-per-bucket
+# worst case — and real value domains (cents) are far smaller.  Raise
+# it (or recurse) before touching the exact contract.
 DEFAULT_SELECT_BUCKETS = 4096
+
+# Sketch accuracy A of exact_grouped_percentiles' bracketing pass: rank
+# error n/A, so a target's bracket holds about 6n/A distinct values, and
+# a group under 2A finite values is its own bracket.  The approx path's
+# accuracy: measured on the exact gates at sf0.01 and sf0.1 (4 cores),
+# A = 1000 cost no less CPU overall, and 10⁴ keeps a 10⁹-row group's
+# candidates near 6·10⁵ values per target.
+BRACKET_ACCURACY = DEFAULT_ACCURACY
 
 
 def _nullsafe_bjoin(
@@ -91,6 +100,38 @@ def _bucket_expr(vd: Column, vmin: Column, vmax: Column, nb: int) -> Column:
         .otherwise(
             F.when(vmax > vmin, wb).otherwise(F.lit(1).cast("long"))
         )
+    )
+
+
+def _walk_to_rank(vals: Column, off: Column, target: Column) -> Column:
+    """Walk a sorted ``array<struct<__v, __c>>`` of distinct values and
+    their counts: the first ``__v`` whose running count, seeded with
+    ``off`` (the count of everything before the array), reaches the
+    1-based rank ``target``; NULL when the array ends first.  The
+    found-flag scheme avoids needing ``__v``'s type for a NULL
+    literal."""
+    return F.aggregate(
+        vals,
+        F.struct(
+            off.alias("acc"),
+            F.try_element_at(vals, F.lit(1))["__v"].alias("key"),
+            F.lit(False).alias("found"),
+        ),
+        lambda st, x: F.when(
+            (~st.found) & (st.acc + x["__c"] >= target),
+            F.struct(
+                (st.acc + x["__c"]).alias("acc"),
+                x["__v"].alias("key"),
+                F.lit(True).alias("found"),
+            ),
+        ).otherwise(
+            F.struct(
+                (st.acc + x["__c"]).alias("acc"),
+                st.key.alias("key"),
+                st.found.alias("found"),
+            )
+        ),
+        lambda st: F.when(st.found, st.key),
     )
 
 
@@ -205,41 +246,30 @@ def select_values_at_ranks(
             )
         )
     )
-    # walk the bucket array once per target: the first value whose
-    # running weight (seeded with the bucket's offset) reaches the
-    # target.  The found-flag scheme avoids needing __v's type for a
-    # NULL literal; every target's answer exists by construction.
-    walk = F.aggregate(
-        F.col("__vals"),
-        F.struct(
-            F.col("__off").alias("acc"),
-            F.element_at(F.col("__vals"), 1)["__v"].alias("key"),
-            F.lit(False).alias("found"),
-        ),
-        lambda st, x: F.when(
-            (~st.found) & (st.acc + x["__c"] >= F.col("__target")),
-            F.struct(
-                (st.acc + x["__c"]).alias("acc"),
-                x["__v"].alias("key"),
-                F.lit(True).alias("found"),
-            ),
-        ).otherwise(
-            F.struct(
-                (st.acc + x["__c"]).alias("acc"),
-                st.key.alias("key"),
-                st.found.alias("found"),
-            )
-        ),
-        lambda st: st.key,
-    )
     # broadcast the tiny per-target locator onto the bucket arrays
     # (not the other way round: a bucket's value array is data-sized)
     sel = _nullsafe_bjoin(
         cand.withColumnRenamed("__b", "__cb"), rb, by
     ).where(F.col("__rb") == F.col("__cb"))
     return sel.select(
-        *by, "__tid", "__target", *passthrough, walk.alias("__key")
+        *by,
+        "__tid",
+        "__target",
+        *passthrough,
+        _walk_to_rank(F.col("__vals"), F.col("__off"), F.col("__target")).alias(
+            "__key"
+        ),
     )
+
+
+def _bracket_sketch(vd: Column, probs: list[float], accuracy: int) -> Column:
+    """The first pass's mergeable quantile sketch of the finite double
+    values ``vd`` at ``probs`` (array<double> in ``probs`` order; NULL
+    for a group without finite values).  Its rank error is at most
+    n/``accuracy``; exact_grouped_percentiles verifies every bracket it
+    derives from these values, so a wrong answer here can only make
+    the query raise, never answer."""
+    return F.percentile_approx(vd, probs, accuracy)
 
 
 def exact_grouped_percentiles(
@@ -250,150 +280,273 @@ def exact_grouped_percentiles(
     by: list[str] | None = None,
     out_col: str = "__q",
     n_col: str | None = None,
-    num_buckets: int = DEFAULT_SELECT_BUCKETS,
+    accuracy: int = BRACKET_ACCURACY,
 ) -> DataFrame:
     """Exact interpolated percentiles per group, BIT-IDENTICAL to
     ``F.percentile(value_col, array(probs))`` (same position formula
     ``p·(n−1)``, same floor/ceil neighbor ranks, same
     ``(hi−pos)·lo_key + (pos−lo)·hi_key`` double interpolation and the
-    same two short-circuits), but computed with the distributed
-    count-then-select above instead of Spark's HOLISTIC ``Percentile``
-    aggregate, which buffers every value of a group into the single
-    merging task — the one plan shape that cannot survive a 100-TB
-    group (r12 verdict #1).
+    same two short-circuits), but computed in two distributed passes
+    instead of Spark's HOLISTIC ``Percentile`` aggregate, which buffers
+    every value of a group into the single merging task — the one plan
+    shape that cannot survive a 100-TB group (r12 verdict #1).
 
     Output: one row per group with ``out_col`` = array<double> in
     ``probs`` order (plus ``n_col`` = the group's non-null value count
     when requested).  Groups whose values are all NULL are absent from
     the output (``F.percentile`` would emit a NULL array; no catalog
-    gate feeds one).  Group cardinality must be broadcast-sized — the
-    same contract as the approx path's broadcast bin edges.
+    gate feeds one); a global (``by=[]``) selection over an empty input
+    yields one row of NULLs with ``n_col`` = 0.  Group cardinality must
+    be broadcast-sized — the same contract as the approx path's
+    broadcast bin edges.
 
-    Cost shape: the input is first collapsed to the (group, value,
-    multiplicity) census — ONE map-side-combinable exchange of the
-    data, the same bytes the holistic percentile's partial maps
-    shipped, but hash-spread over all reducers instead of funneled to
-    one task per group — and lineage-truncated with a lazy
-    localCheckpoint (density.py precedent, guide §3.3): the census is
-    referenced by the stats, histogram and finish passes, and without
-    truncation the logical plan duplicates the input subtree per
-    reference (measured: mad_anomalies' nested plan grew to 200 scan
-    nodes / 11k explain lines and +2-3 s of pure per-op analysis)."""
+    Pass 1 is ONE grouped aggregate over the non-null values: the
+    count, the −Inf/finite/NaN counts, and ``percentile_approx`` of the
+    finite values at p ± δ for every prob (δ = 2/``accuracy``).  Target
+    ranks lo+1 and hi+1 that fall on a non-finite value are answered
+    from the counts alone (Spark's double order: −Inf < finite < +Inf
+    < NaN).  For a finite target the sketch's rank error n_f/A (n_f
+    finite values, A = ``accuracy``) leaves at least one rank of slack
+    on both sides, so the value bracket [sketch(p−δ), sketch(p+δ)]
+    holds the target's exact order statistic.  A group with n_f < 2A,
+    or with enough non-finite values to shift a target off the
+    sketch's guaranteed range, has one bracket instead: all its finite
+    values, shared by every prob.
+
+    Pass 2 joins the rows to the broadcast brackets.  Each row adds to
+    one count row per group (the exact count below each bracket) and
+    to the (bracket, value) counts of the brackets that hold it; per
+    group these collapse to the counts below plus one sorted array of
+    distinct (bracket, value, count) candidates.  Each (group, prob)
+    then walks its bracket's candidates to ranks lo+1 and hi+1
+    (``_walk_to_rank``, shared with select_values_at_ranks).
+    Membership compares in double space — the cast is monotone, so
+    longs past 2^53 stay correct — while the walk returns the exact
+    original value.  A target outside its bracket fails the query
+    through ``raise_error``: the answer is exact or there is none.
+
+    Cost shape: the rows are read twice (the pass-1 aggregate and the
+    pass-2 join), each read a map-side-combined aggregate; no exchange
+    carries the data.  A target's candidates are the whole group, at
+    most 2A rows, for a small group and about 6·n_f/A distinct values
+    otherwise.  With A = 10,000 (``BRACKET_ACCURACY``) that is n/1667,
+    against n/4096 per bucket on the bucket path, which needed a
+    census, a histogram and a locator pass before its finish (14 Spark
+    jobs for a9_quantiles, now 6)."""
     by = list(by or [])
-    rows = df.select(
-        *by,
-        F.col(value_col).alias("__v"),
-        F.lit(1).cast("long").alias("__w"),
-    ).where(F.col("__v").isNotNull())
-    census = (
-        rows.groupBy(*by, "__v")
-        .agg(F.sum("__w").alias("__w"))
-        .localCheckpoint(eager=False)
+    rows = df.select(*by, F.col(value_col).alias("__v")).where(
+        F.col("__v").isNotNull()
     )
     vd = F.col("__v").cast("double")
-    # bounds over FINITE values only: a NaN/Inf in the group would
-    # otherwise poison min/max and make width_bucket NULL out every
-    # finite row (review finding r13); __n still counts every non-null
-    # value, matching percentile (NaN/Inf are values that sort last)
-    stats = census.groupBy(*by).agg(
-        F.sum("__w").alias("__n"),
-        F.min(F.when(_finite(vd), vd)).alias("__vmin"),
-        F.max(F.when(_finite(vd), vd)).alias("__vmax"),
+    fin = _finite(vd)
+    delta = 2.0 / accuracy
+    edges = [min(max(p - delta, 0.0), 1.0) for p in probs] + [
+        min(max(p + delta, 0.0), 1.0) for p in probs
+    ]
+    stats = rows.groupBy(*by).agg(
+        F.count("*").alias("__n"),
+        F.count_if(vd == F.lit(-_INF)).alias("__nneg"),
+        F.count_if(fin).alias("__nf"),
+        F.count_if(F.isnan(vd)).alias("__nnan"),
+        _bracket_sketch(F.when(fin, vd), edges, accuracy).alias("__sk"),
     )
-    # two selection targets per (group, prob): position p·(n−1), its
-    # 0-based neighbor ranks lo/hi → 1-based cumulative-count targets
-    # lo+1 / hi+1, tagged __tid = 2·pi (+1); pos/lo/hi/n ride along as
-    # passthrough columns so the interpolation needs no join back
-    parr = F.array(*[F.lit(float(p)) for p in probs])
-    tq = stats.select(
-        *by, "__n", F.posexplode(parr).alias("__pi", "__p")
-    ).select(
+    c = F.col
+    k = len(probs)
+    counts = ["__n", "__nneg", "__nf", "__nnan"]
+    n, nneg, nf, nnan = (c(x) for x in counts)
+    # A finite target r (1-based among the finite values) lies inside
+    # its sketch bracket when |r − 1 − p·(n_f − 1)| ≤ n_f/A − 1.  With
+    # m = n − n_f non-finite values that offset is below m + 1, so the
+    # sketch brackets every target of a group with m ≤ n_f/A − 2 (which
+    # implies n_f ≥ 2A).  Any other group has one whole-group bracket
+    # (number 0) that serves every prob; its brackets 1.. are empty.
+    sketched = (n - nf + 2) * accuracy <= nf
+    whole = [(-_INF, _INF)] + [(_INF, -_INF)] * (k - 1)
+    brackets = stats.select(
         *by,
-        "__n",
-        "__pi",
-        (F.col("__p") * (F.col("__n") - 1).cast("double")).alias("__pos"),
-    ).select(
+        *counts,
+        F.when(sketched, F.slice("__sk", 1, k))
+        .otherwise(F.array(*[F.lit(lo) for lo, _ in whole]))
+        .alias("__bl"),
+        F.when(sketched, F.slice("__sk", k + 1, k))
+        .otherwise(F.array(*[F.lit(hi) for _, hi in whole]))
+        .alias("__bh"),
+    )
+    # pass 2: each row emits one count row (__j = −1, flagging the
+    # brackets it lies below) plus one row per bracket that holds it.
+    # Every row emits the count row, so every group reaches the walk,
+    # and a bracket that misses raises instead of dropping the group.
+    bl, bh, j = c("__bl"), c("__bh"), c("__j")
+    cand = (
+        _nullsafe_bjoin(rows, brackets, by)
+        .select(
+            *by,
+            *counts,
+            "__v",
+            "__bl",
+            F.explode(
+                F.array(
+                    F.lit(-1),
+                    *[
+                        F.when(fin & (vd >= bl[i]) & (vd <= bh[i]), F.lit(i))
+                        for i in range(k)
+                    ],
+                )
+            ).alias("__j"),
+        )
+        .where(j.isNotNull())
+        .select(
+            *by,
+            *counts,
+            "__j",
+            F.when(j >= 0, c("__v")).alias("__k"),
+            *[
+                F.when(j < 0, (fin & (vd < bl[i])).cast("long")).alias(f"__b{i}")
+                for i in range(k)
+            ],
+        )
+        .groupBy(*by, *counts, "__j", "__k")
+        .agg(
+            F.count("*").alias("__c"),
+            *[F.sum(f"__b{i}").alias(f"__b{i}") for i in range(k)],
+        )
+        # one row per group: the exact count below each bracket, and
+        # the distinct (bracket, value, count) candidates sorted by
+        # bracket then value.  Grouped by the group keys alone, so the
+        # per-prob pivot below reuses this exchange's partitioning.
+        .groupBy(*by)
+        .agg(
+            *[F.max(x).alias(x) for x in counts],
+            F.array(
+                *[
+                    F.coalesce(F.sum(f"__b{i}"), F.lit(0).cast("long"))
+                    for i in range(k)
+                ]
+            ).alias("__below"),
+            F.sort_array(
+                F.collect_list(
+                    F.when(
+                        j >= 0, F.struct("__j", c("__k").alias("__v"), "__c")
+                    )
+                )
+            ).alias("__cands"),
+        )
+        # a global selection over an empty input still yields this
+        # grand-aggregate row, with no counts: it has no ranks to walk
+        .where(n.isNotNull())
+    )
+    # one row per (group, prob): position p·(n−1), its floor/ceil
+    # neighbor ranks lo/hi, and the prob's bracket (whole-group: 0)
+    pi = c("__pi")
+    tq = (
+        cand.select(
+            *by,
+            *counts,
+            "__below",
+            "__cands",
+            F.posexplode(F.array(*[F.lit(float(p)) for p in probs])).alias(
+                "__pi", "__p"
+            ),
+        )
+        .withColumn("__pos", c("__p") * (n - 1).cast("double"))
+        .select(
+            *by,
+            *counts,
+            "__pi",
+            "__pos",
+            F.floor("__pos").alias("__lo"),
+            F.ceil("__pos").alias("__hi"),
+            F.when(sketched, c("__below")[pi]).otherwise(c("__below")[0]).alias(
+                "__off"
+            ),
+            F.when(
+                sketched, F.filter("__cands", lambda x: x["__j"] == pi)
+            ).otherwise(c("__cands")).alias("__vals"),
+        )
+    )
+
+    # walk each prob's bracket to its two targets, as ranks among the
+    # finite values (t − n_neg for rank t among all values)
+    lo, hi, off = c("__lo"), c("__hi"), c("__off")
+    walked = tq.select(
         *by,
-        "__n",
+        *counts,
         "__pi",
         "__pos",
-        F.floor("__pos").alias("__lo"),
-        F.ceil("__pos").alias("__hi"),
+        "__lo",
+        "__hi",
+        "__off",
+        _walk_to_rank(c("__vals"), off, lo + 1 - nneg).alias("__wlo"),
+        _walk_to_rank(c("__vals"), off, hi + 1 - nneg).alias("__whi"),
     )
-    targets = tq.select(
+
+    def _key(t: Column, w: Column) -> Column:
+        # rank t among all values: −Inf < finite < +Inf < NaN; a finite
+        # rank must lie inside its bracket
+        r = t - nneg
+        return (
+            F.when(r <= 0, F.lit(-_INF))
+            .when(r > n - nnan - nneg, F.lit(float("nan")))
+            .when(r > nf, F.lit(_INF))
+            .when((r > off) & w.isNotNull(), w.cast("double"))
+            .otherwise(
+                F.raise_error(
+                    F.lit(
+                        "exact_grouped_percentiles: a target rank fell "
+                        "outside its quantile-sketch bracket"
+                    )
+                )
+            )
+        )
+
+    def _walked(t: Column) -> Column:
+        r = t - nneg
+        return (r >= 1) & (r <= nf)
+
+    keys = walked.select(
         *by,
         "__n",
         "__pi",
         "__pos",
         "__lo",
         "__hi",
-        F.explode(
-            F.array(
-                F.struct(
-                    (F.col("__pi").cast("long") * 2).alias("__tid"),
-                    (F.col("__lo") + 1).alias("__target"),
-                ),
-                F.struct(
-                    (F.col("__pi").cast("long") * 2 + 1).alias("__tid"),
-                    (F.col("__hi") + 1).alias("__target"),
-                ),
-            )
-        ).alias("__t"),
-    ).select(
-        *by, "__n", "__pi", "__pos", "__lo", "__hi",
-        "__t.__tid", "__t.__target",
+        _key(lo + 1, c("__wlo")).alias("__klo"),
+        _key(hi + 1, c("__whi")).alias("__khi"),
+        # Percentile compares the neighbor keys themselves: two distinct
+        # longs past 2^53 with one double still interpolate
+        F.when(
+            _walked(lo + 1) & _walked(hi + 1), c("__wlo") == c("__whi")
+        ).alias("__same"),
     )
-    keys = select_values_at_ranks(
-        census,
-        by,
-        targets,
-        stats.select(*by, "__vmin", "__vmax"),
-        num_buckets=num_buckets,
-        passthrough=["__n", "__pi", "__pos", "__lo", "__hi"],
+    # Percentile's interpolation verbatim
+    klo, khi = c("__klo"), c("__khi")
+    pos = c("__pos")
+    val = (
+        F.when(lo == hi, klo)
+        .when(F.coalesce(c("__same"), klo == khi), klo)
+        .otherwise(
+            (hi.cast("double") - pos) * klo + (pos - lo.cast("double")) * khi
+        )
     )
-    # ONE pivot aggregation assembles lo/hi keys per prob and applies
-    # Percentile's interpolation verbatim — no further joins
-    key_d = F.col("__key").cast("double")
-    agg_cols = []
-    for i in range(len(probs)):
-        is_pi = F.col("__pi") == i
-        agg_cols += [
-            F.max(
-                F.when(is_pi & (F.col("__tid") % 2 == 0), key_d)
-            ).alias(f"__klo{i}"),
-            F.max(
-                F.when(is_pi & (F.col("__tid") % 2 == 1), key_d)
-            ).alias(f"__khi{i}"),
-            F.max(F.when(is_pi, F.col("__pos"))).alias(f"__pos{i}"),
-            F.max(F.when(is_pi, F.col("__lo"))).alias(f"__lo{i}"),
-            F.max(F.when(is_pi, F.col("__hi"))).alias(f"__hi{i}"),
-        ]
+    agg_cols = [
+        F.max(F.when(pi == i, c("__val"))).alias(f"__q{i}") for i in range(k)
+    ]
     if n_col is not None:
         # coalesce to 0: a global (by=[]) selection over an EMPTY
-        # input yields no keys rows, and the grand aggregate would
+        # input reaches no walk row, and the grand aggregate would
         # report NULL where count(*) reports 0 (review finding r13)
         agg_cols.append(
             F.coalesce(F.max("__n"), F.lit(0).cast("long")).alias(n_col)
         )
-    piv = keys.groupBy(*by).agg(*agg_cols)
-
-    def _val(i: int) -> Column:
-        klo, khi = F.col(f"__klo{i}"), F.col(f"__khi{i}")
-        pos = F.col(f"__pos{i}")
-        lo, hi = F.col(f"__lo{i}"), F.col(f"__hi{i}")
-        return (
-            F.when(lo == hi, klo)
-            .when(klo == khi, klo)
-            .otherwise(
-                (hi.cast("double") - pos) * klo
-                + (pos - lo.cast("double")) * khi
-            )
+    return (
+        keys.select(*by, "__n", "__pi", val.alias("__val"))
+        .groupBy(*by)
+        .agg(*agg_cols)
+        .select(
+            *by,
+            F.array(*[c(f"__q{i}") for i in range(k)]).alias(out_col),
+            *([n_col] if n_col is not None else []),
         )
-
-    return piv.select(
-        *by,
-        F.array(*[_val(i) for i in range(len(probs))]).alias(out_col),
-        *([n_col] if n_col is not None else []),
     )
 
 
@@ -436,7 +589,7 @@ def grouped_quantiles(
     convention)."""
     names = names or [f"p{int(p * 100)}" for p in probs]
     if exact:
-        # distributed two-pass count-then-select (r12 verdict #1):
+        # two-pass sketch-bracketed selection (r12 verdict #1):
         # bit-identical to the holistic ``percentile`` but with no
         # single-task buffer of the whole group
         g = exact_grouped_percentiles(df, value_col, probs, by=by)

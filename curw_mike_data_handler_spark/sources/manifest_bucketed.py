@@ -148,6 +148,19 @@ def _claim_path(root: str, table: str, version: int) -> str:
                         f"claim-{version}")
 
 
+def _proc_stat(pid: int) -> list[bytes] | None:
+    """Fields 3 onward of /proc/<pid>/stat (index 0 is the state
+    letter, index 19 the starttime), or None where /proc is
+    unavailable (non-Linux) or the pid is gone.  comm (field 2) may
+    contain spaces/parens, so the split starts after the LAST ')'."""
+    try:
+        with open(f"/proc/{pid}/stat", "rb") as fh:
+            fields = fh.read().rsplit(b")", 1)[1].split()
+    except (OSError, IndexError):
+        return None
+    return fields if len(fields) > 19 else None
+
+
 def _proc_start_time(pid: int) -> int | None:
     """The kernel's starttime for ``pid`` (/proc/<pid>/stat field 22,
     clock ticks since boot) — the disambiguator that makes pid-based
@@ -157,15 +170,8 @@ def _proc_start_time(pid: int) -> int | None:
     writers on that generation forever (advisor finding).  None where
     /proc is unavailable (non-Linux) — callers then fall back to the
     plain pid-exists check."""
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as fh:
-            data = fh.read()
-        # comm (field 2) may contain spaces/parens: split after the
-        # LAST ')' — the remainder starts at field 3, starttime is
-        # field 22, i.e. index 19 of the remainder
-        return int(data.rsplit(b")", 1)[1].split()[19])
-    except (OSError, IndexError, ValueError):
-        return None
+    fields = _proc_stat(pid)
+    return None if fields is None else int(fields[19])
 
 
 def _parse_claim(content: str) -> tuple[int, int | None]:
@@ -212,11 +218,15 @@ def _claim_owner_alive(content: str) -> bool:
         return False
     except PermissionError:
         pass  # exists, owned by someone else
-    if recorded_start is not None:
-        current_start = _proc_start_time(pid)
-        if current_start is not None and current_start != recorded_start:
-            return False  # pid recycled: same number, different process
-    return True
+    fields = _proc_stat(pid)
+    if fields is None:
+        return True  # no /proc: the pid-exists check stands
+    if fields[0] in (b"Z", b"X"):
+        # exited but not yet reaped: a zombie passes kill(pid, 0) and
+        # keeps its starttime, yet it writes nothing more
+        return False
+    # a different starttime is a recycled pid: same number, other process
+    return recorded_start is None or int(fields[19]) == recorded_start
 
 
 def _acquire_claim(root: str, table: str, version: int) -> None:

@@ -1,7 +1,9 @@
-"""Round-13 distributed exact order-statistic selection (r12 verdict
-#1): bit-identity against Spark's holistic ``percentile`` and plan
-guards proving the holistic aggregate is gone from the exact-path
-gates."""
+"""Distributed exact order-statistic selection: bit-identity against
+Spark's holistic ``percentile`` for the sketch-bracketed two-pass
+``exact_grouped_percentiles`` (both its whole-group and its sketch
+branch) and for the weighted bucket path ``select_values_at_ranks``,
+and plan guards proving the holistic aggregate is gone from the
+exact-path gates."""
 
 import random
 
@@ -9,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from curw_mike_data_handler_spark import catalog
+from curw_mike_data_handler_spark.operators import robust
 from curw_mike_data_handler_spark.operators.robust import (
     exact_grouped_percentiles,
     select_values_at_ranks,
@@ -23,9 +26,12 @@ def _ref(df, probs, by):
     return {tuple(r[b] for b in by): list(r["q"]) for r in rows}
 
 
-def _got(df, probs, by, nb):
+def _got(df, probs, by, acc):
+    """``acc`` is the bracketing sketch's accuracy A: a group of at
+    least 2A finite values takes the sketch branch, a smaller one is
+    its own bracket."""
     rows = exact_grouped_percentiles(
-        df, "v", probs, by=by, num_buckets=nb
+        df, "v", probs, by=by, accuracy=acc
     ).collect()
     return {tuple(r[b] for b in by): list(r["__q"]) for r in rows}
 
@@ -37,18 +43,18 @@ def _bit_equal(a, b):
 
 
 @pytest.mark.parametrize(
-    "kind,n,ngroups,nb",
+    "kind,n,ngroups,acc",
     [
-        ("int", 400, 3, 4),       # multi-bucket narrowing, tiny buckets
+        ("int", 400, 3, 4),       # sketch branch, narrow brackets
         ("int", 1, 1, 4096),      # single-row group
         ("int", 2, 1, 3),         # two rows: interpolation between them
-        ("int_ties", 600, 3, 5),  # heavy ties across bucket boundaries
+        ("int_ties", 600, 3, 5),  # heavy ties across bracket edges
         ("double", 500, 4, 8),    # double keys (theilsen's slope shape)
-        ("double", 3, 2, 2),      # degenerate buckets
+        ("double", 3, 2, 2),      # whole-group brackets
     ],
 )
-def test_bit_identity_vs_holistic_percentile(spark, kind, n, ngroups, nb):
-    rng = random.Random(20260818 + n + nb)
+def test_bit_identity_vs_holistic_percentile(spark, kind, n, ngroups, acc):
+    rng = random.Random(20260818 + n + acc)
     rows = []
     for _ in range(n):
         g = f"g{rng.randrange(ngroups)}"
@@ -64,7 +70,7 @@ def test_bit_identity_vs_holistic_percentile(spark, kind, n, ngroups, nb):
     )
     df = spark.createDataFrame(rows, schema)
     ref = _ref(df, PROBS, ["grp"])
-    got = _got(df, PROBS, ["grp"], nb)
+    got = _got(df, PROBS, ["grp"], acc)
     assert set(ref) == set(got)
     for g in ref:
         assert _bit_equal(ref[g], got[g]), (g, ref[g], got[g])
@@ -176,6 +182,12 @@ def test_plan_guard_no_holistic_percentile(spark, sf_dir):
     assert "percentile_approx" in (
         df._jdf.queryExecution().executedPlan().toString()
     )
+    # a9 brackets its ranks with the sketch; the bucket path (census,
+    # width_bucket histogram, locator) is for weighted ranks only
+    a9 = catalog.QUERIES["a9_quantiles"](spark, sf_dir)
+    analyzed = a9._jdf.queryExecution().analyzed().toString()
+    assert "percentile_approx" in analyzed
+    assert "width_bucket" not in analyzed
 
 
 def test_nan_inf_mixed_groups_match_percentile(spark):
@@ -210,3 +222,103 @@ def test_empty_input_global_n_col_is_zero(spark):
     assert len(rows) == 1
     assert rows[0]["n"] == 0
     assert rows[0]["__q"] == [None]
+
+
+def _assert_matches(df, probs, by, acc):
+    ref = _ref(df, probs, by)
+    got = _got(df, probs, by, acc)
+    assert set(ref) == set(got)
+    for g in ref:
+        assert _bit_equal(ref[g], got[g]), (g, ref[g], got[g])
+
+
+def test_sketch_branch_with_nan_inf_in_large_groups(spark):
+    """Non-finite values shift each target's rank among the finite
+    ones.  A group with few of them (≤ n_f/A − 2) keeps its sketch
+    brackets; one with more falls back to its whole-group bracket.
+    Both stay bit-identical to F.percentile."""
+    rng = random.Random(53)
+    nan, inf = float("nan"), float("inf")
+    rows = []
+    for g, extra in (
+        ("few", [nan, inf, -inf, -inf]),
+        ("many", [nan] * 30 + [inf] * 20 + [-inf] * 25),
+        ("none", []),
+    ):
+        rows += [(g, rng.gauss(0, 100.0)) for _ in range(300)]
+        rows += [(g, x) for x in extra]
+    df = spark.createDataFrame(rows, "grp string, v double")
+    _assert_matches(df, PROBS, ["grp"], 8)
+
+
+def test_empty_groups_and_empty_inputs(spark):
+    """A group whose values are all NULL has no order statistics and is
+    absent; a NULL group key is a group like any other.  An empty
+    grouped input yields no rows, an empty global input one row of
+    NULLs."""
+    df = spark.createDataFrame(
+        [("a", 1), ("a", 2), ("b", None), ("b", None), (None, 5), (None, 8)],
+        "grp string, v long",
+    )
+    assert _got(df, [0.5], ["grp"], 4) == {("a",): [1.5], (None,): [6.5]}
+    empty = spark.createDataFrame([], "grp string, v long")
+    assert exact_grouped_percentiles(empty, "v", [0.5], by=["grp"]).collect() == []
+    rows = exact_grouped_percentiles(empty, "v", [0.1, 0.9], by=[]).collect()
+    assert [r["__q"] for r in rows] == [[None, None]]
+
+
+def _fixed_sketch(value):
+    """A stand-in for the bracketing sketch that puts every bracket
+    edge at ``value``."""
+    return lambda vd, probs, accuracy: F.array(
+        *[F.lit(float(value))] * len(probs)
+    )
+
+
+def test_ties_straddling_bracket_edges(spark, monkeypatch):
+    """Both edges of every bracket fall inside one run of tied values:
+    the whole run is inside the bracket, the rows before it are the
+    exact count below, and the walk lands in the run."""
+    rows = [("g", 1)] * 100 + [("g", 7)] * 200 + [("g", 9)] * 100
+    df = spark.createDataFrame(rows, "grp string, v long")
+    monkeypatch.setattr(robust, "_bracket_sketch", _fixed_sketch(7))
+    _assert_matches(df, [0.3, 0.5, 0.7], ["grp"], 8)
+
+
+@pytest.mark.parametrize("acc", [3, 10_000])
+def test_longs_past_2_53(spark, acc):
+    """Longs past 2^53 collide in double space.  Bracket membership
+    compares doubles (a monotone cast), the walk returns the exact
+    long, and two distinct neighbor longs interpolate even when their
+    doubles are equal, as in Percentile."""
+    rng = random.Random(253)
+    base = 2**53
+    rows = [
+        (f"g{rng.randrange(2)}", base + rng.randrange(-40, 40))
+        for _ in range(300)
+    ] + [("g0", -(base + 3)), ("g1", 2**62 + 1)]
+    # one double, two longs: Percentile interpolates them at p = 0.3,
+    # and (1 − 0.3)·d + 0.3·d is d − 4
+    x = 27021597765993856
+    rows += [("pair", x), ("pair", x + 1)]
+    df = spark.createDataFrame(rows, "grp string, v long")
+    _assert_matches(df, PROBS + [0.3], ["grp"], acc)
+
+
+def test_bracket_miss_raises(spark, monkeypatch):
+    """A sketch whose brackets miss their targets must fail the query,
+    never answer.  Groups of at least 2A values use the (here broken)
+    sketch; a smaller group is its own bracket and ignores it."""
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    rng = random.Random(11)
+    df = spark.createDataFrame(
+        [("g", rng.randrange(1000)) for _ in range(200)], "grp string, v long"
+    )
+    monkeypatch.setattr(robust, "_bracket_sketch", _fixed_sketch(5000))
+    with pytest.raises((PySparkException, Py4JJavaError)) as err:
+        _got(df, [0.5], ["grp"], 8)
+    assert "outside its quantile-sketch bracket" in str(err.value)
+    # the same sketch is never consulted for a group under 2A values
+    _assert_matches(df, [0.5], ["grp"], 10_000)

@@ -616,6 +616,36 @@ def test_claim_owner_liveness_detects_recycled_pid():
     assert mb._claim_owner_alive("garbage")
 
 
+def test_claim_owner_zombie_is_dead():
+    """An exited child that its parent has not reaped yet is a zombie:
+    it passes os.kill(pid, 0) and keeps its starttime, but it will
+    never write again, so its claim must read as dead (in both claim
+    formats)."""
+    import subprocess
+    import sys
+    import time
+
+    from curw_mike_data_handler_spark.sources import manifest_bucketed as mb
+
+    proc = subprocess.Popen([sys.executable, "-c", "pass"])
+    try:
+        # Popen reaps only on poll()/wait(), so the exited child stays
+        # a zombie until the finally clause
+        fields = None
+        for _ in range(200):
+            fields = mb._proc_stat(proc.pid)
+            if fields is not None and fields[0] == b"Z":
+                break
+            time.sleep(0.05)
+        assert fields is not None and fields[0] == b"Z", fields
+        start = mb._proc_start_time(proc.pid)
+        assert start is not None
+        assert not mb._claim_owner_alive(f"{proc.pid} {start}")
+        assert not mb._claim_owner_alive(str(proc.pid))
+    finally:
+        proc.wait()
+
+
 def test_claim_wait_returns_on_competitor_publish(spark, tmp_path):
     """Advisor regression: the old fixed 20 × 0.5 s retry budget failed
     writers behind a LEGITIMATELY slow competitor.  The wait is now

@@ -469,11 +469,11 @@ def test_pivot_wide_is_fixed_width_aggregate_no_join_chain(spark):
 def test_winsorize_broadcasts_scalar_thresholds(spark):
     """The p01/p99 scalar row joins the fact via broadcast — a shuffled
     scalar join here would re-partition the whole fact at 100 TB — and
-    (r13) the exact thresholds come from the distributed
-    count-then-select, so no holistic percentile appears anywhere.
-    The pre-r13 "≤2 hash exchanges" pin is gone: the selection adds
-    exchanges, but every one of them carries census/histogram rows,
-    never the fact."""
+    the exact thresholds come from the two-pass sketch-bracketed
+    selection, so no holistic percentile appears anywhere.  The
+    pre-r13 "≤2 hash exchanges" pin is gone: the selection adds
+    exchanges, but every one of them carries per-group counts,
+    sketches or bracket candidates, never the fact."""
     plan = _plan(spark, "a14_winsorized_mean")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
