@@ -52,7 +52,10 @@ from curw_mike_data_handler_spark.operators.multimodal import (
     attach_payload,
     decode_media,
     extract_features,
+    jpeg_pixel_payload,
     jpeg_pixel_stats,
+    jpeg_progressive_payload,
+    png_pixel_payload,
     png_pixel_stats,
     synthesize_media,
     wav_sample_stats,
@@ -2506,7 +2509,7 @@ def multimodal_pixel_stats_q(spark, sf_dir):
     Python-worker pass per split); parallelism from input splits, no
     exchange anywhere."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
-    return png_pixel_stats(synthesize_media(docs, png_pixels=True))
+    return png_pixel_stats(synthesize_media(docs, png_pixel_payload))
 
 
 @query(
@@ -2550,7 +2553,7 @@ def multimodal_jpeg_pixel_stats_q(spark, sf_dir):
     Scale shape: map-only (synthesize → decode fused in one
     Python-worker pass per split); no exchange anywhere."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 1)
-    return jpeg_pixel_stats(synthesize_media(docs, jpeg_pixels=True))
+    return jpeg_pixel_stats(synthesize_media(docs, jpeg_pixel_payload))
 
 
 @query(
@@ -2598,9 +2601,7 @@ def multimodal_jpeg_progressive_pixels_q(spark, sf_dir):
     Scale shape: map-only (synthesize → decode fused in one
     Python-worker pass per split); no exchange anywhere."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 6 == 4)
-    return jpeg_pixel_stats(
-        synthesize_media(docs, jpeg_pixels=True, jpeg_progressive=True)
-    )
+    return jpeg_pixel_stats(synthesize_media(docs, jpeg_progressive_payload))
 
 
 @query(
@@ -2676,11 +2677,12 @@ def multimodal_audio_float_stats_q(spark, sf_dir):
     exchange."""
     from curw_mike_data_handler_spark.operators.multimodal import (
         synthesize_media,
+        wav_float_payload,
         wav_float_sample_stats,
     )
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 2)
-    return wav_float_sample_stats(synthesize_media(docs, wav_float=True))
+    return wav_float_sample_stats(synthesize_media(docs, wav_float_payload))
 
 
 @query(
@@ -2763,13 +2765,12 @@ def multimodal_video_frame_pixels_q(spark, sf_dir):
     bounded by n_frames/every_n per video."""
     from curw_mike_data_handler_spark.operators.multimodal import (
         avi_frame_pixel_stats,
+        mjpeg_avi_payload,
         synthesize_avi,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    return avi_frame_pixel_stats(
-        synthesize_avi(docs, mjpeg_pixels=True), every_n=10
-    )
+    return avi_frame_pixel_stats(synthesize_avi(docs, mjpeg_avi_payload))
 
 
 @query(
@@ -2809,13 +2810,12 @@ def multimodal_video_rgb_frames_q(spark, sf_dir):
     by n_frames/every_n per video."""
     from curw_mike_data_handler_spark.operators.multimodal import (
         avi_frame_pixel_stats,
+        rgb_avi_payload,
         synthesize_avi,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    return avi_frame_pixel_stats(
-        synthesize_avi(docs, rgb_pixels=True), every_n=10
-    )
+    return avi_frame_pixel_stats(synthesize_avi(docs, rgb_avi_payload))
 
 
 @query(
@@ -2932,12 +2932,13 @@ def multimodal_gif_anim_frames_q(spark, sf_dir):
     Scale shape: map-only (synthesize → decode fused per split);
     zero shuffle; ≤12 output rows per document."""
     from curw_mike_data_handler_spark.operators.multimodal import (
+        animated_gif_payload,
         gif_frame_pixel_stats,
         synthesize_gif,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    return gif_frame_pixel_stats(synthesize_gif(docs, animated=True))
+    return gif_frame_pixel_stats(synthesize_gif(docs, animated_gif_payload))
 
 
 @query(

@@ -5,6 +5,25 @@ Pattern for image/audio/video at corpus scale: the payload is a
 columns, and per-item decode/feature-extract runs as Arrow-batched
 ``mapInPandas`` — the ONLY sanctioned Python hot path in this engine.
 
+Two bodies serve the whole family; a format adds a per-row function,
+not a ``mapInPandas`` loop:
+
+* ``_decoded_rows(media, decode, schema)`` is every stats extractor's
+  loop.  A NULL payload is checked once there and dropped; ``decode``
+  gets the bytes and returns None, one dict or a list of dicts;
+  ``media_id`` is prefixed, keys outside ``schema`` are dropped, and
+  every long column is cast to pandas ``Int64``, so longs stay exact
+  beside a NULL.
+* ``_synthesize(ids, payload_of)`` is every synthesizer: the
+  ``doc_id`` column, spread over at most 16 partitions, mapped through
+  ``payload_of(id) → (media_type, payload)``.  The payload bytes of
+  each id are fixed, because every oracle is a closed form of the id;
+  a variant corpus is a different ``payload_of``, never a flag.
+
+``decode_media`` (1:1, NULL rows kept) and ``extract_features`` (a 1:1
+hash map) keep their own bodies.  pandas is imported inside the bodies,
+in the Python workers, never at module import.
+
 Decode comes in two layers:
 
 * **Header decode is REAL**: ``parse_media_header`` walks actual
@@ -102,6 +121,66 @@ MEDIA_META_SCHEMA = StructType(
         StructField("byte_len", LongType()),
     ]
 )
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Repartition a small input so every core (at most 16) gets a
+    Python worker instead of one worker taking the whole table; beyond
+    16 the per-worker spawn cost outweighs the extra parallelism for
+    typical per-file row counts.  An input already split that finely
+    keeps its partitioning."""
+    n = min(df.sparkSession.sparkContext.defaultParallelism, 16)
+    return df.repartition(n) if df.rdd.getNumPartitions() < n else df
+
+
+def _synthesize(ids: DataFrame, payload_of) -> DataFrame:
+    """The one synthesizer body: ``ids``' ``doc_id`` column (cast to
+    long) → MEDIA_SCHEMA rows, ``payload_of(media_id)`` giving each
+    row's ``(media_type, payload)`` — either may be None.  The payload
+    bytes are a pure function of the id: every oracle is a closed form
+    of it."""
+    src = _spread(ids.select(F.col("doc_id").cast("long").alias("media_id")))
+
+    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
+        for pdf in batches:
+            out = pd.DataFrame([payload_of(int(m)) for m in pdf["media_id"]],
+                               columns=["media_type", "payload"])
+            out.insert(0, "media_id", pdf["media_id"].values)
+            yield out
+
+    return src.mapInPandas(_build, schema=MEDIA_SCHEMA)
+
+
+def _decoded_rows(media: DataFrame, decode, schema: StructType) -> DataFrame:
+    """The one per-row decode loop of the stats extractors: every
+    non-NULL ``payload`` goes through ``decode(bytes)``, which returns
+    None (row dropped), one dict or a list of dicts (one output row
+    each, ``media_id`` prefixed).  Keys outside ``schema`` are dropped
+    and every long column is cast to pandas ``Int64``, so longs stay
+    exact next to a NULL.  NULL payloads are checked here once; every
+    decoder is NULL-safe and never raises on malformed bytes, so one
+    bad row cannot kill a batch.  Map-only, zero shuffle: parallelism
+    comes from the input splits."""
+    cols = schema.names
+    longs = [f.name for f in schema.fields if isinstance(f.dataType, LongType)]
+
+    def _rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = []
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                got = None if payload is None else decode(bytes(payload))
+                for st in [got] if isinstance(got, dict) else got or ():
+                    rows.append({"media_id": mid, **st})
+            out = pd.DataFrame(rows, columns=cols)
+            for c in longs:
+                out[c] = out[c].astype("Int64")
+            yield out
+
+    return media.mapInPandas(_rows, schema=schema)
 
 
 def decode_image(payload: bytes):  # pragma: no cover - stub by design
@@ -859,21 +938,7 @@ def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
     binary payload column → PIXEL_STATS_SCHEMA rows; non-JPEG /
     undecodable rows are dropped.  Map-only, parallelism from input
     splits — the twin of png_pixel_stats."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                st = (decode_jpeg_pixels(bytes(payload))
-                      if payload is not None else None)
-                if st is not None:
-                    rows.append({"media_id": mid, **st})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(_stats, schema=PIXEL_STATS_SCHEMA)
+    return _decoded_rows(media, decode_jpeg_pixels, PIXEL_STATS_SCHEMA)
 
 
 # -- progressive (SOF2) JPEG: REAL multi-scan Huffman codec ---------
@@ -1879,21 +1944,7 @@ def png_pixel_stats(media: DataFrame) -> DataFrame:
     Non-PNG rows are dropped (a mixed-modality table routes each type
     to its own decoder).  Same scale shape as decode_media: map-only,
     parallelism from input splits."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                st = (decode_png_pixels(bytes(payload))
-                      if payload is not None else None)
-                if st is not None:
-                    rows.append({"media_id": mid, **st})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(_stats, schema=PIXEL_STATS_SCHEMA)
+    return _decoded_rows(media, decode_png_pixels, PIXEL_STATS_SCHEMA)
 
 
 WAV_STATS_SCHEMA = StructType(
@@ -1914,23 +1965,11 @@ def wav_sample_stats(media: DataFrame) -> DataFrame:
     doubles — the long schema here would corrupt them; the float twin
     below carries them).  Map-only, like png_pixel_stats."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
+    def _ints(b: bytes) -> dict | None:
+        st = decode_wav_samples(b)
+        return None if st is None or isinstance(st["sample_sum"], float) else st
 
-        cols = [f.name for f in WAV_STATS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                st = (decode_wav_samples(bytes(payload))
-                      if payload is not None else None)
-                if st is not None and not isinstance(st["sample_sum"], float):
-                    rows.append({"media_id": mid, **st})
-            out = pd.DataFrame(rows, columns=cols)
-            for c in ("sample_max",):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return media.mapInPandas(_stats, schema=WAV_STATS_SCHEMA)
+    return _decoded_rows(media, _ints, WAV_STATS_SCHEMA)
 
 
 WAV_FLOAT_STATS_SCHEMA = StructType(
@@ -1949,47 +1988,32 @@ def wav_float_sample_stats(media: DataFrame) -> DataFrame:
     sample stats; integer-PCM and non-WAV rows are dropped.
     Map-only."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
+    def _floats(b: bytes) -> dict | None:
+        st = decode_wav_samples(b)
+        return st if st is not None and isinstance(st["sample_sum"], float) else None
 
-        cols = [f.name for f in WAV_FLOAT_STATS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                st = (decode_wav_samples(bytes(payload))
-                      if payload is not None else None)
-                if st is not None and isinstance(st["sample_sum"], float):
-                    rows.append({"media_id": mid, **st})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(_stats, schema=WAV_FLOAT_STATS_SCHEMA)
+    return _decoded_rows(media, _floats, WAV_FLOAT_STATS_SCHEMA)
 
 
-def attach_payload(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Demo payload: UTF-8 bytes of the text column standing in for an
-    opaque media blob (keeps the pipeline runnable on the synthetic
-    corpus)."""
+def attach_payload(docs: DataFrame) -> DataFrame:
+    """Demo payload: UTF-8 bytes of the ``text`` column, keyed by
+    ``doc_id``, standing in for an opaque media blob (keeps the pipeline
+    runnable on the synthetic corpus)."""
     return docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         F.lit("text/plain").alias("media_type"),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
     )
 
 
-def extract_features(media: DataFrame, parallelism: int | None = None) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
     mapInPandas (not a row UDF): each Arrow batch arrives as a
     pandas DataFrame; output schema is fixed.  At 100 TB parallelism
-    comes from input splits; a small single-file input is repartitioned
-    so every core gets a Python worker instead of one worker taking the
-    whole table."""
-    sc = media.sparkSession.sparkContext
-    # cap at 16: beyond that, per-worker Python spawn cost outweighs
-    # the extra parallelism for typical per-file row counts
-    n = parallelism or min(sc.defaultParallelism, 16)
-    if media.rdd.getNumPartitions() < n:
-        media = media.repartition(n)
+    comes from input splits; a small single-file input is spread over
+    the cores first (``_spread``).  1:1 over the rows, so it keeps its
+    own body instead of ``_decoded_rows``."""
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
@@ -2007,21 +2031,13 @@ def extract_features(media: DataFrame, parallelism: int | None = None) -> DataFr
                 }
             )
 
-    return media.mapInPandas(_extract, schema=FEATURE_SCHEMA)
-
-
-def _img_synth_dims(mid: int) -> tuple[int, int]:
-    """id → (width, height) for the PNG/JPEG header-synthesis family —
-    the ONE definition shared by _synth_params and
-    synthesize_mixed_corpus so the mixed corpus can never silently
-    desynchronize from the single-format synthesizers (ADVICE r8)."""
-    return 16 + mid % 240, 16 + mid % 135
+    return _spread(media).mapInPandas(_extract, schema=FEATURE_SCHEMA)
 
 
 def _jpeg_pixel_synth_dims(mid: int) -> tuple[int, int]:
     """id → multiple-of-8 (width, height) for pixel-carrying JPEGs:
-    w ∈ 16..240, h ∈ 16..136.  Shared by synthesize_media
-    (jpeg_pixels=True) and synthesize_mixed_corpus."""
+    w ∈ 16..240, h ∈ 16..136.  Shared by the baseline and progressive
+    JPEG payloads."""
     return 8 * (2 + mid % 29), 8 * (2 + mid % 16)
 
 
@@ -2033,83 +2049,75 @@ def _gif_synth_args(mid: int) -> tuple[int, int, bool]:
     return 16 * (1 + mid % 8), 1 + mid % 37, bool(mid % 2)
 
 
-def _bmp_synth_args(mid: int) -> tuple[int, int, int]:
-    """id → (width, height, raster phase) for 24-bit BMPs.  Shared by
-    synthesize_bmp and synthesize_mixed_corpus."""
-    return 16 * (1 + mid % 6), 8 * (1 + mid % 5), mid % 4
-
-
 def _synth_params(mid: int) -> tuple[str, dict]:
     """Deterministic id → media parameters (the closed form the DuckDB
     oracle recomputes in SQL — keep the two in lockstep)."""
     kind = mid % 3
+    w, h = 16 + mid % 240, 16 + mid % 135
     if kind == 0:
-        w, h = _img_synth_dims(mid)
         return "png", {"width": w, "height": h,
                        "bit_depth": 8 + 8 * (mid % 2)}
     if kind == 1:
-        w, h = _img_synth_dims(mid)
         return "jpeg", {"width": w, "height": h}
     return "wav", {"sample_rate": 8000 + (mid % 5) * 4000,
                    "channels": 1 + mid % 2, "n_samples": mid % 32}
 
 
-def synthesize_media(ids: DataFrame, id_col: str = "doc_id",
-                     parallelism: int | None = None,
-                     png_pixels: bool = False,
-                     jpeg_pixels: bool = False,
-                     jpeg_progressive: bool = False,
-                     wav_float: bool = False) -> DataFrame:
-    """id column → (media_id, media_type, payload) with REAL binary
-    payloads (spec-conformant PNG/JPEG/WAV built per row).  Stands in
-    for the object-store fetch stage of a production pipeline; being
-    deterministic in the id keeps the downstream decode oracle-able.
+_MEDIA_MIME = {"png": "image/png", "jpeg": "image/jpeg", "wav": "audio/wav"}
 
-    ``png_pixels=True`` gives every PNG a real zlib-compressed IDAT
+
+def media_payload(mid: int) -> tuple[str, bytes]:
+    """The ``_synth_params`` closed form: header-only PNG/JPEG (8- or
+    16-bit PNG headers) and integer-PCM WAV."""
+    kind, params = _synth_params(mid)
+    maker = {"png": make_png, "jpeg": make_jpeg, "wav": make_wav}[kind]
+    return _MEDIA_MIME[kind], maker(**params)
+
+
+def png_pixel_payload(mid: int) -> tuple[str, bytes]:
+    """``media_payload`` with every PNG a real zlib-compressed IDAT
     carrying the closed-form raster (always 8-bit — pixel payloads
-    override the 16-bit header variant), for the pixel-decode path.
-    ``jpeg_pixels=True`` gives every JPEG a complete baseline
+    override the 16-bit header variant), for the pixel-decode path."""
+    kind, params = _synth_params(mid)
+    if kind != "png":
+        return media_payload(mid)
+    return _MEDIA_MIME[kind], make_png(**params | {"bit_depth": 8, "pixels": True})
+
+
+def jpeg_pixel_payload(mid: int) -> tuple[str, bytes]:
+    """``media_payload`` with every JPEG a complete baseline
     entropy-coded scan (block-constant closed-form raster at
-    multiple-of-8 dimensions) for the JPEG pixel-decode path;
-    ``jpeg_progressive=True`` additionally swaps those for multi-scan
-    SOF2 streams of the SAME raster (same closed-form oracle).
-    ``wav_float=True`` swaps the WAV kind's payloads for IEEE-float
-    (fmt 3) streams carrying the closed form / 4 (r7)."""
-    sc = ids.sparkSession.sparkContext
-    n = parallelism or min(sc.defaultParallelism, 16)
-    src = ids.select(F.col(id_col).cast("long").alias("media_id"))
-    if src.rdd.getNumPartitions() < n:
-        src = src.repartition(n)
+    multiple-of-8 dimensions) for the JPEG pixel-decode path."""
+    if _synth_params(mid)[0] != "jpeg":
+        return media_payload(mid)
+    return "image/jpeg", make_jpeg(*_jpeg_pixel_synth_dims(mid), pixels=True)
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
 
-        builders = {"png": make_png, "jpeg": make_jpeg, "wav": make_wav}
-        mime = {"png": "image/png", "jpeg": "image/jpeg", "wav": "audio/wav"}
-        for pdf in batches:
-            kinds, payloads = [], []
-            for mid in pdf["media_id"]:
-                kind, params = _synth_params(int(mid))
-                if kind == "wav" and wav_float:
-                    params = {**params, "ieee_float": True}
-                if kind == "png" and png_pixels:
-                    params = {**params, "bit_depth": 8, "pixels": True}
-                if kind == "jpeg" and jpeg_pixels:
-                    jw, jh = _jpeg_pixel_synth_dims(int(mid))
-                    params = {"width": jw, "height": jh, "pixels": True}
-                    if jpeg_progressive:
-                        kinds.append(mime[kind])
-                        payloads.append(
-                            make_progressive_jpeg(params["width"], params["height"])
-                        )
-                        continue
-                kinds.append(mime[kind])
-                payloads.append(builders[kind](**params))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "media_type": kinds, "payload": payloads}
-            )
+def jpeg_progressive_payload(mid: int) -> tuple[str, bytes]:
+    """``jpeg_pixel_payload`` with the JPEGs as multi-scan SOF2 streams
+    of the SAME raster (same closed-form oracle)."""
+    if _synth_params(mid)[0] != "jpeg":
+        return media_payload(mid)
+    return "image/jpeg", make_progressive_jpeg(*_jpeg_pixel_synth_dims(mid))
 
-    return src.mapInPandas(_build, schema=MEDIA_SCHEMA)
+
+def wav_float_payload(mid: int) -> tuple[str, bytes]:
+    """``media_payload`` with the WAVs as IEEE-float (fmt 3) streams
+    carrying the closed form / 4."""
+    kind, params = _synth_params(mid)
+    if kind != "wav":
+        return media_payload(mid)
+    return _MEDIA_MIME[kind], make_wav(**params, ieee_float=True)
+
+
+def synthesize_media(ids: DataFrame, payload_of=media_payload) -> DataFrame:
+    """``doc_id`` column → (media_id, media_type, payload) with REAL
+    binary payloads (spec-conformant PNG/JPEG/WAV built per row, by
+    ``media_payload`` unless ``payload_of`` names one of its variants
+    above).  Stands in for the object-store fetch stage of a production
+    pipeline; being deterministic in the id keeps the downstream decode
+    oracle-able."""
+    return _synthesize(ids, payload_of)
 
 
 def decode_media(media: DataFrame) -> DataFrame:
@@ -2429,73 +2437,37 @@ AVI_META_SCHEMA = StructType(
 )
 
 
-def synthesize_avi(ids: DataFrame, id_col: str = "doc_id",
-                   parallelism: int | None = None,
-                   mjpeg_pixels: bool = False,
-                   rgb_pixels: bool = False) -> DataFrame:
-    """id column → (media_id, media_type, payload) with real AVI
-    container bytes, deterministic in the id (width 16+id%240, height
-    16+id%135, fps 24/30, id%64 frames) so downstream header decode
-    and frame plans are oracle-able.
+def avi_payload(mid: int) -> tuple[str, bytes]:
+    """Header-only AVI: width 16+id%240, height 16+id%135, fps 24/30,
+    id%64 frames."""
+    return "video/avi", make_avi(16 + mid % 240, 16 + mid % 135,
+                                 fps=24 + 6 * (mid % 2), n_frames=mid % 64)
 
-    ``mjpeg_pixels=True``: REAL Motion-JPEG payloads at multiple-of-8
-    dimensions (width 8·(1+id%12), height 8·(1+id%8), id%24 frames) —
-    every frame a complete baseline JPEG, for the frame-pixel-decode
-    path.
 
-    ``rgb_pixels=True``: REAL uncompressed BI_RGB payloads (width
-    16·(1+id%6), height 8·(1+id%5), id%24 frames) — '00db' chunks of
-    bottom-up padded BGR rows carrying the ``_dib_pixel_value`` closed
-    form."""
-    sc = ids.sparkSession.sparkContext
-    n = parallelism or min(sc.defaultParallelism, 16)
-    src = ids.select(F.col(id_col).cast("long").alias("media_id"))
-    if src.rdd.getNumPartitions() < n:
-        src = src.repartition(n)
+def mjpeg_avi_payload(mid: int) -> tuple[str, bytes]:
+    """REAL Motion-JPEG AVI at multiple-of-8 dimensions (width
+    8·(1+id%12), height 8·(1+id%8), id%24 frames) — every frame a
+    complete baseline JPEG, for the frame-pixel-decode path."""
+    return "video/avi", make_avi(8 * (1 + mid % 12), 8 * (1 + mid % 8),
+                                 fps=24 + 6 * (mid % 2), n_frames=mid % 24,
+                                 mjpeg=True)
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
 
-        for pdf in batches:
-            if mjpeg_pixels:
-                payloads = [
-                    make_avi(
-                        8 * (1 + int(m) % 12),
-                        8 * (1 + int(m) % 8),
-                        fps=24 + 6 * (int(m) % 2),
-                        n_frames=int(m) % 24,
-                        mjpeg=True,
-                    )
-                    for m in pdf["media_id"]
-                ]
-            elif rgb_pixels:
-                payloads = [
-                    make_avi(
-                        16 * (1 + int(m) % 6),
-                        8 * (1 + int(m) % 5),
-                        fps=24 + 6 * (int(m) % 2),
-                        n_frames=int(m) % 24,
-                        rgb=True,
-                    )
-                    for m in pdf["media_id"]
-                ]
-            else:
-                payloads = [
-                    make_avi(
-                        16 + int(m) % 240,
-                        16 + int(m) % 135,
-                        fps=24 + 6 * (int(m) % 2),
-                        n_frames=int(m) % 64,
-                    )
-                    for m in pdf["media_id"]
-                ]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 "media_type": ["video/avi"] * len(pdf),
-                 "payload": payloads}
-            )
+def rgb_avi_payload(mid: int) -> tuple[str, bytes]:
+    """REAL uncompressed BI_RGB AVI (width 16·(1+id%6), height
+    8·(1+id%5), id%24 frames) — '00db' chunks of bottom-up padded BGR
+    rows carrying the ``_dib_pixel_value`` closed form."""
+    return "video/avi", make_avi(16 * (1 + mid % 6), 8 * (1 + mid % 5),
+                                 fps=24 + 6 * (mid % 2), n_frames=mid % 24,
+                                 rgb=True)
 
-    return src.mapInPandas(_build, schema=MEDIA_SCHEMA)
+
+def synthesize_avi(ids: DataFrame, payload_of=avi_payload) -> DataFrame:
+    """``doc_id`` column → (media_id, media_type, payload) with real AVI
+    container bytes, deterministic in the id so downstream header
+    decode and frame plans are oracle-able: ``avi_payload`` unless
+    ``payload_of`` names one of the frame-carrying variants below."""
+    return _synthesize(ids, payload_of)
 
 
 FRAME_PIXEL_SCHEMA = StructType(
@@ -2510,46 +2482,18 @@ FRAME_PIXEL_SCHEMA = StructType(
 )
 
 
-def avi_frame_pixel_stats(media: DataFrame, every_n: int = 10) -> DataFrame:
+def avi_frame_pixel_stats(media: DataFrame) -> DataFrame:
     """Arrow-batched MJPEG frame pixel decode over the binary payload
     column → one FRAME_PIXEL_SCHEMA row per sampled frame.  Map-only,
     parallelism from input splits — the video twin of
     jpeg_pixel_stats."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        cols = [f.name for f in FRAME_PIXEL_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                sts = (decode_avi_frame_pixels(bytes(payload), every_n=every_n)
-                       if payload is not None else None)
-                for st in sts or ():
-                    rows.append({"media_id": mid, **st})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(_stats, schema=FRAME_PIXEL_SCHEMA)
+    return _decoded_rows(media, decode_avi_frame_pixels, FRAME_PIXEL_SCHEMA)
 
 
 def avi_meta(media: DataFrame) -> DataFrame:
     """Arrow-batched AVI header decode → typed metadata; non-AVI rows
     drop.  Map-only."""
-
-    def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        cols = [f.name for f in AVI_META_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                st = (parse_avi_header(bytes(payload))
-                      if payload is not None else None)
-                if st is not None:
-                    rows.append({"media_id": mid, **st})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(_meta, schema=AVI_META_SCHEMA)
+    return _decoded_rows(media, parse_avi_header, AVI_META_SCHEMA)
 
 
 def frame_sample_plan(meta: DataFrame, every_n: int = 10) -> DataFrame:
@@ -3004,68 +2948,32 @@ def gif_frame_pixel_stats(media: DataFrame) -> DataFrame:
     FRAME_PIXEL_SCHEMA row per frame; non-GIF rows are dropped.
     Map-only, zero shuffle — frames of one payload never leave their
     input split."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        cols = [f.name for f in FRAME_PIXEL_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                sts = (decode_gif_frame_pixels(bytes(payload))
-                       if payload is not None else None)
-                for st in sts or []:
-                    rows.append({"media_id": mid, **st})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(_stats, schema=FRAME_PIXEL_SCHEMA)
+    return _decoded_rows(media, decode_gif_frame_pixels, FRAME_PIXEL_SCHEMA)
 
 
-def synthesize_gif(ids: DataFrame, id_col: str = "doc_id",
-                   parallelism: int | None = None,
-                   animated: bool = False) -> DataFrame:
-    """id column → (media_id, media_type, payload) with real GIF89a
-    bytes, deterministic in the id (width 16·(1+id%8) — a multiple of
-    the 16-color palette so stats collapse closed-form, height
-    1+id%37, odd ids interlaced) for the oracle-able pixel-decode
-    path.  Same map-only scale shape as synthesize_media.
+def gif_payload(mid: int) -> tuple[str, bytes]:
+    """Single-image GIF: width 16·(1+id%8) — a multiple of the 16-color
+    palette so stats collapse closed-form — height 1+id%37, odd ids
+    interlaced (``_gif_synth_args``)."""
+    return "image/gif", make_gif(*_gif_synth_args(mid))
 
-    ``animated=True``: multi-image streams instead (width
-    16·(1+id%6), 1+id%12 frames, frame f of height 1+((id+2f)%23) —
-    distinct per frame so a frame-order mixup changes the stats),
-    odd frames interlaced with a rotated LOCAL color table."""
-    sc = ids.sparkSession.sparkContext
-    n = parallelism or min(sc.defaultParallelism, 16)
-    src = ids.select(F.col(id_col).cast("long").alias("media_id"))
-    if src.rdd.getNumPartitions() < n:
-        src = src.repartition(n)
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
+def animated_gif_payload(mid: int) -> tuple[str, bytes]:
+    """Multi-image GIF: width 16·(1+id%6), 1+id%12 frames, frame f of
+    height 1+((id+2f)%23) — distinct per frame so a frame-order mixup
+    changes the stats — odd frames interlaced with a rotated LOCAL
+    color table."""
+    return "image/gif", make_animated_gif(
+        16 * (1 + mid % 6), [1 + (mid + 2 * f) % 23 for f in range(1 + mid % 12)]
+    )
 
-        for pdf in batches:
-            if animated:
-                payloads = [
-                    make_animated_gif(
-                        16 * (1 + int(mid) % 6),
-                        [1 + (int(mid) + 2 * f) % 23
-                         for f in range(1 + int(mid) % 12)],
-                    )
-                    for mid in pdf["media_id"]
-                ]
-            else:
-                # (width, height, interlace) — make_gif's leading args
-                payloads = [
-                    make_gif(*_gif_synth_args(int(mid)))
-                    for mid in pdf["media_id"]
-                ]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 "media_type": ["image/gif"] * len(pdf),
-                 "payload": payloads}
-            )
 
-    return src.mapInPandas(_build, schema=MEDIA_SCHEMA)
+def synthesize_gif(ids: DataFrame, payload_of=gif_payload) -> DataFrame:
+    """``doc_id`` column → (media_id, media_type, payload) with real
+    GIF89a bytes, deterministic in the id (``gif_payload``, or the
+    animated ``animated_gif_payload``) for the oracle-able pixel-decode
+    path.  Same map-only scale shape as synthesize_media."""
+    return _synthesize(ids, payload_of)
 
 
 def gif_pixel_stats(media: DataFrame) -> DataFrame:
@@ -3073,21 +2981,7 @@ def gif_pixel_stats(media: DataFrame) -> DataFrame:
     column → PIXEL_STATS_SCHEMA rows; non-GIF rows are dropped.
     Map-only, parallelism from input splits, zero shuffle — the same
     100 TB scan shape as png_pixel_stats."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                st = (decode_gif_pixels(bytes(payload))
-                      if payload is not None else None)
-                if st is not None:
-                    rows.append({"media_id": mid, **st})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(_stats, schema=PIXEL_STATS_SCHEMA)
+    return _decoded_rows(media, decode_gif_pixels, PIXEL_STATS_SCHEMA)
 
 
 # -- BMP: Windows bitmap files (reuses the AVI BI_RGB DIB path) ------
@@ -3142,56 +3036,22 @@ def decode_bmp_pixels(b: bytes) -> dict | None:
         return None
 
 
-def synthesize_bmp(ids: DataFrame, id_col: str = "doc_id",
-                   parallelism: int | None = None) -> DataFrame:
-    """id column → (media_id, media_type, payload) with real 24-bit
-    BMP bytes, deterministic in the id (width 16·(1+id%6), height
-    8·(1+id%5), raster phase id%4 — the `_dib_pixel_value` closed
-    form, shared with the RGB-AVI oracle algebra).  Map-only."""
-    sc = ids.sparkSession.sparkContext
-    n = parallelism or min(sc.defaultParallelism, 16)
-    src = ids.select(F.col(id_col).cast("long").alias("media_id"))
-    if src.rdd.getNumPartitions() < n:
-        src = src.repartition(n)
+def synthesize_bmp(ids: DataFrame) -> DataFrame:
+    """``doc_id`` column → (media_id, media_type, payload) with real
+    24-bit BMP bytes, deterministic in the id (width 16·(1+id%6),
+    height 8·(1+id%5), raster phase id%4 — the `_dib_pixel_value`
+    closed form, shared with the RGB-AVI oracle algebra).  Map-only."""
+    return _synthesize(ids, bmp_payload)
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
 
-        for pdf in batches:
-            # (width, height, fno) — make_bmp's positional args
-            payloads = [
-                make_bmp(*_bmp_synth_args(int(m))) for m in pdf["media_id"]
-            ]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 "media_type": ["image/bmp"] * len(pdf),
-                 "payload": payloads}
-            )
-
-    return src.mapInPandas(_build, schema=MEDIA_SCHEMA)
+def bmp_payload(mid: int) -> tuple[str, bytes]:
+    return "image/bmp", make_bmp(16 * (1 + mid % 6), 8 * (1 + mid % 5), mid % 4)
 
 
 def bmp_pixel_stats(media: DataFrame) -> DataFrame:
     """Arrow-batched BMP pixel-stat extraction → PIXEL_STATS_SCHEMA
     rows; non-BMP rows are dropped.  Map-only, zero shuffle."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                st = (decode_bmp_pixels(bytes(payload))
-                      if payload is not None else None)
-                if st is not None:
-                    rows.append({"media_id": mid, "width": st["width"],
-                                 "height": st["height"], "n_px": st["n_px"],
-                                 "pixel_sum": st["pixel_sum"],
-                                 "pixel_max": st["pixel_max"]})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(_stats, schema=PIXEL_STATS_SCHEMA)
+    return _decoded_rows(media, decode_bmp_pixels, PIXEL_STATS_SCHEMA)
 
 
 # -- TIFF: baseline 6.0, uncompressed strips (r9) ---------------------
@@ -3596,42 +3456,17 @@ def _tiff_synth_args(mid: int) -> tuple[int, int, int, bool]:
     return 16 * (1 + mid % 5), 8 * (1 + mid % 7), mid % 4, bool(mid % 2)
 
 
-def synthesize_tiff(ids: DataFrame, id_col: str = "doc_id",
-                    parallelism: int | None = None,
-                    rows_per_strip: int = 8,
-                    compression: str = "none") -> DataFrame:
-    """id column → (media_id, media_type, payload) with real TIFF
-    bytes, deterministic in the id (`_tiff_synth_args`), RowsPerStrip
-    8 so every image with height > 8 is genuinely multi-strip.
-    Map-only, like every synthesizer here.  ``rows_per_strip`` /
-    ``compression`` pass through to make_tiff (one builder serves the
-    uncompressed and PackBits twins — the dims/phase/byte-order
-    formula, hence the oracle, is shared)."""
-    sc = ids.sparkSession.sparkContext
-    n = parallelism or min(sc.defaultParallelism, 16)
-    src = ids.select(F.col(id_col).cast("long").alias("media_id"))
-    if src.rdd.getNumPartitions() < n:
-        src = src.repartition(n)
+def synthesize_tiff(ids: DataFrame) -> DataFrame:
+    """``doc_id`` column → (media_id, media_type, payload) with real
+    TIFF bytes, deterministic in the id (`_tiff_synth_args`),
+    RowsPerStrip 8 so every image with height > 8 is genuinely
+    multi-strip.  Map-only, like every synthesizer here."""
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
+    def _payload(mid: int) -> tuple[str, bytes]:
+        # (width, height, phase, big_endian) — make_tiff's leading args
+        return "image/tiff", make_tiff(*_tiff_synth_args(mid))
 
-        for pdf in batches:
-            payloads = [
-                # (width, height, phase, big_endian) — make_tiff's
-                # leading positional args
-                make_tiff(*_tiff_synth_args(int(m)),
-                          rows_per_strip=rows_per_strip,
-                          compression=compression)
-                for m in pdf["media_id"]
-            ]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 "media_type": ["image/tiff"] * len(pdf),
-                 "payload": payloads}
-            )
-
-    return src.mapInPandas(_build, schema=MEDIA_SCHEMA)
+    return _synthesize(ids, _payload)
 
 
 def _tiff_page_args(mid: int, p: int) -> tuple[int, int, int]:
@@ -3646,171 +3481,88 @@ def _tiff_page_args(mid: int, p: int) -> tuple[int, int, int]:
     )
 
 
-def synthesize_tiff_multipage(ids: DataFrame, id_col: str = "doc_id",
-                              parallelism: int | None = None) -> DataFrame:
-    """id column → real multi-IFD TIFFs: 1 + id%5 chained pages per
-    doc (`_tiff_page_args` per page), odd ids big-endian AND
+def synthesize_tiff_multipage(ids: DataFrame) -> DataFrame:
+    """``doc_id`` column → real multi-IFD TIFFs: 1 + id%5 chained pages
+    per doc (`_tiff_page_args` per page), odd ids big-endian AND
     PackBits-compressed so both byte orders and both compressions ride
     the chain walk at the gate; RowsPerStrip 6 keeps short final
     strips in play.  Map-only."""
-    sc = ids.sparkSession.sparkContext
-    n = parallelism or min(sc.defaultParallelism, 16)
-    src = ids.select(F.col(id_col).cast("long").alias("media_id"))
-    if src.rdd.getNumPartitions() < n:
-        src = src.repartition(n)
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
+    def _payload(mid: int) -> tuple[str, bytes]:
+        return "image/tiff", make_multipage_tiff(
+            [_tiff_page_args(mid, p) for p in range(1 + mid % 5)],
+            big_endian=bool(mid % 2),
+            rows_per_strip=6,
+            compression="packbits" if mid % 2 else "none",
+        )
 
-        for pdf in batches:
-            payloads = [
-                make_multipage_tiff(
-                    [_tiff_page_args(int(m), p)
-                     for p in range(1 + int(m) % 5)],
-                    big_endian=bool(m % 2),
-                    rows_per_strip=6,
-                    compression="packbits" if m % 2 else "none",
-                )
-                for m in pdf["media_id"]
-            ]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 "media_type": ["image/tiff"] * len(pdf),
-                 "payload": payloads}
-            )
-
-    return src.mapInPandas(_build, schema=MEDIA_SCHEMA)
+    return _synthesize(ids, _payload)
 
 
-def tiff_page_stats(media: DataFrame, max_pages: int = 16) -> DataFrame:
+def tiff_page_stats(media: DataFrame) -> DataFrame:
     """Arrow-batched multi-page TIFF stats → one FRAME_PIXEL_SCHEMA
     row per page (frame_no = page index, chain order); non-TIFF and
     malformed-chain rows are dropped.  Map-only, zero shuffle."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
+    def _pages(b: bytes) -> list[dict]:
+        return [{"frame_no": i, **st} for i, st in enumerate(decode_tiff_pages(b) or ())]
 
-        cols = [f.name for f in FRAME_PIXEL_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                pages = (decode_tiff_pages(bytes(payload), max_pages=max_pages)
-                         if payload is not None else None)
-                for i, st in enumerate(pages or []):
-                    rows.append({
-                        "media_id": mid,
-                        "frame_no": i,
-                        "width": st["width"],
-                        "height": st["height"],
-                        "pixel_sum": st["pixel_sum"],
-                        "pixel_max": st["pixel_max"],
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(_stats, schema=FRAME_PIXEL_SCHEMA)
+    return _decoded_rows(media, _pages, FRAME_PIXEL_SCHEMA)
 
 
-def synthesize_tiff_packbits(ids: DataFrame, id_col: str = "doc_id",
-                             parallelism: int | None = None) -> DataFrame:
+def synthesize_tiff_packbits(ids: DataFrame) -> DataFrame:
     """PackBits twin of synthesize_tiff — same (width, height, phase,
     byte order) parameterization, so one closed-form oracle covers
     both; RowsPerStrip 6 under the 8·k heights makes every image end
     in a SHORT final strip (the partial-last-strip expected-size path
     of the RLE decode) at the driver gate."""
-    return synthesize_tiff(ids, id_col=id_col, parallelism=parallelism,
-                           rows_per_strip=6, compression="packbits")
+
+    def _payload(mid: int) -> tuple[str, bytes]:
+        return "image/tiff", make_tiff(*_tiff_synth_args(mid), rows_per_strip=6,
+                                       compression="packbits")
+
+    return _synthesize(ids, _payload)
 
 
 def tiff_pixel_stats(media: DataFrame) -> DataFrame:
     """Arrow-batched TIFF pixel-stat extraction → PIXEL_STATS_SCHEMA
     rows; non-TIFF rows are dropped.  Map-only, zero shuffle — the
     same 100 TB scan shape as the other *_pixel_stats."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                st = (decode_tiff_pixels(bytes(payload))
-                      if payload is not None else None)
-                if st is not None:
-                    rows.append({"media_id": mid, **st})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(_stats, schema=PIXEL_STATS_SCHEMA)
+    return _decoded_rows(media, decode_tiff_pixels, PIXEL_STATS_SCHEMA)
 
 
-def synthesize_mixed_corpus(ids: DataFrame, id_col: str = "doc_id",
-                            parallelism: int | None = None) -> DataFrame:
-    """id column → (media_id, media_type, payload) with a HETEROGENEOUS
-    real-byte corpus — the shape `media_pixel_stats` exists for:
-    id%6 = 0 → PNG (the pixel-decode raster of `synthesize_media
-    (png_pixels=True)`), 1 → baseline JPEG (ditto jpeg_pixels), 2 →
-    GIF89a (ditto synthesize_gif), 3 → BMP (ditto synthesize_bmp),
-    4 → TIFF (ditto synthesize_tiff, r9), 5 → a NULL payload (routine
-    in a real 100 TB media table; the router must drop it, never
-    raise).  Each arm's residue pins id parity, so the parity-derived
-    variation bits (GIF interlace, TIFF byte order) are taken from
-    id//6 instead — every other GIF in the mix interlaced, every other
-    TIFF big-endian; the stats are variation-invariant so the oracle
-    is unchanged.  Each format keeps its existing closed-form raster
-    so one oracle covers the mix.  Map-only, like every synthesizer
-    here."""
-    sc = ids.sparkSession.sparkContext
-    n = parallelism or min(sc.defaultParallelism, 16)
-    src = ids.select(F.col(id_col).cast("long").alias("media_id"))
-    if src.rdd.getNumPartitions() < n:
-        src = src.repartition(n)
+def synthesize_mixed_corpus(ids: DataFrame) -> DataFrame:
+    """``doc_id`` column → (media_id, media_type, payload) with a
+    HETEROGENEOUS real-byte corpus — the shape `media_pixel_stats`
+    exists for: id%6 = 0 → PNG (`png_pixel_payload`), 1 → baseline
+    JPEG (`jpeg_pixel_payload`), 2 → GIF89a (ditto synthesize_gif), 3
+    → BMP (ditto synthesize_bmp), 4 → TIFF (ditto synthesize_tiff),
+    5 → a NULL payload (routine in a real 100 TB media table; the
+    router must drop it, never raise).  Each arm's residue pins id
+    parity, so the parity-derived variation bits (GIF interlace, TIFF
+    byte order) are taken from id//6 instead — every other GIF in the
+    mix interlaced, every other TIFF big-endian; the stats are
+    variation-invariant so the oracle is unchanged.  Each format keeps
+    its existing closed-form raster so one oracle covers the mix.
+    Map-only, like every synthesizer here."""
 
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
+    def _payload(mid: int) -> tuple[str | None, bytes | None]:
+        r, flip = mid % 6, bool((mid // 6) % 2)
+        if r == 0:
+            return png_pixel_payload(mid)
+        if r == 1:
+            return jpeg_pixel_payload(mid)
+        if r == 2:
+            gw, gh, _ = _gif_synth_args(mid)
+            return "image/gif", make_gif(gw, gh, interlace=flip)
+        if r == 3:
+            return bmp_payload(mid)
+        if r == 4:
+            tw, th, tf, _ = _tiff_synth_args(mid)
+            return "image/tiff", make_tiff(tw, th, tf, big_endian=flip)
+        return None, None
 
-        for pdf in batches:
-            kinds: list[str | None] = []
-            payloads: list[bytes | None] = []
-            for mid_ in pdf["media_id"]:
-                mid = int(mid_)
-                r = mid % 6
-                if r == 0:
-                    kinds.append("image/png")
-                    pw, ph = _img_synth_dims(mid)
-                    payloads.append(make_png(pw, ph, bit_depth=8, pixels=True))
-                elif r == 1:
-                    kinds.append("image/jpeg")
-                    jw, jh = _jpeg_pixel_synth_dims(mid)
-                    payloads.append(make_jpeg(jw, jh, pixels=True))
-                elif r == 2:
-                    kinds.append("image/gif")
-                    gw, gh, _ = _gif_synth_args(mid)
-                    # mid % 6 == 2 pins mid's parity, so the
-                    # parity-derived variation bits must come from
-                    # mid // 6 here or the mixed corpus would never
-                    # exercise interlaced GIFs / big-endian TIFFs
-                    # (stats are variation-invariant: oracle unchanged)
-                    payloads.append(
-                        make_gif(gw, gh, interlace=bool((mid // 6) % 2))
-                    )
-                elif r == 3:
-                    kinds.append("image/bmp")
-                    payloads.append(make_bmp(*_bmp_synth_args(mid)))
-                elif r == 4:
-                    kinds.append("image/tiff")
-                    tw, th, tf, _ = _tiff_synth_args(mid)
-                    payloads.append(
-                        make_tiff(tw, th, tf,
-                                  big_endian=bool((mid // 6) % 2))
-                    )
-                else:
-                    kinds.append(None)
-                    payloads.append(None)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "media_type": kinds,
-                 "payload": payloads}
-            )
-
-    return src.mapInPandas(_build, schema=MEDIA_SCHEMA)
+    return _synthesize(ids, _payload)
 
 
 def media_pixel_stats(media: DataFrame) -> DataFrame:
@@ -3836,19 +3588,4 @@ def media_pixel_stats(media: DataFrame) -> DataFrame:
             return decode_tiff_pixels(payload)
         return None
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        cols = [f.name for f in PIXEL_STATS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                # NULL binary cells arrive as None; bytes(None) raises
-                # — one bad row must never kill a 100 TB batch
-                st = _route(bytes(payload)) if payload is not None else None
-                if st is not None:
-                    rows.append({"media_id": mid,
-                                 **{k: st[k] for k in cols if k != "media_id"}})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(_stats, schema=PIXEL_STATS_SCHEMA)
+    return _decoded_rows(media, _route, PIXEL_STATS_SCHEMA)

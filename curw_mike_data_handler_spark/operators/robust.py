@@ -75,6 +75,12 @@ def _nullsafe_bjoin(
 _INF = float("inf")
 
 
+def _sql_name(col: str) -> str:
+    """``col`` as a quoted SQL identifier, for the ``F.expr`` forms of
+    the higher-order columns below."""
+    return "`" + col.replace("`", "``") + "`"
+
+
 def _finite(vd: Column) -> Column:
     return ~F.isnan(vd) & (vd > F.lit(-_INF)) & (vd < F.lit(_INF))
 
@@ -103,35 +109,24 @@ def _bucket_expr(vd: Column, vmin: Column, vmax: Column, nb: int) -> Column:
     )
 
 
-def _walk_to_rank(vals: Column, off: Column, target: Column) -> Column:
+def _walk_to_rank(vals: str, off: str, target: str) -> Column:
     """Walk a sorted ``array<struct<__v, __c>>`` of distinct values and
     their counts: the first ``__v`` whose running count, seeded with
     ``off`` (the count of everything before the array), reaches the
     1-based rank ``target``; NULL when the array ends first.  The
-    found-flag scheme avoids needing ``__v``'s type for a NULL
-    literal."""
-    return F.aggregate(
-        vals,
-        F.struct(
-            off.alias("acc"),
-            F.try_element_at(vals, F.lit(1))["__v"].alias("key"),
-            F.lit(False).alias("found"),
-        ),
-        lambda st, x: F.when(
-            (~st.found) & (st.acc + x["__c"] >= target),
-            F.struct(
-                (st.acc + x["__c"]).alias("acc"),
-                x["__v"].alias("key"),
-                F.lit(True).alias("found"),
-            ),
-        ).otherwise(
-            F.struct(
-                (st.acc + x["__c"]).alias("acc"),
-                st.key.alias("key"),
-                st.found.alias("found"),
-            )
-        ),
-        lambda st: F.when(st.found, st.key),
+    arguments are SQL expressions: one ``F.expr`` builds the column in
+    one call, where a Python-lambda ``F.aggregate`` costs a Py4J round
+    trip per sub-expression.  The found-flag scheme avoids needing
+    ``__v``'s type for a NULL literal."""
+    return F.expr(
+        f"aggregate({vals},"
+        f" named_struct('acc', {off}, 'key', try_element_at({vals}, 1).__v,"
+        " 'found', false),"
+        f" (st, x) -> CASE WHEN NOT st.found AND st.acc + x.__c >= {target}"
+        " THEN named_struct('acc', st.acc + x.__c, 'key', x.__v, 'found', true)"
+        " ELSE named_struct('acc', st.acc + x.__c, 'key', st.key,"
+        " 'found', st.found) END,"
+        " st -> CASE WHEN st.found THEN st.key END)"
     )
 
 
@@ -198,30 +193,18 @@ def select_values_at_ranks(
     )
     # 2) walk the histogram once per target: the bucket where the
     # running weight first reaches __target, and the weight before it
-    zero = F.lit(0).cast("long")
-    nul = F.lit(None).cast("long")
     rb = _nullsafe_bjoin(targets, hist, by).select(
         *by,
         "__tid",
         "__target",
         *passthrough,
-        F.aggregate(
-            F.col("__hist"),
-            F.struct(zero.alias("acc"), nul.alias("b"), nul.alias("off")),
-            lambda st, x: F.when(
-                st.b.isNull() & (st.acc + x["__bc"] >= F.col("__target")),
-                F.struct(
-                    (st.acc + x["__bc"]).alias("acc"),
-                    x["__b"].alias("b"),
-                    st.acc.alias("off"),
-                ),
-            ).otherwise(
-                F.struct(
-                    (st.acc + x["__bc"]).alias("acc"),
-                    st.b.alias("b"),
-                    st.off.alias("off"),
-                )
-            ),
+        F.expr(
+            "aggregate(__hist, named_struct('acc', CAST(0 AS BIGINT),"
+            " 'b', CAST(NULL AS BIGINT), 'off', CAST(NULL AS BIGINT)),"
+            " (st, x) -> CASE WHEN st.b IS NULL AND st.acc + x.__bc >= __target"
+            " THEN named_struct('acc', st.acc + x.__bc, 'b', x.__b, 'off', st.acc)"
+            " ELSE named_struct('acc', st.acc + x.__bc, 'b', st.b, 'off', st.off)"
+            " END)"
         ).alias("__loc"),
     ).select(
         *by,
@@ -256,9 +239,7 @@ def select_values_at_ranks(
         "__tid",
         "__target",
         *passthrough,
-        _walk_to_rank(F.col("__vals"), F.col("__off"), F.col("__target")).alias(
-            "__key"
-        ),
+        _walk_to_rank("__vals", "__off", "__target").alias("__key"),
     )
 
 
@@ -459,9 +440,9 @@ def exact_grouped_percentiles(
             F.when(sketched, c("__below")[pi]).otherwise(c("__below")[0]).alias(
                 "__off"
             ),
-            F.when(
-                sketched, F.filter("__cands", lambda x: x["__j"] == pi)
-            ).otherwise(c("__cands")).alias("__vals"),
+            F.when(sketched, F.expr("filter(__cands, x -> x.__j = __pi)"))
+            .otherwise(c("__cands"))
+            .alias("__vals"),
         )
     )
 
@@ -476,8 +457,8 @@ def exact_grouped_percentiles(
         "__lo",
         "__hi",
         "__off",
-        _walk_to_rank(c("__vals"), off, lo + 1 - nneg).alias("__wlo"),
-        _walk_to_rank(c("__vals"), off, hi + 1 - nneg).alias("__whi"),
+        _walk_to_rank("__vals", "__off", "__lo + 1 - __nneg").alias("__wlo"),
+        _walk_to_rank("__vals", "__off", "__hi + 1 - __nneg").alias("__whi"),
     )
 
     def _key(t: Column, w: Column) -> Column:
@@ -716,7 +697,7 @@ def equidepth_bins(
     return joined.withColumn(
         bin_col,
         F.when(v.isNull(), F.lit(k)).otherwise(
-            F.size(F.filter(F.col("__edges"), lambda e: e < v)) + F.lit(1)
+            F.expr(f"size(filter(__edges, e -> e < {_sql_name(value_col)})) + 1")
         ),
     ).drop("__edges")
 
@@ -796,16 +777,14 @@ def distribution_ranks(
         joined = df.crossJoin(F.broadcast(df.groupBy().agg(*agg)))
 
     v = F.col(value_col).cast("double")
-    edges = F.transform(F.col("__edges"), lambda e: e.cast("double"))
+    edges = F.expr("transform(__edges, e -> CAST(e AS DOUBLE))")
     # 0-based index of the edge interval [e_j, e_{j+1}) containing v:
     # count of edges <= v, minus one, clamped into [0, m-1].
-    j = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(m - 1),
-            F.size(F.filter(edges, lambda e: e <= v)) - F.lit(1),
-        ),
+    below = F.expr(
+        "size(filter(__edges, e -> CAST(e AS DOUBLE)"
+        f" <= CAST({_sql_name(value_col)} AS DOUBLE)))"
     )
+    j = F.greatest(F.lit(0), F.least(F.lit(m - 1), below - F.lit(1)))
     e_lo = F.element_at(edges, j + F.lit(1))
     e_hi = F.element_at(edges, j + F.lit(2))
     frac = F.when(e_hi > e_lo, (v - e_lo) / (e_hi - e_lo)).otherwise(F.lit(0.5))

@@ -37,16 +37,17 @@ from curw_mike_data_handler_spark.operators.weighted import weighted_group_sum
 from curw_mike_data_handler_spark.sources.csv_io import write_single_csv
 
 
-def fresh_series_ids(run: DataFrame, model: str, obs_end_min) -> DataFrame:
+def fresh_series_ids(run: DataFrame, model: str, obs_end_min=None) -> DataFrame:
     """Staleness filter on the run registry (rf_linux:115-121):
-    SELECT id, grid_id WHERE model=… AND obs_end >= …; obs station id
-    is the 2nd underscore field of grid_id (rf_linux:126-127)."""
-    return (
-        run.filter((F.col("model") == model) & (F.col("obs_end") >= F.lit(obs_end_min)))
-        .select(
-            F.col("id").alias("series_hash"),
-            F.split(F.col("grid_id"), "_").getItem(1).alias("obs_id"),
-        )
+    SELECT id, grid_id WHERE model=… [AND obs_end >= …], the obs_end
+    predicate only when ``obs_end_min`` is given; obs station id is the
+    2nd underscore field of grid_id (rf_linux:126-127)."""
+    cond = F.col("model") == model
+    if obs_end_min is not None:
+        cond = cond & (F.col("obs_end") >= F.lit(obs_end_min))
+    return run.filter(cond).select(
+        F.col("id").alias("series_hash"),
+        F.split(F.col("grid_id"), "_").getItem(1).alias("obs_id"),
     )
 
 
@@ -67,12 +68,7 @@ def prepare_rainfall_input(
     wanted = coefficients.select(
         F.col("curw_obs_id").alias("obs_id")
     ).distinct()  # rf_linux:143
-    fresh = fresh_series_ids(run, model, obs_end_min) if obs_end_min is not None else (
-        run.filter(F.col("model") == model).select(
-            F.col("id").alias("series_hash"),
-            F.split(F.col("grid_id"), "_").getItem(1).alias("obs_id"),
-        )
-    )
+    fresh = fresh_series_ids(run, model, obs_end_min)
     # semi-join staleness ∩ wanted stations (rf_linux:153-157)
     series_dim = fresh.join(F.broadcast(wanted), "obs_id", "left_semi")
 
