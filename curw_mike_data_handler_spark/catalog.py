@@ -2586,7 +2586,7 @@ def multimodal_jpeg_progressive_pixels_q(spark, sf_dir):
     payload is a genuine multi-scan Annex-G stream (interleaved DC
     first with point transform Al=1, per-band per-component AC first
     with EOB-run codes, then DC/AC refinement scans carrying
-    correction bits), and operators/multimodal._decode_jpeg_progressive
+    correction bits), and operators/multimodal.decode_jpeg_pixels
     accumulates coefficients across the scans before one vectorized
     dequant + IDCT pass.  The raster is the SAME closed-form
     block-constant image as the baseline query (successive

@@ -47,25 +47,21 @@ Decode comes in two layers:
   a closed-form waveform at every integer PCM width (8-bit unsigned,
   16/24/32-bit signed) and ``decode_wav_samples`` walks the RIFF
   chunks and unpacks the frames — the audio twin of the PNG path.
-* **Baseline JPEG pixel decode is REAL, stdlib+numpy only**:
-  ``make_jpeg(pixels=True)`` writes a complete entropy-coded 4:4:4
-  scan (canonical Huffman tables shipped in DHT, all-1s quant) and
-  ``decode_jpeg_pixels`` genuinely Huffman-decodes, dequantizes, and
-  IDCTs it; the block-constant raster makes the round-trip bit-exact
-  (DC-only blocks), so the stats oracle is a closed form.  The
-  AC/zigzag path is property-tested against an independent IDCT.
-  Multi-scan SEQUENTIAL frames (one non-interleaved scan per
-  component, T.81 A.2.2 — ``make_multiscan_baseline_jpeg`` is the
-  encoder twin) decode too, including DHT/DRI updates between scans
-  and the MCU-padding blocks such scans legally never code.
-* **Progressive (SOF2) JPEG pixel decode is REAL, stdlib+numpy
-  only**: ``make_progressive_jpeg_from_coefficients`` writes genuine
-  T.81 Annex-G multi-scan streams (spectral selection + successive
-  approximation) and ``_decode_jpeg_progressive`` accumulates
-  coefficients across DC/AC first and refinement scans (EOB runs,
-  correction-bit sweeps) before one vectorized dequant + IDCT —
-  with Al=1 plus a full refinement pass the reconstruction is
-  bit-identical to baseline, so the same closed-form oracle applies.
+* **JPEG pixel decode is REAL, stdlib+numpy only**, for sequential
+  (SOF0/SOF1) and progressive (SOF2) Huffman frames.  T.81 codes both
+  inside one marker syntax, so ``decode_jpeg_pixels`` is one marker
+  walk and ``_decode_scan`` one scan driver; only the per-block
+  entropy step depends on the frame type.  ``make_jpeg(pixels=True)``
+  writes a complete entropy-coded 4:4:4 scan of a block-constant
+  raster (DC-only blocks, all-1s quant), so the round-trip is
+  bit-exact and the stats oracle is a closed form;
+  ``make_progressive_jpeg`` carries the same raster through Annex-G
+  spectral-selection + successive-approximation scans (Al=1 plus a
+  full refinement pass reconstructs it exactly).  The encoder twins
+  share one JFIF header builder, and through them the AC/zigzag,
+  restart, subsampled and multi-scan sequential (T.81 A.2.2: DHT/DRI
+  updates between scans, uncoded MCU-padding blocks) paths are
+  property-tested against an independent IDCT.
 * **Only arithmetic-coded / hierarchical JPEG and non-MJPEG video
   codecs stay STUBBED** (``decode_image``) — those genuinely need
   native libraries, absent in this container.
@@ -358,7 +354,9 @@ def make_png(width: int, height: int, bit_depth: int = 8, pixels: bool = False,
     return out + _png_chunk(b"IEND", b"")
 
 
-# --- baseline JPEG entropy layer (pure stdlib; ITU T.81) ------------
+# --- JPEG codec (pure stdlib + numpy; ITU T.81): one header builder,
+# one restart segmenter and one scan-unit walk shared by the encoders;
+# one marker walk and one scan driver in the decoder -----------------
 
 # zig-zag scan order (T.81 figure 5): zigzag index -> raster index
 _JPEG_ZIGZAG = [
@@ -376,6 +374,9 @@ _JPEG_DC_VALS = list(range(12))
 _JPEG_AC_BITS = [0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
 _JPEG_AC_VALS = [0x00, 0x01, 0x02, 0x03, 0x04, 0x05, 0x06, 0x07,
                  0x08, 0x09, 0x0A, 0x11, 0x12, 0x21, 0x31, 0xF0]
+
+# frame markers: SOF0-SOF15 minus DHT (C4), JPG (C8) and DAC (CC)
+_SOF_MARKERS = set(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
 
 
 def _huff_canonical(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -426,6 +427,122 @@ def _jpeg_category(v: int) -> tuple[int, int]:
     return t, (v if v > 0 else v + (1 << t) - 1)
 
 
+def _put_dc(w: _JpegBitWriter, dc_codes: dict, diff: int) -> None:
+    """One DC difference: its size category's code, then the appended
+    bits (T.81 F.1.2.1) — the sequential and the progressive DC-first
+    coding are the same step."""
+    t, bits = _jpeg_category(diff)
+    code, length = dc_codes[t]
+    w.put(code, length)
+    if t:
+        w.put(bits, t)
+
+
+def _scan_with_restarts(encode_chunk, units: list, restart_interval: int) -> bytes:
+    """Emit one scan's entropy bytes, segmented per T.81 E.1.4 when
+    ``restart_interval`` > 0: each interval of restart-countable units
+    (MCUs for interleaved scans, blocks otherwise) is encoded with
+    fresh DC predictors / EOB-run state, byte-aligned with 1-padding,
+    and joined by RSTn markers cycling mod 8.  Without restarts the
+    whole scan is one interval."""
+    step = restart_interval or len(units)
+    out = bytearray()
+    for n, gi in enumerate(range(0, len(units), step) if step else [0]):
+        if gi:
+            out += bytes([0xFF, 0xD0 + ((n - 1) % 8)])
+        w = _JpegBitWriter()
+        encode_chunk(w, units[gi : gi + step])
+        w.flush()
+        out += w.buf
+    return bytes(out)
+
+
+def _jfif_header(
+    sof: int, width: int, height: int, comps: list[tuple[int, int, int]],
+    ac_table: tuple[list[int], list[int]] | None = None,
+    restart_interval: int = 0,
+) -> bytes:
+    """SOI + APP0 (JFIF 1.01, 1:1 aspect) + the SOFn frame header of
+    8-bit ``comps`` — (h, v, tq) per component, ids 1..n — which every
+    encoder here writes.  With an AC table spec ``ac_table = (bits,
+    vals)`` the stream carries pixels, and its tables ride along: one
+    all-1s DQT before the frame header, the compact DC table and the
+    given AC table in DHT after it, then a DRI segment when
+    ``restart_interval`` > 0."""
+    import struct
+
+    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
+        ">HH", 1, 1
+    ) + b"\x00\x00"
+    frame = bytes([0xFF, sof]) + struct.pack(
+        ">HBHHB", 8 + 3 * len(comps), 8, height, width, len(comps)
+    ) + b"".join(
+        bytes([c + 1, (ch << 4) | cv, tq]) for c, (ch, cv, tq) in enumerate(comps)
+    )
+    if ac_table is None:
+        return b"\xff\xd8" + app0 + frame
+    dqt = b"\xff\xdb" + struct.pack(">HB", 2 + 1 + 64, 0x00) + bytes([1] * 64)
+    dht = b"".join(
+        b"\xff\xc4" + struct.pack(">HB", 2 + 1 + 16 + len(vals), tc_th)
+        + bytes(bits) + bytes(vals)
+        for tc_th, (bits, vals) in (
+            (0x00, (_JPEG_DC_BITS, _JPEG_DC_VALS)), (0x10, ac_table)
+        )
+    )
+    dri = (
+        b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
+        if restart_interval
+        else b""
+    )
+    return b"\xff\xd8" + app0 + dqt + frame + dht + dri
+
+
+def _sos(comp_ids: list[int], ss: int = 0, se: int = 63,
+         ah: int = 0, al: int = 0) -> bytes:
+    """SOS header over ``comp_ids`` (every component on Huffman tables
+    0/0) with spectral band Ss..Se and successive approximation Ah/Al;
+    the defaults are a sequential scan's full-precision 0..63 band."""
+    import struct
+
+    return (
+        b"\xff\xda"
+        + struct.pack(">HB", 6 + 2 * len(comp_ids), len(comp_ids))
+        + b"".join(bytes([cid, 0x00]) for cid in comp_ids)
+        + bytes([ss, se, (ah << 4) | al])
+    )
+
+
+def _comp_grid(w: int, h: int, ch: int, cv: int, hmax: int, vmax: int) -> tuple[int, int]:
+    """(blocks across, blocks down) of a component's OWN block grid:
+    its sample dimensions ceil(w·h_c/hmax) × ceil(h·v_c/vmax) (T.81
+    A.1.1) in 8×8 blocks, without the frame's MCU padding."""
+    return -(-(-(-(w * ch) // hmax)) // 8), -(-(-(-(h * cv) // vmax)) // 8)
+
+
+def _scan_units(scan: list, hmax: int, vmax: int, w: int, h: int) -> list:
+    """One scan's restart-countable units in coding order, each a list
+    of (tag, block row, block col) on the component's block grid, for
+    ``scan`` = one (tag, h, v) per scan component.  An interleaved
+    scan (more than one component) walks the frame's MCU grid with h×v
+    blocks per component (T.81 A.2.3); a non-interleaved scan walks
+    its one component's own grid, one block per unit (A.2.2).  The
+    encoder and the decoder both walk scans through it."""
+    if len(scan) > 1:
+        return [
+            [
+                (tag, my * cv + y, mx * ch + x)
+                for tag, ch, cv in scan
+                for y in range(cv)
+                for x in range(ch)
+            ]
+            for my in range(-(-h // (8 * vmax)))
+            for mx in range(-(-w // (8 * hmax)))
+        ]
+    ((tag, ch, cv),) = scan
+    bxc, byc = _comp_grid(w, h, ch, cv, hmax, vmax)
+    return [[(tag, by, bx)] for by in range(byc) for bx in range(bxc)]
+
+
 def _jpeg_entropy_encode(
     blocks_per_mcu: list[list[list[int]]],
     comp_of: list[int] | None = None,
@@ -437,56 +554,41 @@ def _jpeg_entropy_encode(
     prediction (defaults to identity — one block per component, i.e.
     4:4:4; a 4:2:0 MCU would pass [0,0,0,0,1,2]).  Quantization is the
     caller's business (tables are all 1s here).  ``restart_interval``
-    > 0 segments the scan per T.81 E.1.4: byte-align (1-padded), emit
-    RSTn cycling mod 8, and reset every DC prediction after each
-    interval of MCUs."""
-    if restart_interval:
-        out = bytearray()
-        for n, gi in enumerate(range(0, len(blocks_per_mcu), restart_interval)):
-            if gi:
-                out += bytes([0xFF, 0xD0 + ((n - 1) % 8)])
-            out += _jpeg_entropy_encode(
-                blocks_per_mcu[gi : gi + restart_interval], comp_of
-            )
-        return bytes(out)
+    > 0 segments the scan per T.81 E.1.4 (``_scan_with_restarts``):
+    byte-align (1-padded), emit RSTn cycling mod 8, and reset every DC
+    prediction after each interval of MCUs."""
     dc_codes = _huff_canonical(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _huff_canonical(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    w = _JpegBitWriter()
-    comp_of = comp_of or list(range(len(blocks_per_mcu[0])))
-    pred = [0] * (max(comp_of) + 1)
-    for mcu in blocks_per_mcu:
-        for pos, block in enumerate(mcu):
-            c = comp_of[pos]
-            diff = block[0] - pred[c]
-            pred[c] = block[0]
-            t, bits = _jpeg_category(diff)
-            code, length = dc_codes[t]
-            w.put(code, length)
-            if t:
-                w.put(bits, t)
-            k = 1
-            while k < 64:
-                run = 0
-                while k < 64 and block[k] == 0:
-                    run += 1
+
+    def encode(w: _JpegBitWriter, mcus: list) -> None:
+        comps = comp_of or list(range(len(mcus[0])))
+        pred = [0] * (max(comps) + 1)
+        for mcu in mcus:
+            for pos, block in enumerate(mcu):
+                c = comps[pos]
+                _put_dc(w, dc_codes, block[0] - pred[c])
+                pred[c] = block[0]
+                k = 1
+                while k < 64:
+                    run = 0
+                    while k < 64 and block[k] == 0:
+                        run += 1
+                        k += 1
+                    if k == 64:
+                        code, length = ac_codes[0x00]  # EOB
+                        w.put(code, length)
+                        break
+                    while run >= 16:
+                        code, length = ac_codes[0xF0]  # ZRL
+                        w.put(code, length)
+                        run -= 16
+                    t, bits = _jpeg_category(block[k])
+                    code, length = ac_codes[(run << 4) | t]
+                    w.put(code, length)
+                    w.put(bits, t)
                     k += 1
-                if k == 64:
-                    code, length = ac_codes[0x00]  # EOB
-                    w.put(code, length)
-                    break
-                while run >= 16:
-                    code, length = ac_codes[0xF0]  # ZRL
-                    w.put(code, length)
-                    run -= 16
-                t, bits = _jpeg_category(block[k])
-                code, length = ac_codes[(run << 4) | t]
-                w.put(code, length)
-                w.put(bits, t)
-                k += 1
-            else:
-                pass
-    w.flush()
-    return bytes(w.buf)
+
+    return _scan_with_restarts(encode, blocks_per_mcu, restart_interval)
 
 
 def _jpeg_block_value(bx: int, by: int, c: int) -> int:
@@ -495,6 +597,22 @@ def _jpeg_block_value(bx: int, by: int, c: int) -> int:
     all-1s quant tables decode is BIT-EXACT and the DuckDB oracle can
     recompute image sums from (width, height) alone."""
     return 16 * (bx % 12) + 4 * (by % 12) + 5 * c
+
+
+@_functools.lru_cache(maxsize=4096)
+def _block_constant_jpeg(encode, width: int, height: int, off: int) -> bytes:
+    """The closed-form raster ``_jpeg_block_value`` + ``off`` as 4:4:4
+    MCUs of DC-only blocks, written by the coefficient encoder
+    ``encode`` (``make_jpeg_from_coefficients`` or its progressive
+    twin) — every synthesized pixel JPEG, still, progressive and MJPEG
+    frame alike.  Cached: a corpus repeats few (width, height, off)."""
+    mcus = [
+        [[8 * (_jpeg_block_value(bx, by, c) + off - 128)] + [0] * 63
+         for c in range(3)]
+        for by in range(height // 8)
+        for bx in range(width // 8)
+    ]
+    return encode(width, height, mcus)
 
 
 def make_jpeg(width: int, height: int, pixels: bool = False) -> bytes:
@@ -510,20 +628,11 @@ def make_jpeg(width: int, height: int, pixels: bool = False) -> bytes:
     raster ``_jpeg_block_value`` (dimensions must be multiples of 8).
     Block-constant ⇒ DC-only coefficients ⇒ the decode round-trip is
     exact, which is what lets the pixel stats be value-oracled."""
-    import struct
-
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
-        ">HH", 1, 1
-    ) + b"\x00\x00"
     if not pixels:
-        sof0 = b"\xff\xc0" + struct.pack(
-            ">HBHHB", 8 + 3 * 3, 8, height, width, 3
-        ) + bytes([1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1])
-        return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
+        header = _jfif_header(0xC0, width, height, [(2, 2, 0), (1, 1, 1), (1, 1, 1)])
+        return header + b"\xff\xd9"
 
-    # the off=0 frame of the MJPEG builder IS the still image — one
-    # MCU-construction site (and the LRU-cached encode) for both paths
-    return _make_mjpeg_frame_cached(width, height, 0)
+    return _block_constant_jpeg(make_jpeg_from_coefficients, width, height, 0)
 
 
 def make_jpeg_from_coefficients(
@@ -541,35 +650,14 @@ def make_jpeg_from_coefficients(
     precision).  Exists so tests can drive the decoder's
     AC/zigzag/IDCT and restart paths against an independent
     reference."""
-    import struct
-
     if width % 8 or height % 8 or width == 0 or height == 0:
         raise ValueError("pixel JPEGs are built at multiple-of-8 dimensions")
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
-        ">HH", 1, 1
-    ) + b"\x00\x00"
-    dqt = b"\xff\xdb" + struct.pack(">HB", 2 + 1 + 64, 0x00) + bytes([1] * 64)
-    sof0 = (b"\xff\xc1" if extended else b"\xff\xc0") + struct.pack(
-        ">HBHHB", 8 + 3 * 3, 8, height, width, 3
-    ) + bytes([1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0])
-    dht = (
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_DC_VALS), 0x00)
-        + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_AC_VALS), 0x10)
-        + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
+    header = _jfif_header(
+        0xC1 if extended else 0xC0, width, height, [(1, 1, 0)] * 3,
+        (_JPEG_AC_BITS, _JPEG_AC_VALS), restart_interval,
     )
-    dri = (
-        b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-        if restart_interval
-        else b""
-    )
-    sos = b"\xff\xda" + struct.pack(">HB", 6 + 2 * 3, 3) + bytes(
-        [1, 0x00, 2, 0x00, 3, 0x00]
-    ) + bytes([0, 63, 0])
     scan = _jpeg_entropy_encode(mcus, restart_interval=restart_interval)
-    return b"\xff\xd8" + app0 + dqt + sof0 + dht + dri + sos + scan + b"\xff\xd9"
+    return header + _sos([1, 2, 3]) + scan + b"\xff\xd9"
 
 
 def make_multiscan_baseline_jpeg(
@@ -587,8 +675,6 @@ def make_multiscan_baseline_jpeg(
     All-1s quant table, the compact canonical Huffman tables, per-scan
     DC predictors; ``restart_interval`` segments every scan with RSTn
     (in non-interleaved scans the interval counts BLOCKS)."""
-    import struct
-
     if width % 8 or height % 8 or width == 0 or height == 0:
         raise ValueError("pixel JPEGs are built at multiple-of-8 dimensions")
     hv = hv or [(1, 1)] * len(comp_blocks)
@@ -597,40 +683,17 @@ def make_multiscan_baseline_jpeg(
     hmax = max(x for x, _ in hv)
     vmax = max(y for _, y in hv)
     for c, ((ch, cv), blocks) in enumerate(zip(hv, comp_blocks)):
-        bxc = -(-(-(-(width * ch) // hmax)) // 8)
-        byc = -(-(-(-(height * cv) // vmax)) // 8)
+        bxc, byc = _comp_grid(width, height, ch, cv, hmax, vmax)
         if len(blocks) != bxc * byc:
             raise ValueError(
                 f"component {c}: {len(blocks)} blocks != grid {bxc}x{byc}"
             )
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
-        ">HH", 1, 1
-    ) + b"\x00\x00"
-    dqt = b"\xff\xdb" + struct.pack(">HB", 2 + 1 + 64, 0x00) + bytes([1] * 64)
-    nc = len(comp_blocks)
-    sof0 = b"\xff\xc0" + struct.pack(
-        ">HBHHB", 8 + 3 * nc, 8, height, width, nc
-    ) + b"".join(
-        bytes([c + 1, (ch << 4) | cv, 0]) for c, (ch, cv) in enumerate(hv)
-    )
-    dht = (
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_DC_VALS), 0x00)
-        + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_AC_VALS), 0x10)
-        + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
-    )
-    dri = (
-        b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-        if restart_interval
-        else b""
-    )
-    out = bytearray(b"\xff\xd8" + app0 + dqt + sof0 + dht + dri)
+    out = bytearray(_jfif_header(
+        0xC0, width, height, [(ch, cv, 0) for ch, cv in hv],
+        (_JPEG_AC_BITS, _JPEG_AC_VALS), restart_interval,
+    ))
     for c, blocks in enumerate(comp_blocks):
-        out += b"\xff\xda" + struct.pack(">HB", 6 + 2, 1) + bytes(
-            [c + 1, 0x00]
-        ) + bytes([0, 63, 0])
+        out += _sos([c + 1])
         out += _jpeg_entropy_encode(
             [[blk] for blk in blocks],
             comp_of=[0],
@@ -639,312 +702,10 @@ def make_multiscan_baseline_jpeg(
     return bytes(out + b"\xff\xd9")
 
 
-class _JpegBitReader:
-    """MSB-first bit reader over the entropy-coded segment with 0xFF00
-    unstuffing; raises StopIteration at any non-stuffing marker.
-
-    Bytes are pulled into the accumulator ONLY on demand (never past
-    what a request needs), so after every request fewer than 8 bits
-    remain buffered — ``align``/``at_marker`` therefore keep the exact
-    current-byte semantics the restart handling relies on."""
-
-    def __init__(self, buf: bytes, pos: int) -> None:
-        self.b = buf
-        self.i = pos
-        self.acc = 0
-        self.n = 0
-
-    def bits(self, n: int) -> int:
-        acc, have, b, i = self.acc, self.n, self.b, self.i
-        while have < n:
-            if i >= len(b):
-                raise StopIteration
-            byte = b[i]
-            if byte == 0xFF:
-                nxt = b[i + 1] if i + 1 < len(b) else 0xD9
-                if nxt != 0x00:
-                    raise StopIteration  # real marker (EOI/RST handled above)
-                i += 2
-            else:
-                i += 1
-            acc = (acc << 8) | byte
-            have += 8
-        have -= n
-        self.acc = acc & ((1 << have) - 1)
-        self.n = have
-        self.i = i
-        return (acc >> have) & ((1 << n) - 1)
-
-    def bit(self) -> int:
-        return self.bits(1)
-
-    def align(self) -> None:
-        self.n = 0
-        self.acc = 0
-
-    def at_marker(self) -> int | None:
-        """Byte-aligned peek: the marker byte if one is next, else None."""
-        if self.i + 1 < len(self.b) and self.b[self.i] == 0xFF and self.b[self.i + 1] != 0x00:
-            return self.b[self.i + 1]
-        return None
-
-
-def _jpeg_extend(bits: int, t: int) -> int:
-    """T.81 F.2.2.1 EXTEND: t appended bits -> signed coefficient."""
-    if t == 0:
-        return 0
-    return bits if bits >= (1 << (t - 1)) else bits - (1 << t) + 1
-
-
-def _huff_dec_table(codes: dict[int, tuple[int, int]]) -> tuple[dict, int]:
-    """Decode-side table: ((code, length) -> symbol, min code length).
-    Reading the minimum length in one bulk request resolves most
-    symbols in a single lookup (T.81 F.16 reads MINCODE-many bits
-    first for the same reason); compact/flat tables resolve in one."""
-    inv = {(c, ln): s for s, (c, ln) in codes.items()}
-    return inv, min(ln for _c, ln in codes.values())
-
-
-def _huff_decode(reader: _JpegBitReader, table: tuple[dict, int]) -> int:
-    inv, length = table
-    code = reader.bits(length)
-    while length < 16:
-        sym = inv.get((code, length))
-        if sym is not None:
-            return sym
-        code = (code << 1) | reader.bits(1)
-        length += 1
-    sym = inv.get((code, 16))
-    if sym is not None:
-        return sym
-    raise ValueError("invalid Huffman code")
-
-
-def decode_jpeg_pixels(b: bytes) -> dict | None:
-    """REAL baseline JPEG pixel decode, stdlib+numpy only: marker walk
-    → DQT/DHT/SOF0/DRI/SOS parse → Huffman entropy decode (byte
-    unstuffing, restart markers) → dequantize → exact float 8×8 IDCT →
-    level shift + clamp → per-component planes (replication upsample
-    for subsampled components), cropped to the frame dimensions.
-
-    Handles MULTI-SCAN sequential frames too (ADVICE r6 #1): T.81
-    allows a baseline frame to split its components over several SOS
-    segments (e.g. one non-interleaved scan per component, each over
-    the component's OWN block grid per A.2.2, with DHT/DRI updates
-    between scans); the walk keeps decoding scans until EOI and only
-    then runs the shared IDCT tail.  MCU-padding blocks that
-    non-interleaved scans legally never code are zero-filled; a block
-    INSIDE a component's grid left uncoded is malformed → None.
-
-    Stats run over the decoded COMPONENT SAMPLES at full resolution
-    (no colorspace conversion — the entropy/transform layers are what
-    the oracle attests; a YCbCr→RGB matmul would only wrap them).
-    Returns None for non-JPEG / non-baseline / scanless / truncated
-    payloads (one bad blob must not kill a batch); raises nothing."""
-    if b is None:
-        # NULL binary cells reach decoders as None; NULL-safety is a
-        # property of the decode layer, not of each caller (r8 review)
-        return None
-    import struct
-
-    import numpy as np
-
-    try:
-        if b[:2] != b"\xff\xd8":
-            return None
-        i = 2
-        qt: dict[int, list[int]] = {}
-        huff: dict[tuple[int, int], tuple[dict, int]] = {}
-        comps: list[tuple[int, int, int, int]] = []  # (id, h, v, tq)
-        w = h = None
-        restart = 0
-        coefs: list | None = None
-        mcux = mcuy = hmax = vmax = 0
-        saw_scan = False
-        while i + 4 <= len(b):
-            if b[i] != 0xFF:
-                return None
-            # T.81 B.1.1.2: any number of 0xFF fill bytes may precede
-            # a marker — skip padding so m is the real marker byte
-            while i + 1 < len(b) and b[i + 1] == 0xFF:
-                i += 1
-            m = b[i + 1]
-            if m == 0xD9:
-                break
-            (seglen,) = struct.unpack(">H", b[i + 2 : i + 4])
-            data = b[i + 4 : i + 2 + seglen]
-            if m == 0xDB:  # DQT (possibly several tables per segment)
-                j = 0
-                while j < len(data):
-                    pq, tq = data[j] >> 4, data[j] & 15
-                    if pq:  # 16-bit tables: not baseline
-                        return None
-                    qt[tq] = list(data[j + 1 : j + 65])
-                    j += 65
-            elif m == 0xC4:  # DHT
-                j = 0
-                while j < len(data):
-                    tc, th = data[j] >> 4, data[j] & 15
-                    bits = list(data[j + 1 : j + 17])
-                    nv = sum(bits)
-                    vals = list(data[j + 17 : j + 17 + nv])
-                    codes = _huff_canonical(bits, vals)
-                    huff[(tc, th)] = _huff_dec_table(codes)
-                    j += 17 + nv
-            elif m in (0xC0, 0xC1):  # SOF0 baseline / SOF1 extended seq.
-                # SOF1 (extended sequential, Huffman) is bit-identical
-                # to baseline at 8-bit precision — it only lifts table-
-                # count limits our dict-keyed tables never had; 12-bit
-                # precision stays rejected below
-                if data[0] != 8 or comps:
-                    return None
-                h, w = struct.unpack(">HH", data[1:5])
-                nc = data[5]
-                for k in range(nc):
-                    cid, hv, tq = data[6 + 3 * k : 9 + 3 * k]
-                    comps.append((cid, hv >> 4, hv & 15, tq))
-                hmax = max(c[1] for c in comps)
-                vmax = max(c[2] for c in comps)
-                mcux = -(-w // (8 * hmax))
-                mcuy = -(-h // (8 * vmax))
-                # plain Python list grids during entropy decode
-                # (per-cell numpy writes cost ~10x); one batched
-                # dequant+IDCT pass at the end
-                coefs = [
-                    [[None] * (mcux * c[1]) for _ in range(mcuy * c[2])]
-                    for c in comps
-                ]
-            elif m == 0xC2:  # progressive frame: multi-scan decoder
-                return _decode_jpeg_progressive(b)
-            elif m in (0xC3, 0xC5, 0xC6, 0xC7,
-                       0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                return None  # lossless/arithmetic/hierarchical frame
-            elif m == 0xDD:  # DRI
-                (restart,) = struct.unpack(">H", data[:2])
-            elif m == 0xDA:  # SOS
-                if coefs is None:
-                    return None
-                ns = data[0]
-                scan_comps = []
-                for k in range(ns):
-                    cid, tda = data[1 + 2 * k : 3 + 2 * k]
-                    idx = next(
-                        ci for ci, c in enumerate(comps) if c[0] == cid
-                    )
-                    scan_comps.append((idx, tda >> 4, tda & 15))
-                i = _baseline_decode_scan(
-                    b, i + 2 + seglen, coefs, comps, huff, qt, scan_comps,
-                    mcux, mcuy, hmax, vmax, w, h, restart,
-                )
-                saw_scan = True
-                continue
-            i += 2 + seglen
-        if coefs is None or not saw_scan:
-            return None
-        # MCU-padding blocks outside a component's own grid are never
-        # coded by non-interleaved scans (T.81 A.2.2) — zero-fill them;
-        # uncoded blocks INSIDE the grid stay None and the IDCT tail
-        # rejects the stream
-        zero = [0] * 64
-        for ci, (_, ch, cv, _) in enumerate(comps):
-            bxc = -(-(-(-(w * ch) // hmax)) // 8)
-            byc = -(-(-(-(h * cv) // vmax)) // 8)
-            grid = coefs[ci]
-            for by in range(len(grid)):
-                row = grid[by]
-                for bx in range(len(row)):
-                    if row[bx] is None and (bx >= bxc or by >= byc):
-                        row[bx] = zero
-        return _jpeg_idct_plane_stats(coefs, comps, qt, hmax, vmax, w, h)
-    except Exception:
-        return None
-
-
-def _baseline_decode_scan(
-    b, pos, coefs, comps, huff, qt, scan_comps,
-    mcux, mcuy, hmax, vmax, w, h, restart,
-):
-    """Decode one SEQUENTIAL scan's entropy data in place; returns the
-    byte position of the next marker.  Interleaved scans (ns > 1) walk
-    the frame MCU grid with ch×cv blocks per component; a
-    non-interleaved scan (ns = 1) walks the single component's OWN
-    block grid (T.81 A.2.2) with MCU = one block — both with per-scan
-    DC predictors reset at RSTn.  Raises on malformed data (the
-    caller's except turns that into None)."""
-    reader = _JpegBitReader(b, pos)
-    if len(scan_comps) > 1:  # interleaved: unit = frame MCU
-        units = []
-        for my in range(mcuy):
-            for mx in range(mcux):
-                blocks = []
-                for ci, dc_id, ac_id in scan_comps:
-                    _, ch, cv, _ = comps[ci]
-                    for byy in range(cv):
-                        for bxx in range(ch):
-                            blocks.append(
-                                (ci, my * cv + byy, mx * ch + bxx, dc_id, ac_id)
-                            )
-                units.append(blocks)
-    else:  # non-interleaved: unit = one block over the comp's own grid
-        ci, dc_id, ac_id = scan_comps[0]
-        _, ch, cv, _ = comps[ci]
-        cw = -(-(w * ch) // hmax)  # component sample dims (T.81 A.1.1)
-        chh = -(-(h * cv) // vmax)
-        units = [
-            [(ci, by, bx, dc_id, ac_id)]
-            for by in range(-(-chh // 8))
-            for bx in range(-(-cw // 8))
-        ]
-
-    for ci, dc_id, ac_id in scan_comps:
-        tq = comps[ci][3]
-        if tq not in qt or (0, dc_id) not in huff or (1, ac_id) not in huff:
-            raise ValueError("scan references missing table")
-    pred = [0] * len(comps)
-    for uno, blocks in enumerate(units):
-        if restart and uno and uno % restart == 0:
-            reader.align()
-            mk = reader.at_marker()
-            if mk is not None and 0xD0 <= mk <= 0xD7:
-                reader.i += 2
-                pred = [0] * len(comps)
-        for ci, row, col, dc_id, ac_id in blocks:
-            zz = [0] * 64
-            t = _huff_decode(reader, huff[(0, dc_id)])
-            pred[ci] += _jpeg_extend(reader.bits(t), t)
-            zz[0] = pred[ci]
-            ac_tab = huff[(1, ac_id)]
-            k = 1
-            while k < 64:
-                rs = _huff_decode(reader, ac_tab)
-                if rs == 0x00:  # EOB
-                    break
-                if rs == 0xF0:  # ZRL
-                    k += 16
-                    continue
-                k += rs >> 4
-                t = rs & 15
-                if k > 63:
-                    raise ValueError("AC coefficient past block end")
-                zz[k] = _jpeg_extend(reader.bits(t), t)
-                k += 1
-            coefs[ci][row][col] = zz
-    reader.align()
-    return reader.i
-
-
-def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
-    """Arrow-batched baseline-JPEG pixel-stat extraction over the
-    binary payload column → PIXEL_STATS_SCHEMA rows; non-JPEG /
-    undecodable rows are dropped.  Map-only, parallelism from input
-    splits — the twin of png_pixel_stats."""
-    return _decoded_rows(media, decode_jpeg_pixels, PIXEL_STATS_SCHEMA)
-
-
-# -- progressive (SOF2) JPEG: REAL multi-scan Huffman codec ---------
+# -- progressive (SOF2) encoder: T.81 Annex G -------------------------
 #
-# T.81 Annex G spectral-selection + successive-approximation coding,
-# the successive-approximation algorithms matching the public libjpeg
+# Spectral-selection + successive-approximation coding, the
+# successive-approximation algorithms matching the public libjpeg
 # reference flow (jc/jdphuff.c): DC scans code diffs of dc >> Al then
 # one raw refinement bit per block; AC-first scans code band
 # coefficients at precision Al with EOBn run codes; AC-refinement
@@ -1000,14 +761,9 @@ def _enc_ac_first(w: "_JpegBitWriter", ac: dict,
             if abs(block[k]) >> al:
                 last = k
                 break
-        if last < 0:
-            eobrun += 1
-            if eobrun == 0x7FFF:
-                _emit_eobrun(w, ac, eobrun, none)
-                eobrun = 0
-            continue
-        _emit_eobrun(w, ac, eobrun, none)
-        eobrun = 0
+        if last >= 0:
+            _emit_eobrun(w, ac, eobrun, none)
+            eobrun = 0
         r = 0
         for k in range(ss, last + 1):
             mag = abs(block[k]) >> al
@@ -1023,7 +779,7 @@ def _enc_ac_first(w: "_JpegBitWriter", ac: dict,
             w.put(code, ln)
             w.put(mag if block[k] > 0 else (1 << nb) - 1 - mag, nb)
             r = 0
-        if last < se:
+        if last < se:  # an all-zero band, or zeros to its end
             eobrun += 1
             if eobrun == 0x7FFF:
                 _emit_eobrun(w, ac, eobrun, none)
@@ -1078,28 +834,6 @@ def _enc_ac_refine(w: "_JpegBitWriter", ac: dict,
     _emit_eobrun(w, ac, eobrun, be_bits)
 
 
-def _scan_with_restarts(encode_chunk, units: list, restart_interval: int) -> bytes:
-    """Emit one scan's entropy bytes, segmented per T.81 E.1.4 when
-    ``restart_interval`` > 0: each interval of restart-countable units
-    (MCUs for interleaved scans, blocks otherwise) is encoded with
-    fresh DC predictors / EOB-run state, byte-aligned with 1-padding,
-    and joined by RSTn markers cycling mod 8."""
-    if not restart_interval:
-        w = _JpegBitWriter()
-        encode_chunk(w, units)
-        w.flush()
-        return bytes(w.buf)
-    out = bytearray()
-    for n, gi in enumerate(range(0, len(units), restart_interval)):
-        if gi:
-            out += bytes([0xFF, 0xD0 + ((n - 1) % 8)])
-        w = _JpegBitWriter()
-        encode_chunk(w, units[gi : gi + restart_interval])
-        w.flush()
-        out += w.buf
-    return bytes(out)
-
-
 def make_progressive_jpeg_from_planes(
     width: int,
     height: int,
@@ -1127,8 +861,6 @@ def make_progressive_jpeg_from_planes(
     in the interleaved DC scans, block units in the non-interleaved
     AC scans).  Coefficient magnitudes must stay < 2**10 after
     shifting."""
-    import struct
-
     nc = len(planes)
     if len(sampling) != nc:
         raise ValueError("one (h, v) sampling factor per plane")
@@ -1146,110 +878,53 @@ def make_progressive_jpeg_from_planes(
     lo, hi = zip(*bands)
     if min(lo) < 1 or max(hi) > 63 or sorted(lo) != list(lo):
         raise ValueError("bands must partition 1..63 in order")
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" + struct.pack(
-        ">HH", 1, 1
-    ) + b"\x00\x00"
-    dqt = b"\xff\xdb" + struct.pack(">HB", 2 + 1 + 64, 0x00) + bytes([1] * 64)
-    sof2 = b"\xff\xc2" + struct.pack(
-        ">HBHHB", 8 + 3 * nc, 8, height, width, nc
-    ) + b"".join(
-        bytes([c + 1, (ch << 4) | cv, 0]) for c, (ch, cv) in enumerate(sampling)
-    )
-    dht = (
-        b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_JPEG_DC_VALS), 0x00)
-        + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + b"\xff\xc4"
-        + struct.pack(">HB", 2 + 1 + 16 + len(_PROG_AC_VALS), 0x10)
-        + bytes(_PROG_AC_BITS) + bytes(_PROG_AC_VALS)
-    )
     dc_codes = _huff_canonical(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _huff_canonical(_PROG_AC_BITS, _PROG_AC_VALS)
 
-    def sos(comp_ids: list[int], ss: int, se: int, ah: int, a_l: int) -> bytes:
-        return (
-            b"\xff\xda"
-            + struct.pack(">HB", 6 + 2 * len(comp_ids), len(comp_ids))
-            + b"".join(bytes([cid, 0x00]) for cid in comp_ids)
-            + bytes([ss, se, (ah << 4) | a_l])
+    def scan(cs: list[int], ss: int, se: int, ah: int, a_l: int) -> bytes:
+        # units of (component, block) from the decoder's own walk
+        units = [
+            [(c, planes[c][r][x]) for c, r, x in unit]
+            for unit in _scan_units(
+                [(c, *sampling[c]) for c in cs], hmax, vmax, width, height
+            )
+        ]
+        if ss == 0:
+
+            def enc(w: _JpegBitWriter, chunk: list) -> None:
+                pred = [0] * nc
+                for unit in chunk:
+                    for c, block in unit:
+                        if ah:  # DC refinement: one raw bit
+                            w.put((block[0] >> a_l) & 1, 1)
+                            continue
+                        v = block[0] >> a_l  # arithmetic shift per G.1.2.1
+                        _put_dc(w, dc_codes, v - pred[c])
+                        pred[c] = v
+
+        else:
+            enc_ac = _enc_ac_refine if ah else _enc_ac_first
+
+            def enc(w: _JpegBitWriter, chunk: list) -> None:
+                blocks = [unit[0][1] for unit in chunk]
+                enc_ac(w, ac_codes, blocks, ss, se, a_l)
+
+        return _sos([c + 1 for c in cs], ss, se, ah, a_l) + _scan_with_restarts(
+            enc, units, restart_interval
         )
 
-    dri = (
-        b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-        if restart_interval
-        else b""
-    )
-    out = bytearray(b"\xff\xd8" + app0 + dqt + sof2 + dht + dri)
-    ri = restart_interval
-    all_ids = [c + 1 for c in range(nc)]
-
-    # interleaved MCU units: (component, block) in T.81 A.2.3 order
-    mcu_units = []
-    for my in range(mcuy):
-        for mx in range(mcux):
-            unit = []
-            for c, (ch, cv) in enumerate(sampling):
-                for byy in range(cv):
-                    for bxx in range(ch):
-                        unit.append(
-                            (c, planes[c][my * cv + byy][mx * ch + bxx])
-                        )
-            mcu_units.append(unit)
-    # non-interleaved per-component block lists, row-major own grid
-    comp_blocks = [
-        [block for row in planes[c] for block in row] for c in range(nc)
-    ]
-
-    # scan 1: DC first, interleaved, point transform al
-    def _dc_first(w: "_JpegBitWriter", chunk: list) -> None:
-        pred = [0] * nc
-        for unit in chunk:
-            for c, block in unit:
-                v = block[0] >> al  # arithmetic shift per G.1.2.1
-                diff = v - pred[c]
-                pred[c] = v
-                t, bits = _jpeg_category(diff)
-                code, ln = dc_codes[t]
-                w.put(code, ln)
-                if t:
-                    w.put(bits, t)
-
-    out += sos(all_ids, 0, 0, 0, al)
-    out += _scan_with_restarts(_dc_first, mcu_units, ri)
-
-    # AC first scans: one per (band, component), non-interleaved
-    for ss, se in bands:
-        for c in range(nc):
-            out += sos([c + 1], ss, se, 0, al)
-            out += _scan_with_restarts(
-                lambda w, chunk, ss=ss, se=se: _enc_ac_first(
-                    w, ac_codes, chunk, ss, se, al
-                ),
-                comp_blocks[c],
-                ri,
-            )
-
-    # refinement passes down to full precision
-    for a in range(al, 0, -1):
-
-        def _dc_refine(w: "_JpegBitWriter", chunk: list, a=a) -> None:
-            for unit in chunk:
-                for _c, block in unit:
-                    w.put((block[0] >> (a - 1)) & 1, 1)
-
-        out += sos(all_ids, 0, 0, a, a - 1)
-        out += _scan_with_restarts(_dc_refine, mcu_units, ri)
+    out = bytearray(_jfif_header(
+        0xC2, width, height, [(ch, cv, 0) for ch, cv in sampling],
+        (_PROG_AC_BITS, _PROG_AC_VALS), restart_interval,
+    ))
+    # scan script: one DC scan of every component, then one AC scan per band
+    # and component — first at point transform al, then once per
+    # refinement pass, one bit finer each, down to full precision
+    for ah, a_l in [(0, al)] + [(a, a - 1) for a in range(al, 0, -1)]:
+        out += scan(list(range(nc)), 0, 0, ah, a_l)
         for ss, se in bands:
             for c in range(nc):
-                out += sos([c + 1], ss, se, a, a - 1)
-                out += _scan_with_restarts(
-                    lambda w, chunk, ss=ss, se=se, a=a: _enc_ac_refine(
-                        w, ac_codes, chunk, ss, se, a - 1
-                    ),
-                    comp_blocks[c],
-                    ri,
-                )
-
+                out += scan([c], ss, se, ah, a_l)
     return bytes(out + b"\xff\xd9")
 
 
@@ -1264,9 +939,8 @@ def make_progressive_jpeg_from_coefficients(
     """Progressive (SOF2) 4:4:4 stream from row-major MCUs of 3
     zigzag blocks — same input contract as
     ``make_jpeg_from_coefficients``; thin wrapper over
-    ``make_progressive_jpeg_from_planes`` with 1×1 sampling."""
-    if width % 8 or height % 8 or width == 0 or height == 0:
-        raise ValueError("pixel JPEGs are built at multiple-of-8 dimensions")
+    ``make_progressive_jpeg_from_planes`` with 1×1 sampling (which
+    rejects dimensions that are not multiples of 8)."""
     mcux = width // 8
     planes = [
         [
@@ -1281,36 +955,128 @@ def make_progressive_jpeg_from_coefficients(
     )
 
 
-@_functools.lru_cache(maxsize=4096)
 def make_progressive_jpeg(width: int, height: int) -> bytes:
     """Progressive twin of ``make_jpeg(pixels=True)``: the same
     closed-form block-constant raster ``_jpeg_block_value`` carried by
     a multi-scan SOF2 stream, so the baseline oracle's closed form is
     reused verbatim by the progressive decode query."""
-    nbx, nby = width // 8, height // 8
-    mcus = []
-    for by in range(nby):
-        for bx in range(nbx):
-            mcu = []
-            for c in range(3):
-                block = [0] * 64
-                block[0] = 8 * (_jpeg_block_value(bx, by, c) - 128)
-                mcu.append(block)
-            mcus.append(mcu)
-    return make_progressive_jpeg_from_coefficients(width, height, mcus)
+    return _block_constant_jpeg(
+        make_progressive_jpeg_from_coefficients, width, height, 0
+    )
 
 
-def _decode_jpeg_progressive(b: bytes) -> dict | None:
-    """REAL progressive (SOF2) JPEG pixel decode, stdlib+numpy only:
-    marker walk with per-scan DHT/DQT state → coefficient accumulation
-    across DC/AC first and refinement scans (EOB-run bookkeeping,
-    correction-bit sweeps, restart handling) → one vectorized
-    dequant + IDCT + stats pass at EOI.  Same return contract as the
-    baseline path of ``decode_jpeg_pixels`` (None on any malformed
-    stream, never raises)."""
+# -- decoder: one marker walk, one scan driver ------------------------
+
+class _JpegBitReader:
+    """MSB-first bit reader over the entropy-coded segment with 0xFF00
+    unstuffing; raises StopIteration at any non-stuffing marker.
+
+    Bytes are pulled into the accumulator ONLY on demand (never past
+    what a request needs), so after every request fewer than 8 bits
+    remain buffered — ``align``/``at_marker`` therefore keep the exact
+    current-byte semantics the restart handling relies on."""
+
+    def __init__(self, buf: bytes, pos: int) -> None:
+        self.b = buf
+        self.i = pos
+        self.acc = 0
+        self.n = 0
+
+    def bits(self, n: int) -> int:
+        acc, have, b, i = self.acc, self.n, self.b, self.i
+        while have < n:
+            if i >= len(b):
+                raise StopIteration
+            byte = b[i]
+            if byte == 0xFF:
+                nxt = b[i + 1] if i + 1 < len(b) else 0xD9
+                if nxt != 0x00:
+                    raise StopIteration  # real marker (EOI/RST handled above)
+                i += 2
+            else:
+                i += 1
+            acc = (acc << 8) | byte
+            have += 8
+        have -= n
+        self.acc = acc & ((1 << have) - 1)
+        self.n = have
+        self.i = i
+        return (acc >> have) & ((1 << n) - 1)
+
+    def align(self) -> None:
+        self.n = 0
+        self.acc = 0
+
+    def at_marker(self) -> int | None:
+        """Byte-aligned peek: the marker byte if one is next, else None."""
+        if self.i + 1 < len(self.b) and self.b[self.i] == 0xFF and self.b[self.i + 1] != 0x00:
+            return self.b[self.i + 1]
+        return None
+
+
+def _jpeg_extend(bits: int, t: int) -> int:
+    """T.81 F.2.2.1 EXTEND: t appended bits -> signed coefficient."""
+    if t == 0:
+        return 0
+    return bits if bits >= (1 << (t - 1)) else bits - (1 << t) + 1
+
+
+def _huff_dec_table(codes: dict[int, tuple[int, int]]) -> tuple[dict, int]:
+    """Decode-side table: ((code, length) -> symbol, min code length).
+    Reading the minimum length in one bulk request resolves most
+    symbols in a single lookup (T.81 F.16 reads MINCODE-many bits
+    first for the same reason); compact/flat tables resolve in one."""
+    inv = {(c, ln): s for s, (c, ln) in codes.items()}
+    return inv, min(ln for _c, ln in codes.values())
+
+
+def _huff_decode(reader: _JpegBitReader, table: tuple[dict, int]) -> int:
+    inv, length = table
+    code = reader.bits(length)
+    while length < 16:
+        sym = inv.get((code, length))
+        if sym is not None:
+            return sym
+        code = (code << 1) | reader.bits(1)
+        length += 1
+    sym = inv.get((code, 16))
+    if sym is not None:
+        return sym
+    raise ValueError("invalid Huffman code")
+
+
+def decode_jpeg_pixels(b: bytes) -> dict | None:
+    """REAL JPEG pixel decode, stdlib+numpy only, of sequential (SOF0
+    baseline, SOF1 extended) and progressive (SOF2) Huffman frames:
+    one marker walk (DQT/DHT/SOFn/DRI/SOS) → each scan's entropy data
+    decoded in place by ``_decode_scan`` (byte unstuffing, restart
+    markers) → one dequantize + exact float 8×8 IDCT + level shift +
+    clamp pass at EOI → per-component planes (replication upsample for
+    subsampled components), cropped to the frame dimensions.  The SOF
+    marker fixes the frame type, and only the scan driver's per-block
+    entropy step depends on it.
+
+    The walk keeps decoding scans until EOI, with DHT/DQT/DRI updates
+    between them (T.81 B.2.4).  A SEQUENTIAL frame may split its
+    components over several SOS segments (e.g. one non-interleaved
+    scan per component over the component's OWN block grid, A.2.2);
+    MCU-padding blocks that such scans legally never code are
+    zero-filled, while a block INSIDE a component's grid left uncoded
+    is malformed → None.  A PROGRESSIVE frame accumulates coefficients
+    across DC/AC first and refinement scans (Annex G: EOB runs,
+    correction-bit sweeps) in zero-initialised grids.
+
+    Stats run over the decoded COMPONENT SAMPLES at full resolution
+    (no colorspace conversion — the entropy/transform layers are what
+    the oracle attests; a YCbCr→RGB matmul would only wrap them).
+    Returns None for non-JPEG / lossless / arithmetic-coded /
+    hierarchical / 12-bit / scanless / truncated payloads (one bad blob
+    must not kill a batch); raises nothing."""
+    if b is None:
+        # NULL binary cells reach decoders as None; NULL-safety is a
+        # property of the decode layer, not of each caller (r8 review)
+        return None
     import struct
-
-    import numpy as np
 
     try:
         if b[:2] != b"\xff\xd8":
@@ -1318,15 +1084,18 @@ def _decode_jpeg_progressive(b: bytes) -> dict | None:
         i = 2
         qt: dict[int, list[int]] = {}
         huff: dict[tuple[int, int], tuple[dict, int]] = {}
-        comps: list[tuple[int, int, int, int]] = []
+        comps: list[tuple[int, int, int, int]] = []  # (id, h, v, tq)
         w = h = None
         restart = 0
         coefs: list | None = None
-        mcux = mcuy = hmax = vmax = 0
+        progressive = False
+        hmax = vmax = 0
         saw_scan = False
         while i + 4 <= len(b):
             if b[i] != 0xFF:
                 return None
+            # T.81 B.1.1.2: any number of 0xFF fill bytes may precede
+            # a marker — skip padding so m is the real marker byte
             while i + 1 < len(b) and b[i + 1] == 0xFF:
                 i += 1
             m = b[i + 1]
@@ -1334,27 +1103,31 @@ def _decode_jpeg_progressive(b: bytes) -> dict | None:
                 break
             (seglen,) = struct.unpack(">H", b[i + 2 : i + 4])
             data = b[i + 4 : i + 2 + seglen]
-            if m == 0xDB:
+            if m == 0xDB:  # DQT (possibly several tables per segment)
                 j = 0
                 while j < len(data):
                     pq, tq = data[j] >> 4, data[j] & 15
-                    if pq:
+                    if pq:  # 16-bit tables: 12-bit precision only
                         return None
                     qt[tq] = list(data[j + 1 : j + 65])
                     j += 65
-            elif m == 0xC4:
+            elif m == 0xC4:  # DHT
                 j = 0
                 while j < len(data):
                     tc, th = data[j] >> 4, data[j] & 15
                     bits = list(data[j + 1 : j + 17])
                     nv = sum(bits)
                     vals = list(data[j + 17 : j + 17 + nv])
-                    codes = _huff_canonical(bits, vals)
-                    huff[(tc, th)] = _huff_dec_table(codes)
+                    huff[(tc, th)] = _huff_dec_table(_huff_canonical(bits, vals))
                     j += 17 + nv
-            elif m == 0xC2:
+            elif m in (0xC0, 0xC1, 0xC2):  # SOF0 / SOF1 / SOF2
+                # SOF1 (extended sequential, Huffman) is bit-identical
+                # to baseline at 8-bit precision — it only lifts table-
+                # count limits our dict-keyed tables never had; 12-bit
+                # precision stays rejected, as does a second frame
                 if data[0] != 8 or comps:
                     return None
+                progressive = m == 0xC2
                 h, w = struct.unpack(">HH", data[1:5])
                 for k in range(data[5]):
                     cid, hv, tq = data[6 + 3 * k : 9 + 3 * k]
@@ -1363,54 +1136,236 @@ def _decode_jpeg_progressive(b: bytes) -> dict | None:
                 vmax = max(c[2] for c in comps)
                 mcux = -(-w // (8 * hmax))
                 mcuy = -(-h // (8 * vmax))
-                # plain Python lists during scan decode: the per-block
-                # loops touch single cells, where ndarray view creation
-                # + item assignment cost ~10x a list's; numpy enters
-                # only at the one vectorized IDCT pass below
+                # plain Python list grids during entropy decode: the
+                # per-block steps touch single cells, where ndarray
+                # item writes cost ~10x a list's; numpy enters only at
+                # the one batched dequant+IDCT pass.  Sequential cells
+                # start None so an uncoded block is caught; progressive
+                # scans refine coefficients in place from zero
                 coefs = [
                     [
-                        [[0] * 64 for _ in range(mcux * c[1])]
+                        [[0] * 64 for _ in range(mcux * c[1])] if progressive
+                        else [None] * (mcux * c[1])
                         for _ in range(mcuy * c[2])
                     ]
                     for c in comps
                 ]
-            elif m in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
-                       0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                return None  # mixed / non-progressive frame
-            elif m == 0xDD:
+            elif m in _SOF_MARKERS:
+                return None  # lossless/arithmetic/hierarchical frame
+            elif m == 0xDD:  # DRI
                 (restart,) = struct.unpack(">H", data[:2])
-            elif m == 0xDA:
+            elif m == 0xDA:  # SOS
                 if coefs is None:
                     return None
                 ns = data[0]
                 scan_comps = []
                 for k in range(ns):
                     cid, tda = data[1 + 2 * k : 3 + 2 * k]
-                    idx = next(ci for ci, c in enumerate(comps) if c[0] == cid)
+                    idx = next(
+                        ci for ci, c in enumerate(comps) if c[0] == cid
+                    )
                     scan_comps.append((idx, tda >> 4, tda & 15))
-                ss, se = data[1 + 2 * ns], data[2 + 2 * ns]
-                ah, a_l = data[3 + 2 * ns] >> 4, data[3 + 2 * ns] & 15
-                i = _prog_decode_scan(
-                    b, i + 2 + seglen, coefs, comps, huff, scan_comps,
-                    ss, se, ah, a_l, mcux, mcuy, hmax, vmax, w, h, restart,
+                # a sequential scan always codes the full 0..63 band at
+                # full precision; only a progressive one reads its
+                # Ss, Se and Ah|Al bytes
+                spectral = (
+                    tuple(data[1 + 2 * ns : 4 + 2 * ns]) if progressive else None
+                )
+                i = _decode_scan(
+                    b, i + 2 + seglen, coefs, comps, huff, qt, scan_comps,
+                    spectral, hmax, vmax, w, h, restart,
                 )
                 saw_scan = True
                 continue
             i += 2 + seglen
         if coefs is None or not saw_scan:
             return None
+        if not progressive:
+            # MCU-padding blocks outside a component's own grid are
+            # never coded by non-interleaved scans (T.81 A.2.2) —
+            # zero-fill them; uncoded blocks INSIDE the grid stay None
+            # and the IDCT tail rejects the stream
+            zero = [0] * 64
+            for ci, (_, ch, cv, _) in enumerate(comps):
+                bxc, byc = _comp_grid(w, h, ch, cv, hmax, vmax)
+                for by, row in enumerate(coefs[ci]):
+                    for bx, blk in enumerate(row):
+                        if blk is None and (bx >= bxc or by >= byc):
+                            row[bx] = zero
         return _jpeg_idct_plane_stats(coefs, comps, qt, hmax, vmax, w, h)
     except Exception:
         return None
 
 
+def _decode_scan(
+    b, pos, coefs, comps, huff, qt, scan_comps, spectral,
+    hmax, vmax, w, h, restart,
+):
+    """Decode one scan's entropy data into ``coefs`` in place; returns
+    the byte position of the next marker.  ``spectral`` is a
+    progressive scan's (Ss, Se, Ah<<4 | Al), None for a sequential one.
+    The units come from ``_scan_units``; every ``restart`` units the
+    reader byte-aligns, and an RSTn marker there resets the DC
+    predictors and the EOB run (T.81 E.1.4, G.1.2.2).  Only the
+    per-block entropy step depends on the frame type:
+
+    * sequential (F.2.2): a DC difference, then AC symbols over 1..63
+      where only EOB (0x00) ends the block and ZRL (0xF0) skips 16 — a
+      (run, 0) symbol is a skip of run+1, never an EOB run; the step
+      returns a fresh block, so uncoded cells stay None;
+    * progressive (G.1.2, libjpeg's jdphuff.c flow): DC first, DC
+      refinement, AC first (EOBn runs) and AC refinement (correction
+      bits), each refining the zero-initialised block in place.
+
+    Raises on malformed data (the walk's except turns that into None)."""
+    if spectral is None:
+        for ci, dc_id, ac_id in scan_comps:
+            tq = comps[ci][3]
+            if tq not in qt or (0, dc_id) not in huff or (1, ac_id) not in huff:
+                raise ValueError("scan references missing table")
+    else:
+        ss, se, a = spectral
+        ah, a_l = a >> 4, a & 15
+        if ss == 0 and se != 0:
+            raise ValueError("DC scan with Se != 0")
+        if ss > 0 and len(scan_comps) != 1:
+            raise ValueError("interleaved AC scan")
+
+    units = _scan_units(
+        [(sc, comps[sc[0]][1], comps[sc[0]][2]) for sc in scan_comps],
+        hmax, vmax, w, h,
+    )
+    reader = _JpegBitReader(b, pos)
+    pred = [0] * len(comps)
+    eobrun = 0
+
+    def sequential(ci, bl, dc_id, ac_id):
+        zz = [0] * 64
+        t = _huff_decode(reader, huff[(0, dc_id)])
+        pred[ci] += _jpeg_extend(reader.bits(t), t)
+        zz[0] = pred[ci]
+        ac_tab = huff[(1, ac_id)]
+        k = 1
+        while k < 64:
+            rs = _huff_decode(reader, ac_tab)
+            if rs == 0x00:  # EOB
+                break
+            if rs == 0xF0:  # ZRL
+                k += 16
+                continue
+            k += rs >> 4
+            t = rs & 15
+            if k > 63:
+                raise ValueError("AC coefficient past block end")
+            zz[k] = _jpeg_extend(reader.bits(t), t)
+            k += 1
+        return zz
+
+    def dc_first(ci, bl, dc_id, ac_id):
+        t = _huff_decode(reader, huff[(0, dc_id)])
+        pred[ci] += _jpeg_extend(reader.bits(t), t)
+        bl[0] = pred[ci] << a_l
+        return bl
+
+    def dc_refine(ci, bl, dc_id, ac_id):
+        if reader.bits(1):
+            bl[0] |= 1 << a_l
+        return bl
+
+    def ac_first(ci, bl, dc_id, ac_id):  # jdphuff decode_mcu_AC_first
+        nonlocal eobrun
+        tab = huff[(1, ac_id)]
+        if eobrun > 0:
+            eobrun -= 1
+            return bl
+        k = ss
+        while k <= se:
+            rs = _huff_decode(reader, tab)
+            r, s = rs >> 4, rs & 15
+            if s == 0:
+                if r != 15:
+                    eobrun = (1 << r) - 1
+                    if r:
+                        eobrun += reader.bits(r)
+                    break
+                k += 16
+            else:
+                k += r
+                if k > se:
+                    raise ValueError("AC coefficient past band end")
+                bl[k] = _jpeg_extend(reader.bits(s), s) << a_l
+                k += 1
+        return bl
+
+    def ac_refine(ci, bl, dc_id, ac_id):  # jdphuff decode_mcu_AC_refine
+        nonlocal eobrun
+        tab = huff[(1, ac_id)]
+        p1, m1 = 1 << a_l, -1 << a_l
+        k = ss
+        if eobrun == 0:
+            while k <= se:
+                rs = _huff_decode(reader, tab)
+                r, s = rs >> 4, rs & 15
+                newval = 0
+                if s == 0:
+                    if r != 15:
+                        eobrun = 1 << r
+                        if r:
+                            eobrun += reader.bits(r)
+                        break
+                else:
+                    newval = p1 if reader.bits(1) else m1
+                while k <= se:
+                    if bl[k] != 0:
+                        if reader.bits(1) and not (bl[k] & p1):
+                            bl[k] += p1 if bl[k] >= 0 else m1
+                    else:
+                        r -= 1
+                        if r < 0:
+                            break
+                    k += 1
+                if s:
+                    if k > se:
+                        raise ValueError("refinement past band end")
+                    bl[k] = newval
+                k += 1
+        if eobrun > 0:
+            for k in range(k, se + 1):
+                if bl[k] != 0:
+                    if reader.bits(1) and not (bl[k] & p1):
+                        bl[k] += p1 if bl[k] >= 0 else m1
+            eobrun -= 1
+        return bl
+
+    if spectral is None:
+        step = sequential
+    elif ss == 0:
+        step = dc_refine if ah else dc_first
+    else:
+        step = ac_refine if ah else ac_first
+    for uno, blocks in enumerate(units):
+        if restart and uno and uno % restart == 0:
+            reader.align()
+            mk = reader.at_marker()
+            if mk is not None and 0xD0 <= mk <= 0xD7:
+                reader.i += 2
+                pred = [0] * len(comps)
+                eobrun = 0
+        for (ci, dc_id, ac_id), row, col in blocks:
+            cells = coefs[ci][row]
+            cells[col] = step(ci, cells[col], dc_id, ac_id)
+    reader.align()
+    return reader.i
+
+
 def _jpeg_idct_plane_stats(coefs, comps, qt, hmax, vmax, w, h) -> dict:
     """One vectorized dequant + IDCT + upsample + crop + stats pass over
-    per-component grids of zigzag coefficient lists — the shared tail of
-    the baseline and progressive decoders.  Batched np.matmul, NOT
-    einsum: einsum's own summation order can differ from per-block
+    per-component grids of zigzag coefficient lists — the tail of the
+    decoder for both frame types.  Batched np.matmul, NOT einsum:
+    einsum's own summation order can differ from per-block
     (M.T @ F @ M) by 1 ulp, which flips np.round at exact half-integer
-    ties — both decoders must agree pixel-for-pixel."""
+    ties — a sequential and a progressive stream of the same
+    coefficients must decode pixel-for-pixel alike."""
     import numpy as np
 
     u = np.arange(8)
@@ -1449,130 +1404,13 @@ def _jpeg_idct_plane_stats(coefs, comps, qt, hmax, vmax, w, h) -> dict:
     }
 
 
-def _prog_decode_scan(
-    b, pos, coefs, comps, huff, scan_comps, ss, se, ah, a_l,
-    mcux, mcuy, hmax, vmax, w, h, restart,
-):
-    """Decode one progressive scan's entropy data in place; returns the
-    byte position of the next marker.  Raises on malformed data (the
-    caller's except turns that into None)."""
-    reader = _JpegBitReader(b, pos)
-    ns = len(scan_comps)
-    if ss == 0 and se != 0:
-        raise ValueError("DC scan with Se != 0")
-    if ss > 0 and ns != 1:
-        raise ValueError("interleaved AC scan")
-
-    # unit list: per restart-countable step, the blocks it covers
-    if ns > 1:  # interleaved DC scan: unit = MCU
-        units = []
-        for my in range(mcuy):
-            for mx in range(mcux):
-                blocks = []
-                for ci, dc_id, ac_id in scan_comps:
-                    _, ch, cv, _ = comps[ci]
-                    for byy in range(cv):
-                        for bxx in range(ch):
-                            blocks.append(
-                                (ci, my * cv + byy, mx * ch + bxx, dc_id, ac_id)
-                            )
-                units.append(blocks)
-    else:  # non-interleaved: unit = one block over the comp's own grid
-        ci, dc_id, ac_id = scan_comps[0]
-        _, ch, cv, _ = comps[ci]
-        cw = -(-(w * ch) // hmax)  # component sample dims (T.81 A.1.1)
-        chh = -(-(h * cv) // vmax)
-        bxc = -(-cw // 8)
-        byc = -(-chh // 8)
-        units = [
-            [(ci, by, bx, dc_id, ac_id)]
-            for by in range(byc)
-            for bx in range(bxc)
-        ]
-
-    pred = [0] * len(comps)
-    eobrun = 0
-    for uno, blocks in enumerate(units):
-        if restart and uno and uno % restart == 0:
-            reader.align()
-            mk = reader.at_marker()
-            if mk is not None and 0xD0 <= mk <= 0xD7:
-                reader.i += 2
-                pred = [0] * len(comps)
-                eobrun = 0
-        for ci, row, col, dc_id, ac_id in blocks:
-            bl = coefs[ci][row][col]
-            if ss == 0:
-                if ah == 0:  # DC first
-                    tab = huff[(0, dc_id)]
-                    t = _huff_decode(reader, tab)
-                    pred[ci] += _jpeg_extend(reader.bits(t), t)
-                    bl[0] = pred[ci] << a_l
-                else:  # DC refinement: one raw bit
-                    if reader.bit():
-                        bl[0] |= 1 << a_l
-                continue
-            tab = huff[(1, ac_id)]
-            if ah == 0:  # AC first (G.1.2.2 / jdphuff decode_mcu_AC_first)
-                if eobrun > 0:
-                    eobrun -= 1
-                    continue
-                k = ss
-                while k <= se:
-                    rs = _huff_decode(reader, tab)
-                    r, s = rs >> 4, rs & 15
-                    if s == 0:
-                        if r != 15:
-                            eobrun = (1 << r) - 1
-                            if r:
-                                eobrun += reader.bits(r)
-                            break
-                        k += 16
-                    else:
-                        k += r
-                        if k > se:
-                            raise ValueError("AC coefficient past band end")
-                        bl[k] = _jpeg_extend(reader.bits(s), s) << a_l
-                        k += 1
-            else:  # AC refinement (jdphuff decode_mcu_AC_refine)
-                p1, m1 = 1 << a_l, -1 << a_l
-                k = ss
-                if eobrun == 0:
-                    while k <= se:
-                        rs = _huff_decode(reader, tab)
-                        r, s = rs >> 4, rs & 15
-                        newval = 0
-                        if s == 0:
-                            if r != 15:
-                                eobrun = 1 << r
-                                if r:
-                                    eobrun += reader.bits(r)
-                                break
-                        else:
-                            newval = p1 if reader.bit() else m1
-                        while k <= se:
-                            if bl[k] != 0:
-                                if reader.bit() and not (bl[k] & p1):
-                                    bl[k] += p1 if bl[k] >= 0 else m1
-                            else:
-                                r -= 1
-                                if r < 0:
-                                    break
-                            k += 1
-                        if s:
-                            if k > se:
-                                raise ValueError("refinement past band end")
-                            bl[k] = newval
-                        k += 1
-                if eobrun > 0:
-                    while k <= se:
-                        if bl[k] != 0:
-                            if reader.bit() and not (bl[k] & p1):
-                                bl[k] += p1 if bl[k] >= 0 else m1
-                        k += 1
-                    eobrun -= 1
-    reader.align()
-    return reader.i
+def jpeg_pixel_stats(media: DataFrame) -> DataFrame:
+    """Arrow-batched JPEG pixel-stat extraction (sequential and
+    progressive frames) over the binary payload column →
+    PIXEL_STATS_SCHEMA rows; non-JPEG / undecodable rows are dropped.
+    Map-only, parallelism from input splits — the twin of
+    png_pixel_stats."""
+    return _decoded_rows(media, decode_jpeg_pixels, PIXEL_STATS_SCHEMA)
 
 
 def _wav_sample_value(i, ch):
@@ -1700,9 +1538,6 @@ def decode_wav_samples(b: bytes) -> dict | None:
         }
     except (struct.error, IndexError, ValueError):
         return None
-
-
-_SOF_MARKERS = set(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
 
 
 def parse_media_header(b: bytes) -> dict:
@@ -2156,31 +1991,6 @@ def decode_media(media: DataFrame) -> DataFrame:
 
 # -- video: real AVI container header, frame decode stubbed ----------
 
-def _make_mjpeg_frame(width: int, height: int, fno: int) -> bytes:
-    """One MJPEG frame: a complete baseline JPEG whose block-constant
-    raster is the image formula shifted by 2·(fno mod 12) — per-frame
-    variation the oracle can recompute, still ≤ 236 < 256.  The frame
-    bytes depend only on (width, height, fno mod 12), so the cached
-    builder collapses the corpus' ~10k frame encodes to ≤ ~1.2k
-    distinct bit-level encodes per worker."""
-    return _make_mjpeg_frame_cached(width, height, 2 * (fno % 12))
-
-
-@_functools.lru_cache(maxsize=4096)
-def _make_mjpeg_frame_cached(width: int, height: int, off: int) -> bytes:
-    nbx, nby = width // 8, height // 8
-    mcus = []
-    for by in range(nby):
-        for bx in range(nbx):
-            mcu = []
-            for c in range(3):
-                block = [0] * 64
-                block[0] = 8 * (_jpeg_block_value(bx, by, c) + off - 128)
-                mcu.append(block)
-            mcus.append(mcu)
-    return make_jpeg_from_coefficients(width, height, mcus)
-
-
 def _dib_pixel_value(x: int, y: int, ch: int, fno: int) -> int:
     """Closed-form uncompressed-frame sample: (x mod 16) + 2·(y mod 8)
     + 37·ch + 11·(fno mod 4) ≤ 136 — at multiple-of-16 widths and
@@ -2224,8 +2034,12 @@ def make_avi(
     ``mjpeg=True``: a REAL Motion-JPEG AVI — the hdrl gains a strl
     LIST (strh 'vids'/'MJPG' + strf BITMAPINFOHEADER) and the movi
     list carries one '00dc' chunk per frame, each a complete baseline
-    JPEG (``_make_mjpeg_frame``; dimensions must be multiples of 8) —
-    so frame PIXEL decode is genuinely exercised end-to-end.
+    JPEG (dimensions must be multiples of 8) whose block-constant
+    raster is the image formula shifted by 2·(fno mod 12) — per-frame
+    variation the oracle can recompute, still ≤ 236 < 256 — so frame
+    PIXEL decode is genuinely exercised end-to-end.  The frame bytes
+    depend only on (width, height, fno mod 12), so the cached builder
+    collapses the corpus' ~10k frame encodes to ≤ ~1.2k per worker.
 
     ``rgb=True``: a REAL uncompressed AVI (strh 'vids'/'DIB ', strf
     biCompression=0 / 24 bpp) — one '00db' chunk per frame carrying
@@ -2267,7 +2081,9 @@ def make_avi(
     if mjpeg or rgb:
         for fno in range(n_frames):
             if mjpeg:
-                frame = _make_mjpeg_frame(width, height, fno)
+                frame = _block_constant_jpeg(
+                    make_jpeg_from_coefficients, width, height, 2 * (fno % 12)
+                )
                 movi += b"00dc" + struct.pack("<I", len(frame)) + frame
             else:
                 frame = _make_dib_frame(width, height, fno)

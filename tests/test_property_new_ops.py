@@ -1454,6 +1454,48 @@ def test_progressive_jpeg_subsampled_matches_independent_reference(seed):
     }, (seed, sampling, bands, al, ri)
 
 
+def test_progressive_single_component_walks_its_own_grid():
+    """T.81 A.2.2: a scan of ONE component is non-interleaved, one block
+    per unit, row-major over the component's own grid, even when its
+    sampling factors exceed 1.  The DC scan of a single-component frame
+    with 2x2 sampling must therefore code the blocks in the same order
+    as its AC scans; in MCU order the DC terms land on the wrong blocks
+    and the decode no longer matches an independent IDCT."""
+    import random
+
+    import numpy as np
+
+    from curw_mike_data_handler_spark.operators.multimodal import (
+        _JPEG_ZIGZAG,
+        decode_jpeg_pixels,
+        make_progressive_jpeg_from_planes,
+    )
+
+    rng = random.Random(5)
+    plane = [
+        [
+            [rng.randint(-900, 900)]
+            + [rng.randint(-300, 300) if k < 6 else 0 for k in range(1, 64)]
+            for _ in range(4)
+        ]
+        for _ in range(2)
+    ]
+    got = decode_jpeg_pixels(
+        make_progressive_jpeg_from_planes(32, 16, [plane], sampling=((2, 2),))
+    )
+    u = np.arange(8)
+    M = np.cos((2 * u[None, :] + 1) * u[:, None] * np.pi / 16) / 2.0
+    M[0, :] /= np.sqrt(2.0)
+    zz = np.array(_JPEG_ZIGZAG)
+    total = 0
+    for row in plane:
+        for blk in row:
+            F8 = np.empty(64)
+            F8[zz] = blk
+            total += int(np.clip(np.round(M.T @ F8.reshape(8, 8) @ M) + 128, 0, 255).sum())
+    assert got is not None and got["pixel_sum"] == total
+
+
 def test_jpeg_partial_scan_returns_none_not_garbage():
     """A baseline stream whose single scan covers only a subset of the
     frame's components must decode to None — np.asarray would silently
