@@ -71,8 +71,10 @@ def last_row_patch_wide(
 ) -> DataFrame:
     """Terminal boundary-condition fix: on the max-time row, NULL (tide,
     tide:110-111) or NULL/negative (discharge, dis:105-106) → 0.
-    Implemented with a global max over an empty-frame window; Catalyst
-    computes it as one exchange-free scalar at this data shape."""
+    Implemented with a global max over an empty-frame window, which
+    Catalyst plans as one ``Exchange SinglePartition`` feeding a
+    whole-frame window: every row passes through one task, which is
+    cheap at the file-edge sizes this runs on (hundreds of rows)."""
     w = Window.partitionBy()
     max_t = F.max(time_col).over(w)
     out = []

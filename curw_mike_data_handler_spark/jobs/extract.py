@@ -1,7 +1,8 @@
 """Forecast extraction job (reference: outputs/extract_water_level.py
 ``__main__``, 150-260): model whitelist → directory/file existence
-checks → fgt default from file mtime → melt + station semi join +
-sha2 series ids → fgt-versioned idempotent upsert into the warehouse.
+checks → fgt default from file mtime → sha2 series ids per station and
+the skip report from one read of the station dimension → melt +
+broadcast join → fgt-versioned idempotent upsert into the warehouse.
 
 Run: ``python -m curw_mike_data_handler_spark.jobs.extract
 --mike-model mike11_2016 --output-dir results/ --warehouse wh/
@@ -18,10 +19,12 @@ from curw_mike_data_handler_spark.jobs._cli import JobArgumentError
 from curw_mike_data_handler_spark.plans.extract import (
     ExtractConfig,
     attach_series_ids,
+    match_stations,
     melt_result_matrix,
+    station_series,
     upsert_forecast,
 )
-from curw_mike_data_handler_spark.schemas import FCST_DATA, FCST_RUN
+from curw_mike_data_handler_spark.schemas import FCST_DATA, FCST_RUN, STATION_DIM
 from curw_mike_data_handler_spark.session import get_spark
 from curw_mike_data_handler_spark.sources.csv_io import read_wide_matrix
 from curw_mike_data_handler_spark.sources.upsert import ParquetMergeTable
@@ -58,11 +61,15 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("job-extract")
     wide = read_wide_matrix(spark, result_path)
-    long_df = melt_result_matrix(wide)
-    station_dim = spark.read.parquet(os.path.join(a.warehouse, "station"))
-    with_ids, skipped = attach_series_ids(long_df, station_dim, cfg)
-    for r in skipped.collect():  # wl_x:104 skip report
-        print(f"Station {r['station']} not in the database")
+    series, skipped = match_stations(
+        station_series(
+            spark.read.schema(STATION_DIM).parquet(os.path.join(a.warehouse, "station")), cfg
+        ),
+        [c for c in wide.columns if c != "Time Stamp"],
+    )
+    for name in skipped:  # wl_x:104 skip report
+        print(f"Station {name} not in the database")
+    with_ids = attach_series_ids(melt_result_matrix(wide), series)
     data_t = ParquetMergeTable(
         spark, os.path.join(a.warehouse, "fcst_data"),
         ["tms_id", "time", "fgt"], FCST_DATA,

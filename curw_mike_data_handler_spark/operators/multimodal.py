@@ -1134,6 +1134,18 @@ def decode_jpeg_pixels(b: bytes) -> dict | None:
                     comps.append((cid, hv >> 4, hv & 15, tq))
                 hmax = max(c[1] for c in comps)
                 vmax = max(c[2] for c in comps)
+                # every block of a component's own grid is coded in
+                # some scan, in at least one bit (its DC code), so a
+                # frame with more blocks than the bits after its SOF
+                # cannot be complete: reject it before the grids are
+                # sized from the SOF's claim, which would let a few
+                # hundred bytes declaring 65535x65535 exhaust memory
+                blocks = 0
+                for c in comps:
+                    bx, by = _comp_grid(w, h, c[1], c[2], hmax, vmax)
+                    blocks += bx * by
+                if blocks > 8 * (len(b) - i - 2 - seglen):
+                    return None
                 mcux = -(-w // (8 * hmax))
                 mcuy = -(-h // (8 * vmax))
                 # plain Python list grids during entropy decode: the

@@ -2,14 +2,17 @@
 and its twin extract_discharge.py — factored ONCE here, SURVEY §7 note
 on duplicated helper code).
 
-Wide MIKE result matrix → melt long → 3-dp round → station-dimension
-semi join (+ anti-join skip report, wl_x:77/104) → deterministic
-sha2 series IDs (wl_x:88-92) → fgt-versioned upsert into the fact
-table + run-header maintenance (wl_x:93-97).
+Station dimension → deterministic sha2 series ids per station
+(wl_x:88-92) → one collect: the matrix's stations as a local frame
+plus the skip report in matrix column order (wl_x:77/104).  Wide MIKE
+result matrix → melt long → 3-dp round → broadcast join to that frame
+→ fgt-versioned upsert into the fact table + run-header maintenance
+(wl_x:93-97).
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -17,6 +20,7 @@ from pyspark.sql import functions as F
 
 from curw_mike_data_handler_spark.functions.ids import timeseries_id
 from curw_mike_data_handler_spark.operators.spine import melt_long
+from curw_mike_data_handler_spark.sources.local import local_frame
 from curw_mike_data_handler_spark.sources.upsert import ParquetMergeTable
 
 
@@ -48,22 +52,16 @@ def melt_result_matrix(wide: DataFrame, time_col: str = "Time Stamp") -> DataFra
     )
 
 
-def attach_series_ids(
-    long_df: DataFrame, station_dim: DataFrame, cfg: ExtractConfig
-) -> tuple[DataFrame, DataFrame]:
-    """Semi join against the station dimension; returns (matched rows
-    with tms_id, skipped station names) — wl_x:77-82 + the wl_x:104
-    skip report as an anti join."""
-    dim = station_dim.select(
-        F.col("name").alias("station"), "station_id", "latitude", "longitude"
-    )
-    matched = long_df.join(F.broadcast(dim), "station", "inner")
-    skipped = (
-        long_df.select("station").distinct()
-        .join(F.broadcast(dim), "station", "left_anti")
-    )
-    with_ids = matched.withColumn(
-        "tms_id",
+def station_series(station_dim: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    """The station dimension keyed by result-matrix column name, with
+    each station's deterministic series id (wl_x:88-92).  The id is
+    hashed once per station, at the dimension's grain, as the
+    reference does inside its loop over the matrix's station columns."""
+    return station_dim.select(
+        F.col("name").alias("station"),
+        "station_id",
+        "latitude",
+        "longitude",
         timeseries_id(
             F.lit(cfg.sim_tag),
             F.lit(cfg.model),
@@ -77,9 +75,32 @@ def attach_series_ids(
             F.format_number(F.col("latitude"), 6),   # "%.6f" — init:41-42
             F.format_number(F.col("longitude"), 6),
             F.col("station_id"),
-        ),
+        ).alias("tms_id"),
     )
-    return with_ids, skipped
+
+
+def match_stations(
+    series: DataFrame, stations: Sequence[str]
+) -> tuple[DataFrame, list[str]]:
+    """One collect of the series dimension → (its rows for
+    ``stations`` as a local frame, the names in ``stations`` it lacks).
+
+    The lacking names keep the order of ``stations`` — the matrix's
+    column order, which is the reference's loop order for its skip
+    report (wl_x:77, 104)."""
+    by_name: dict[str, list] = {}
+    for r in series.collect():
+        by_name.setdefault(r["station"], []).append(r)
+    wanted = dict.fromkeys(stations)
+    rows = [r for s in wanted for r in by_name.get(s, ())]
+    skipped = [s for s in wanted if s not in by_name]
+    return local_frame(series.sparkSession, rows, series.schema), skipped
+
+
+def attach_series_ids(long_df: DataFrame, series: DataFrame) -> DataFrame:
+    """Broadcast join of the melted matrix to the series dimension:
+    rows of stations the dimension lacks drop out (wl_x:77-82)."""
+    return long_df.join(F.broadcast(series), "station", "inner")
 
 
 def upsert_forecast(

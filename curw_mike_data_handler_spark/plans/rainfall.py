@@ -65,9 +65,8 @@ def prepare_rainfall_input(
     out_step_minutes: int = 15,
 ) -> DataFrame:
     """→ long (time, name, value): 15-min catchment-weighted rainfall."""
-    wanted = coefficients.select(
-        F.col("curw_obs_id").alias("obs_id")
-    ).distinct()  # rf_linux:143
+    # rf_linux:143; no distinct: the semi join below ignores duplicates
+    wanted = coefficients.select(F.col("curw_obs_id").alias("obs_id"))
     fresh = fresh_series_ids(run, model, obs_end_min)
     # semi-join staleness ∩ wanted stations (rf_linux:153-157)
     series_dim = fresh.join(F.broadcast(wanted), "obs_id", "left_semi")

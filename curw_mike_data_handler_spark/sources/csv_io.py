@@ -4,7 +4,9 @@ MIKE input/output files are CONTRACTS: a single ordered file, fixed
 column order, header on or off per pipeline, specific index label
 ('time' for inputs at rf_linux:276, 'Time Stamp' for results at
 wl_x:247), specific rounding.  Spark writes sharded dirs — this helper
-does ``orderBy(time).coalesce(1)`` and promotes the part file.
+does ``coalesce(1).sortWithinPartitions(time)`` and promotes the part
+file: the one output partition is sorted in place, so the write needs
+no range-partition exchange (nor the sampling job that plans it).
 
 Scale note: the single-file step is inherently last-stage and small
 (hundreds of rows — it feeds an external single-node model); everything
@@ -40,16 +42,17 @@ def write_single_csv(
 ) -> str:
     """Write one ordered CSV file at ``path`` with exact column order."""
     cols = columns or [c for c in df.columns if c != time_col]
-    out = df.select(
-        F.date_format(time_col, time_format).alias(time_col), *cols
-    ).orderBy(time_col)
+    out = (
+        df.select(F.date_format(time_col, time_format).alias(time_col), *cols)
+        .coalesce(1)
+        .sortWithinPartitions(time_col)
+    )
     out_dir = os.path.dirname(path) or "."
     os.makedirs(out_dir, exist_ok=True)
     tmp = tempfile.mkdtemp(prefix=".csv_sink_", dir=out_dir)
     try:
         (
-            out.coalesce(1)
-            .write.mode("overwrite")
+            out.write.mode("overwrite")
             .option("header", str(header).lower())
             .option("nullValue", "")
             .csv(tmp)

@@ -13,11 +13,30 @@ from pyspark.sql import functions as F
 from curw_mike_data_handler_spark.plans.extract import (
     ExtractConfig,
     attach_series_ids,
+    match_stations,
     melt_result_matrix,
+    station_series,
     upsert_forecast,
 )
 from curw_mike_data_handler_spark.schemas import FCST_DATA, FCST_RUN
 from curw_mike_data_handler_spark.sources.upsert import ParquetMergeTable, latest_fgt_view
+
+# Series ids of the ``station_dim`` fixture under the default
+# ExtractConfig, as the warehouse has always keyed them: sha256 of
+# "hourly_run|MIKE11|2016|WaterLevel|m|Instantaneous|1|1|1|<lat %.6f>|
+# <lon %.6f>|<station_id>".  They are warehouse keys: a change here
+# orphans every stored forecast series.
+GOLDEN_TMS_IDS = {
+    "stnA": "a8e7c1dc3ae19925d63c6d329463625e2393bafff4d9e6a3f174b354ff4993d6",
+    "stnB": "e445a9751fefe1c77a4dd9504417338f44843e096359101fb9b37c74814a2444",
+}
+
+
+def _series_ids(wide, station_dim, cfg):
+    """(melted rows with tms_id, skipped station names) as the extract
+    job builds them: ids per station, one collect, broadcast join."""
+    series, skipped = match_stations(station_series(station_dim, cfg), wide.columns[1:])
+    return attach_series_ids(melt_result_matrix(wide), series), skipped
 
 
 @pytest.fixture()
@@ -49,21 +68,39 @@ def test_melt_and_skip_report(spark, wide, station_dim):
     assert vals["ghost"] == -0.75
     assert vals["stnA"] == 1.235
 
-    with_ids, skipped = attach_series_ids(long_df, station_dim, ExtractConfig())
-    assert [r["station"] for r in skipped.collect()] == ["ghost"]
+    with_ids, skipped = _series_ids(wide, station_dim, ExtractConfig())
+    assert skipped == ["ghost"]
     assert with_ids.filter(F.col("station") == "ghost").count() == 0
     # deterministic: same metadata → same 64-hex id on every run
     ids1 = {r["station"]: r["tms_id"] for r in with_ids.select("station", "tms_id").distinct().collect()}
-    with_ids2, _ = attach_series_ids(long_df, station_dim, ExtractConfig())
+    with_ids2, _ = _series_ids(wide, station_dim, ExtractConfig())
     ids2 = {r["station"]: r["tms_id"] for r in with_ids2.select("station", "tms_id").distinct().collect()}
     assert ids1 == ids2
     assert all(len(v) == 64 for v in ids1.values())
     assert ids1["stnA"] != ids1["stnB"]
+    assert ids1 == GOLDEN_TMS_IDS
+
+
+def test_skip_report_lists_unknown_columns_in_file_order(spark, station_dim):
+    """Two matrix columns the dimension lacks: the report names each
+    once, in the matrix's column order (the reference's loop order,
+    wl_x:77/104), and their rows drop out."""
+    columns = ["zulu", "stnB", "alpha", "stnA"]
+    wide = spark.createDataFrame(
+        [(datetime(2020, 5, 22, 0, 0), 1.0, 2.0, 3.0, 4.0)],
+        "`Time Stamp` timestamp, " + ", ".join(f"{c} double" for c in columns),
+    )
+    series, skipped = match_stations(station_series(station_dim, ExtractConfig()), columns)
+    assert skipped == ["zulu", "alpha"]
+    got = {
+        r["station"]: (r["tms_id"], r["value"])
+        for r in attach_series_ids(melt_result_matrix(wide), series).collect()
+    }
+    assert got == {"stnB": (GOLDEN_TMS_IDS["stnB"], 2.0), "stnA": (GOLDEN_TMS_IDS["stnA"], 4.0)}
 
 
 def test_upsert_idempotent_and_fgt_versioning(spark, wide, station_dim, tmp_path):
-    long_df = melt_result_matrix(wide)
-    with_ids, _ = attach_series_ids(long_df, station_dim, ExtractConfig())
+    with_ids, _ = _series_ids(wide, station_dim, ExtractConfig())
 
     data_t = ParquetMergeTable(spark, str(tmp_path / "fcst_data"), ["tms_id", "time", "fgt"], FCST_DATA)
     run_t = ParquetMergeTable(spark, str(tmp_path / "fcst_run"), ["tms_id"], FCST_RUN)

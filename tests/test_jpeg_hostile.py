@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import hashlib
 import random
+import struct
+import tracemalloc
 
 from curw_mike_data_handler_spark.operators import multimodal as mm
 
@@ -128,3 +130,25 @@ def test_hostile_jpeg_streams_decode_to_pinned_outputs():
     assert 0 < n_decoded < len(got)
     digest = hashlib.sha256(repr(good + got).encode()).hexdigest()
     assert digest == _DIGEST, (digest, n_decoded, len(got))
+
+
+def test_sof_dimensions_beyond_the_entropy_data_cost_bounded_memory():
+    """A valid 16x16 stream whose SOF is rewritten to claim a huge frame
+    is rejected before any grid is sized from the claim: the decoder's
+    peak allocation stays far below what the claimed frame needs."""
+    for stream, sof_marker in (
+        (mm.make_progressive_jpeg(16, 16), b"\xff\xc2"),  # 531 bytes
+        (mm.make_jpeg(16, 16, pixels=True), b"\xff\xc0"),
+    ):
+        assert mm.decode_jpeg_pixels(stream) is not None
+        sof = stream.index(sof_marker)
+        for side in (2048, 65535):
+            claim = stream[: sof + 5] + struct.pack(">HH", side, side) + stream[sof + 9 :]
+            tracemalloc.start()
+            try:
+                got = mm.decode_jpeg_pixels(claim)
+                peak = tracemalloc.get_traced_memory()[1]
+            finally:
+                tracemalloc.stop()
+            assert got is None
+            assert peak < 16 * 2**20, (side, peak)
